@@ -126,20 +126,7 @@ def select_strategy(engine, plan: EvalPlan) -> Optional[str]:
         return None
     if len(plan.leaves) < 2:
         return None  # one cursor never prunes (both gates need >=2 clauses)
-    cache = engine._doc_freq_cache
-    if any((leaf.field, leaf.term) not in cache for leaf in plan.leaves):
-        # Zero-job admission gate: summed cost is bounded by
-        # n_leaves x doc_count (df <= N per leaf), so below every
-        # strategy's floor the dictionary probe cannot change the
-        # decision — skip it and keep the cold multi-term query free of
-        # the driver-side probe job (the in-plan dictionary fold then
-        # keeps weight resolution inside the main action too).  On a
-        # corpus big enough that the bound crosses the floor, the probe
-        # runs and pays for itself by unlocking the pruned plan.
-        floor = max(1, engine.auto_prune_min_cost)
-        if len(plan.leaves) * engine.doc_count < floor:
-            return None
-        engine._resolve_doc_freqs(plan.leaves)
+    engine._resolve_doc_freqs(plan.leaves)
     costs = [
         engine._doc_freq_cache.get((l.field, l.term), 0) for l in plan.leaves
     ]

@@ -74,6 +74,7 @@ from ..sources.storage import (
     pin_segments,
 )
 from ..sources.storage import SEGMENT_PIN_ISIN_MAX as _STORAGE_PIN_MAX
+from ..sources import termdict
 
 
 #: Glob expansions up to this many terms match postings via a literal
@@ -344,8 +345,10 @@ class SearchEngine:
         self.tf_cache = {
             f: (compute_tf_cache(a) if a > 0 else None) for f, a in self.avgdl.items()
         }
-        #: (field, term) -> doc_freq resolved this session (dictionary probes)
+        #: (field, term) -> snapshot doc_freq resolved this session
         self._doc_freq_cache: dict[tuple[str, str], int] = {}
+        #: bucket -> this snapshot's dictionary files (_dictionary_files)
+        self._dict_files: Optional[dict[int, list[str]]] = None
         #: (field, pattern) -> [(term, df), ...] expansion; valid for the
         #: engine's lifetime because the dictionary is snapshot-pinned
         self._glob_cache: dict[tuple[str, str], list[tuple[str, int]]] = {}
@@ -674,8 +677,8 @@ class SearchEngine:
         """Zero-job upper bound on the combine pivot's input rows.
 
         Each leaf contributes at most its doc frequency; an unresolved df
-        (the in-plan term path never probes) substitutes ``doc_count``,
-        and non-term leaves (range/set/all/glob) match at most every doc.
+        substitutes ``doc_count``, and non-term leaves (range/set/all/glob)
+        match at most every doc.
         The bound is used to decide execution-session sizing only — an
         overestimate costs nothing but AQE's per-stage job.
         """
@@ -1034,11 +1037,12 @@ class SearchEngine:
     def _charge_fuel(self, plan: EvalPlan) -> int:
         """Admit or reject one compiled plan against the fuel budget.
 
-        Two-level check (see :mod:`..plans.fuel`): a pessimistic zero-job
-        bound admits every ordinary query without touching the dictionary
-        — the hot path stays ONE Spark action — and only a query whose
-        worst case overflows the budget pays the probe/expansion jobs for
-        an exact decision (jobs its execution would pay anyway).  Raises
+        Two-level check (see :mod:`..plans.fuel`): a pessimistic bound
+        admits every ordinary query without touching the dictionary, and
+        only a query whose worst case overflows the budget resolves its
+        term dfs (driver-side dictionary reads) and glob expansions (one
+        Spark job each) for an exact decision — work its execution would
+        do anyway.  Raises
         :class:`~frankensearch_spark.plans.fuel.QueryFuelExhausted` when
         the exact estimate still exceeds the budget.
         """
@@ -1063,8 +1067,8 @@ class SearchEngine:
             self.last_fuel_units = units
             return units
         if not exact:
-            # resolve the pessimistic unknowns: one dictionary probe for
-            # all unresolved term/phrase dfs + the glob expansions
+            # resolve the pessimistic unknowns: the unresolved term/phrase
+            # dfs from the dictionary, plus the glob expansions
             pairs = set()
             for leaf in plan.leaves:
                 if leaf.kind == "term" and self._is_text(leaf.field):
@@ -1177,50 +1181,77 @@ class SearchEngine:
         return field in self.meta.text_fields
 
     def _doc_freqs(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
-        """Dictionary probe: broadcast-join the query terms against terms/.
+        """Snapshot doc frequencies from the driver-side term dictionary.
 
-        Probes only cache MISSES — the cache is snapshot-pinned to this
-        engine, so a pair resolved once (by any query) never costs a
-        second Spark job; a fully-warm phrase/snippet query issues no
-        probe at all.
+        Each missing pair's bucket maps to one dictionary file per live
+        segment (:mod:`..sources.termdict`); their per-segment dfs sum to
+        the snapshot df.  No Spark job runs: the files are read with
+        pyarrow once per process and the sums are cached for this engine,
+        so a pair resolved once (by any query) is a dict lookup after.
         """
         if not pairs:
             return {}
         missing = [p for p in pairs if p not in self._doc_freq_cache]
         if missing:
-            buckets = sorted(
-                {_bucket(t, self.meta.num_buckets) for _, t in missing}
-            )
-            terms = self._read_live("terms").where(F.col("bucket").isin(buckets))
-            cond = F.lit(False)
-            for field, term in missing:
-                cond = cond | ((F.col("field") == field) & (F.col("term") == term))
-            # snapshot df = sum of the per-segment dictionary rows
-            rows = (
-                terms.where(cond)
-                .groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            self._doc_freq_cache.update(
-                {(r["field"], r["term"]): int(r["df"]) for r in rows}
-            )
+            files = self._dictionary_files()
+            live = set(self.live_segments)
+            by_bucket: dict[int, list[tuple[str, str]]] = {}
             for pair in missing:
-                self._doc_freq_cache.setdefault(pair, 0)
+                by_bucket.setdefault(
+                    _bucket(pair[1], self.meta.num_buckets), []
+                ).append(pair)
+            for bucket, group in by_bucket.items():
+                totals = dict.fromkeys(group, 0)
+                for uri in files.get(bucket, []):
+                    for (seg, field), dfs in termdict.file_doc_freqs(uri).items():
+                        if seg not in live:
+                            continue
+                        for pair in group:
+                            if pair[0] == field:
+                                totals[pair] += dfs.get(pair[1], 0)
+                self._doc_freq_cache.update(totals)
         return {p: self._doc_freq_cache[p] for p in pairs}
 
+    def _dictionary_files(self) -> dict[int, list[str]]:
+        """This snapshot's dictionary files by bucket, listed once.
+
+        The file list is ``inputFiles()`` of the pinned postings relation
+        the scoring scan reads, so the dictionary and the scan see the
+        same files; non-live segments' files are dropped by their
+        ``segment_id=K`` directory.  Legacy indexes keep the dictionary in
+        a physical ``terms/`` directory, listed on the driver; its files
+        hold several segments each, so their rows are filtered by
+        segment in :meth:`_doc_freqs` instead.
+        """
+        if self._dict_files is None:
+            postings = self._base_table("postings")
+            if "term_df" in postings.columns:
+                uris = postings.inputFiles()
+            else:
+                uris = termdict.list_files(self.storage.path("terms"))
+            live = set(self.live_segments)
+            by_bucket: dict[int, list[str]] = {}
+            for uri in uris:
+                part = termdict.partition_values(uri)
+                seg = part.get("segment_id")
+                if seg is not None and seg not in live:
+                    continue
+                # both layouts are bucket-partitioned (storage.py)
+                by_bucket.setdefault(part["bucket"], []).append(uri)
+            self._dict_files = by_bucket
+        return self._dict_files
+
     def _resolve_doc_freqs(self, leaves: list[LeafSpec]) -> None:
-        """Ensure the df cache covers every text-term leaf (one probe)."""
-        pairs = sorted(
-            {
-                (l.field, l.term)
-                for l in leaves
-                if l.kind == "term" and self._is_text(l.field)
-            }
-            - set(self._doc_freq_cache)
+        """Ensure the df cache covers every text-term leaf."""
+        self._doc_freqs(
+            sorted(
+                {
+                    (l.field, l.term)
+                    for l in leaves
+                    if l.kind == "term" and self._is_text(l.field)
+                }
+            )
         )
-        if pairs:
-            self._doc_freqs(pairs)
 
     def _term_weight_rows(self, leaves: list[LeafSpec]) -> list[tuple]:
         """(leaf_id, field, term, weight, bucket) for leaves with df > 0."""
@@ -1244,10 +1275,10 @@ class SearchEngine:
 
     def _compact_decode_ok(self, pairs) -> bool:
         """True when every (field, term) df is cached and their sum stays
-        under :data:`COMPACT_DECODE_MAX_POSTINGS` — the zero-job gate for
-        the one-expression compact gap decode.  Unknown dfs fail safe to
-        the staged decode (an unprobed pair usually means a scan-heavy
-        path resolved its weights elsewhere)."""
+        under :data:`COMPACT_DECODE_MAX_POSTINGS` — the gate for the
+        one-expression compact gap decode.  Unknown dfs fail safe to the
+        staged decode (an unresolved pair usually means a scan-heavy path
+        resolved its weights elsewhere)."""
         total = 0
         for pair in pairs:
             df_ = self._doc_freq_cache.get(pair)
@@ -1474,24 +1505,14 @@ class SearchEngine:
     def _term_leaf_frame(self, leaves: list[LeafSpec]) -> Optional[DataFrame]:
         """Score term leaves from driver-resolved BM25 weights.
 
-        Doc frequencies resolve through the snapshot-pinned probe cache
-        (:meth:`_doc_freqs` — one tiny bucket-pruned dictionary job per
-        NOVEL (field, term), zero jobs afterwards), mirroring the
-        reference's TermScorer, which resolves weights from the in-memory
-        term dictionary at scorer construction (``argus.rs:1521``).
-
-        This replaces the round-3 in-plan dictionary fold, which kept a
-        cold query at one py4j action by re-aggregating the embedded
-        dictionary as a broadcast SUBTREE of the scoring plan — but that
-        subtree is a separately scheduled Spark job on every execution
-        (measured 0.3–0.5 s/query at sf0.1, the single largest fixed cost
-        in the warm-query profile), and nothing ever wrote the df back,
-        so even repeated identical queries re-paid it.  The probe costs
-        the same dictionary scan ONCE per term and caches it; dead
-        leaves (df = 0) drop here, exactly as the fold's inner join
-        dropped them.  Weights are float32-exact either way (pinned by
-        test_contract.py), so scores are hash-identical across the two
-        designs."""
+        Doc frequencies come from the driver-side term dictionary
+        (:meth:`_doc_freqs`: pyarrow reads of the live segments'
+        dictionary files, no Spark job), mirroring the reference's
+        TermScorer, which resolves weights from the in-memory term
+        dictionary at scorer construction (``argus.rs:1521``).  The
+        query's only Spark action is therefore the scoring scan itself.
+        Dead leaves (df = 0) drop here.  Weights are float32-exact
+        (pinned by test_contract.py)."""
         rows = self._term_weight_rows(leaves)
         if not rows:
             return None

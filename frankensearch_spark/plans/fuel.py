@@ -20,18 +20,18 @@ estimate is therefore a deterministic upper bound on the reference's
 runtime charge for the same snapshot, and admission is decided driver-side
 in O(leaves).
 
-Two-level check so the hot path stays ONE Spark action (the in-plan
-dictionary fold must not regain a driver-side probe):
+Two-level check, so an ordinary query is admitted without resolving
+anything:
 
-1. **Pessimistic pass (zero jobs)**: unknown doc frequencies are bounded
-   by ``doc_count``.  If even that total fits the budget — always true
-   until the corpus nears ``budget × 128`` postings per term — the query
-   is admitted without resolving anything.
-2. **Exact pass (one probe job)**: only when the pessimistic bound
-   overflows (a 10^11+-doc corpus, or an already-expanded adversarial
-   glob) are the real doc frequencies resolved through the engine's
-   dictionary probe, and the query is rejected only if the exact estimate
-   still exceeds the budget.
+1. **Pessimistic pass (nothing read)**: unknown doc frequencies are
+   bounded by ``doc_count``.  If even that total fits the budget — always
+   true until the corpus nears ``budget × 128`` postings per term — the
+   query is admitted as is.
+2. **Exact pass**: only when the pessimistic bound overflows (a
+   10^11+-doc corpus, or an already-expanded adversarial glob) are the
+   real doc frequencies resolved — term dfs from the engine's driver-side
+   dictionary, glob expansions with one Spark job each — and the query is
+   rejected only if the exact estimate still exceeds the budget.
 """
 
 from __future__ import annotations

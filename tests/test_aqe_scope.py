@@ -9,6 +9,7 @@ could strip AQE from a concurrent query planned inside the window.
 from __future__ import annotations
 
 import threading
+import zlib
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -154,6 +155,60 @@ def test_warm_term_query_is_two_jobs_and_probe_free(spark, tmp_path_factory):
         np.asarray(cold_hits["score"], dtype=np.float32),
         np.asarray(warm_hits["score"], dtype=np.float32),
     )
+
+
+def test_first_query_of_a_new_term_is_one_job(spark, tmp_path_factory, monkeypatch):
+    """Doc frequencies come from the driver-side term dictionary, so the
+    first query of a never-seen term runs only the scoring action: one
+    Spark job for a single term, an AND query and a phrase.  After an
+    upsert and reopen(), the dictionary reads only the new segment's
+    postings files; the old segments' files come from the process cache.
+    A first unrelated query pays the engine's one-time table opens (the
+    schema inference a build's new files trigger)."""
+    from frankensearch_spark.sources import termdict
+
+    d = str(tmp_path_factory.mktemp("newterm_ix"))
+    corpus = synthetic_transcripts(spark, 400, vocab_size=100)
+    idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
+    sc = spark.sparkContext
+    eng = idx.engine
+    idx.search("w1", limit=10)
+    cases = [("w3", ["w3"]), ("w12 AND w47", ["w12", "w47"]), ('"w7 w7"', ["w7"])]
+    for i, (query, terms) in enumerate(cases):
+        assert not any(("content", t) in eng._doc_freq_cache for t in terms)
+        group = f"newterm-{i}"
+        sc.setJobGroup(group, query)
+        try:
+            idx.search(query, limit=10)
+        finally:
+            sc.setJobGroup(group + "-done", "")
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs == 1, f"first {query!r} ran {n_jobs} jobs (want 1)"
+        assert all(eng._doc_freq_cache[("content", t)] > 0 for t in terms)
+
+    old = set(eng.live_segments)
+    loaded = []
+    read = termdict._read_file
+
+    def counting(path, segment):
+        loaded.append(segment)
+        return read(path, segment)
+
+    monkeypatch.setattr(termdict, "_read_file", counting)
+    one = spark.createDataFrame(
+        [("zz:0", "w3 w12 zzfresh")], "doc_id string, content string"
+    )
+    idx.maintenance.upsert(one, sort_cols=("doc_id",))
+    idx.reopen()
+    new = set(idx.engine.live_segments) - old
+    assert len(new) == 1
+    # both terms' buckets were read for the old segments above
+    idx.search("w3 w12", limit=5)
+    assert idx.engine._doc_freq_cache[("content", "w3")] == eng._doc_freq_cache[
+        ("content", "w3")
+    ] + 1
+    buckets = {zlib.crc32(t.encode()) % 4 for t in ("w3", "w12")}
+    assert sorted(loaded) == sorted(new) * len(buckets)
 
 
 def test_qterm_inline_path_equals_broadcast_join(spark, tmp_path_factory, monkeypatch):

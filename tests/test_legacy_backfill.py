@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from frankensearch_spark.index import LexicalIndex
-from frankensearch_spark.sources.storage import IndexStorage
+from frankensearch_spark.sources.storage import IndexStorage, pin_segments
 from frankensearch_spark.sources.transcripts import synthetic_transcripts
 from frankensearch_spark.streaming.ingest import transcript_batch_to_docs
 
@@ -70,6 +70,22 @@ def test_legacy_fallback_reads_physical_terms(spark, legacy):
     assert IndexStorage.derive_terms(spark.read.parquet(idx.storage.path("postings"))) is None
     for q in QUERIES:
         assert _hits(idx, q) == expected[q], q
+
+
+def test_legacy_dictionary_is_read_on_the_driver(spark, legacy):
+    """The driver-side dictionary reads the physical terms/ files and
+    matches the Spark group-sum over the live segments' rows."""
+    d, _, _ = legacy
+    eng = LexicalIndex(spark, d).engine
+    terms = pin_segments(spark.read.parquet(eng.storage.path("terms")), eng.live_segments)
+    want = {
+        (r["field"], r["term"]): int(r["df"])
+        for r in terms.groupBy("field", "term").agg(F.sum("df").alias("df")).collect()
+    }
+    assert want
+    assert eng._doc_freqs(sorted(want)) == want
+    files = [f for fs in eng._dictionary_files().values() for f in fs]
+    assert files and all(f.startswith(eng.storage.path("terms")) for f in files)
 
 
 def test_append_to_legacy_index_refused(spark, legacy):
