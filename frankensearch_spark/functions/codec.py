@@ -50,11 +50,10 @@ never cross segments and docids are contiguous per segment), and segment
 sizing keeps spans at the 2^18 build target / 2^16 bulk-lease scale —
 orders of magnitude below int32 range even with heavy skew.
 
-Legacy indexes (entries carrying absolute ``docid``) remain readable —
-every decode site branches on :func:`is_delta_layout` — but appends and
-compaction refuse mixed directories (see
-``IndexStorage.assert_appendable``); ``backfill_delta_entries()`` is the
-one-time rewrite.
+The gap layout is the only one readers decode.  Indexes whose entries
+carry absolute ``docid`` predate ``FORMAT_VERSION`` 1 and are refused
+once, when they are opened (``IndexStorage.check_format``), so no decode
+site branches on the layout.
 """
 
 from __future__ import annotations
@@ -63,12 +62,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .contract import POSTINGS_PER_BLOCK
-
-
-def is_delta_layout(postings: DataFrame) -> bool:
-    """True when ``entries`` stores per-entry docid gaps (``d``)."""
-    element = postings.schema["entries"].dataType.elementType
-    return "d" in element.fieldNames()
 
 
 def encode_entries_expr(packed: str = "packed") -> Column:
@@ -88,22 +81,14 @@ def encode_entries_expr(packed: str = "packed") -> Column:
     )
 
 
-def reencode_absolute_entries_expr() -> Column:
-    """In-place migration of already-blocked ABSOLUTE entries to the gap
-    layout (entries are docid-sorted within their block) — the
-    ``backfill_delta_entries`` rewrite, no re-explode needed.  Same gap
-    formula as the build path by construction (one template)."""
-    return encode_entries_expr("entries")
-
-
 def with_decoded_docids(
-    df: DataFrame, delta: bool, col: str = "dec", compact: bool = False
+    df: DataFrame, col: str = "dec", compact: bool = False
 ) -> DataFrame:
     """Append ``col``: the block row's absolute docids as ``array<long>``.
 
-    Gap layout: inclusive Hillis-Steele scan over ``entries.d`` (7 staged
+    An inclusive Hillis-Steele scan over ``entries.d`` (7 staged
     ``zip_with`` passes for the 128-entry block cap), then ``first_doc``
-    added once per entry.  Legacy layout: a plain projection.  Callers
+    added once per entry.  Callers
     ``arrays_zip(col, "entries", ...)`` and explode — the scan runs once
     per BLOCK row, before the explode multiplies rows.
 
@@ -117,8 +102,6 @@ def with_decoded_docids(
     of saved per-query construction dominates a few hundred blocks'
     decode).  Scan-heavy paths (wide globs, maintenance, unknown df)
     keep the staged form.  Output is bit-identical (pinned by test)."""
-    if not delta:
-        return df.withColumn(col, _decode_expr("legacy", col))
     if compact:
         return df.withColumn(col, _decode_expr("compact", col))
     df = df.withColumn(col, _decode_expr("init", col))
@@ -141,9 +124,7 @@ def _decode_expr(stage, col: str) -> Column:
     cached = _DECODE_EXPRS.get(key)
     if cached is not None:
         return cached
-    if stage == "legacy":
-        e = F.expr("transform(entries, e -> e.docid)")
-    elif stage == "compact":
+    if stage == "compact":
         # one-expression inclusive scan; acc.s carries the running
         # absolute docid (seeded with first_doc; entry 0's gap is 0)
         e = F.expr(

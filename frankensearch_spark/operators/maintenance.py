@@ -41,12 +41,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.codec import (
-    encode_entries_expr,
-    is_delta_layout,
-    reencode_absolute_entries_expr,
-    with_decoded_docids,
-)
+from ..functions.codec import encode_entries_expr, with_decoded_docids
 from ..functions.contract import POSTINGS_PER_BLOCK
 from ..sources.storage import (
     TOMBSTONE_BROADCAST_MAX,
@@ -110,6 +105,7 @@ class IndexMaintenance:
         self.spark = spark
         self.storage = IndexStorage(spark, index_dir)
         self.meta: IndexMeta = self.storage.read_meta()
+        self.storage.check_format(self.meta)
         #: Force-broadcast the dead-docid anti-joins in compaction only up
         #: to this many tombstones; larger sets use plain shuffled joins
         #: (same gate as SearchEngine — see storage.TOMBSTONE_BROADCAST_MAX).
@@ -221,25 +217,25 @@ class IndexMaintenance:
             # committed copy AND the new one until some later seal().
             # Duplicate docids across generations are fine — readers
             # take distinct.
-            prior = self.storage.read("tombstones")
-            if "generation" in prior.columns:
-                prior = prior.where(F.col("generation") <= int(generation))
-                if not include_unsealed:
-                    inactive = list(state.unsealed) + [
-                        g
-                        for g, act in state.overrides.items()
-                        if act > int(generation)
-                    ]
-                    if inactive:
-                        prior = prior.where(
-                            ~F.col("generation").isin(sorted(set(inactive)))
-                        )
-                elif not dedup_against_pending:
-                    pending = sorted(state.unsealed)
-                    if pending:
-                        prior = prior.where(
-                            ~F.col("generation").isin(pending)
-                        )
+            prior = self.storage.read("tombstones").where(
+                F.col("generation") <= int(generation)
+            )
+            if not include_unsealed:
+                inactive = list(state.unsealed) + [
+                    g
+                    for g, act in state.overrides.items()
+                    if act > int(generation)
+                ]
+                if inactive:
+                    prior = prior.where(
+                        ~F.col("generation").isin(sorted(set(inactive)))
+                    )
+            elif not dedup_against_pending:
+                pending = sorted(state.unsealed)
+                if pending:
+                    prior = prior.where(
+                        ~F.col("generation").isin(pending)
+                    )
             docs = docs.join(
                 prior.select("docid"),
                 on="docid",
@@ -579,8 +575,6 @@ class IndexMaintenance:
         them (``generation <= pinned``), so folding them would silently
         delete visible docs until the batch's replay republishes.
         """
-        if "generation" not in tombs.columns:
-            return tombs
         state = self.storage.generation_state()
         tombs = tombs.where(F.col("generation") <= int(state.current()))
         pending = sorted(state.unsealed)
@@ -627,9 +621,6 @@ class IndexMaintenance:
         docs dropped, docids preserved, posting blocks re-packed to 128,
         and live at-seal stats.  Returns {source_segment: output_segment}.
         """
-        # compaction re-encodes posting blocks in the CURRENT layout, so a
-        # legacy index must be backfilled first or the directory goes mixed
-        self.storage.assert_appendable()
         density = self.tombstone_density()
         victims = sorted(s for s, d in density.items() if d >= max_density and d > 0)
         if not victims:
@@ -699,11 +690,6 @@ class IndexMaintenance:
         Query results are invariant (merged ≡ unmerged — plan Q1-OB3).
         """
         segment_ids = sorted(segment_ids)
-        # same guard as compact(): the output blocks embed term_df/term_cf,
-        # so merging into a legacy (pre-embedded-dictionary) postings
-        # directory would create the mixed-schema state assert_appendable
-        # documents as silently-wrong BM25 stats — backfill first
-        self.storage.assert_appendable()
         _, out_seg = self.storage.next_bases()
         mapping = {s: out_seg for s in segment_ids}
         # docs / doclens / postings: re-key to the output segment (the
@@ -758,76 +744,6 @@ class IndexMaintenance:
         self.storage.write_table(stats, "field_stats", "append", coalesce=1)
         self._publish_supersede(mapping, fold_tombstones=False, remap_tombstones=True)
         return out_seg
-
-    # ── legacy migration ──────────────────────────────────────────────────
-
-    def backfill_embedded_terms(self) -> int:
-        """One-time rewrite embedding the term dictionary into a LEGACY
-        postings table (pre-embedded-dictionary layout, physical ``terms/``
-        directory).  After this, appends/merges are admitted again
-        (:meth:`IndexStorage.assert_appendable`) and the physical terms
-        directory is deleted — the dictionary is a logical projection of
-        the posting blocks from here on.  Returns the number of posting
-        block rows rewritten (0 when the index is already embedded).
-        """
-        if not self.storage.table_exists("postings"):
-            return 0
-        postings = self.spark.read.format(self.storage.format).load(
-            self.storage.path("postings")
-        )
-        if "term_df" in postings.columns:
-            return 0
-        terms = self.spark.read.format(self.storage.format).load(
-            self.storage.path("terms")
-        )
-        embedded = postings.join(
-            terms.select(
-                "segment_id",
-                "field",
-                "term",
-                F.col("df").cast("long").alias("term_df"),
-                F.col("cf").cast("long").alias("term_cf"),
-            ),
-            on=["segment_id", "field", "term"],
-            how="left",
-        )
-        # the rewrite touches every block anyway: migrate the entries to
-        # the gap layout in the same pass (one backfill, not two)
-        if not is_delta_layout(postings):
-            embedded = embedded.withColumn("entries", reencode_absolute_entries_expr())
-        # overwrite-in-place is illegal (read path == write path), so this
-        # goes through the write-temp + directory-swap publish primitive,
-        # keeping the (segment_id, bucket) partition layout
-        self.storage.atomic_rewrite(
-            "postings", embedded, partition_by=("segment_id", "bucket")
-        )
-        n = self.spark.read.format(self.storage.format).load(
-            self.storage.path("postings")
-        ).count()
-        shutil.rmtree(self.storage.path("terms"), ignore_errors=True)
-        return int(n)
-
-    def backfill_delta_entries(self) -> int:
-        """One-time in-place re-encode of LEGACY absolute-docid posting
-        entries into the delta layout (``functions/codec.py``), after which
-        appends/compactions are admitted again
-        (:meth:`IndexStorage.assert_appendable`).  Returns the number of
-        posting block rows rewritten (0 when already delta-encoded)."""
-        if not self.storage.table_exists("postings"):
-            return 0
-        postings = self.spark.read.format(self.storage.format).load(
-            self.storage.path("postings")
-        )
-        if is_delta_layout(postings):
-            return 0
-        migrated = postings.withColumn("entries", reencode_absolute_entries_expr())
-        self.storage.atomic_rewrite(
-            "postings", migrated, partition_by=("segment_id", "bucket")
-        )
-        n = self.spark.read.format(self.storage.format).load(
-            self.storage.path("postings")
-        ).count()
-        return int(n)
 
     # ── GC ────────────────────────────────────────────────────────────────
 
@@ -945,7 +861,7 @@ class IndexMaintenance:
 
         now = _time.time()
         removed = []
-        for table in ("docs", "doclens", "postings", "terms"):  # terms: legacy dirs only
+        for table in ("docs", "doclens", "postings"):
             root = self.storage.path(table)
             if not os.path.isdir(root):
                 continue
@@ -1012,7 +928,7 @@ class IndexMaintenance:
         # postings: explode entries, drop dead docids, re-pack 128-blocks
         postings = self.storage.read("postings").where(F.col("segment_id").isin(srcs))
         has_positions = "positions" in postings.columns
-        decoded = with_decoded_docids(postings, is_delta_layout(postings))
+        decoded = with_decoded_docids(postings)
         zip_cols = ("dec", "entries", "positions") if has_positions else ("dec", "entries")
         exploded = decoded.select(
             "segment_id",
@@ -1254,7 +1170,7 @@ class IndexMaintenance:
                 )
             elif fold_tombstones:
                 pending = sorted(gen_state.unsealed)
-                if pending and "generation" in tombs.columns:
+                if pending:
                     moved = tombs.where(
                         F.col("segment_id").isin(srcs)
                         & F.col("generation").isin(pending)

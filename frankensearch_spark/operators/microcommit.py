@@ -53,6 +53,7 @@ import numpy as np
 
 from ..functions.contract import POSTINGS_PER_BLOCK, fieldnorm_to_id
 from ..functions.xxh64 import spark_xxhash64_columns
+from ..sources.storage import first_data_file
 
 #: rows at or under this commit driver-side (conf
 #: ``frankensearch.upsert.driverMaxRows`` overrides; 0 disables).  The
@@ -170,13 +171,7 @@ def _build_identity_cache(maint) -> Optional[IdentityCache]:
             for i, d in enumerate(ids):
                 rows.setdefault(d, []).append((int(docid[i]), int(seg), int(chash[i])))
     for f in storage.list_tombstone_files():
-        pf = pq.ParquetFile(f)
-        if not {"docid", "generation"} <= set(pf.schema_arrow.names):
-            # legacy tombstone layout (no generation column): its
-            # visibility semantics differ — leave this index to the
-            # distributed path, which handles it explicitly
-            return None
-        t = pf.read(columns=["docid", "generation"])
+        t = pq.ParquetFile(f).read(columns=["docid", "generation"])
         for d, g in zip(
             t["docid"].to_numpy(zero_copy_only=False),
             t["generation"].to_numpy(zero_copy_only=False),
@@ -217,14 +212,10 @@ def _table_footer_schema(storage, table: str):
     physically absent from partitioned files, exactly what we write)."""
     import pyarrow.parquet as pq
 
-    root = storage.path(table)
-    if not os.path.isdir(root):
+    sample = first_data_file(storage.path(table))
+    if sample is None:
         return None
-    for dirpath, _dirnames, filenames in sorted(os.walk(root)):
-        for f in sorted(filenames):
-            if f.endswith(".parquet"):
-                return pq.read_schema(os.path.join(dirpath, f)).remove_metadata()
-    return None
+    return pq.read_schema(sample).remove_metadata()
 
 
 def _cast_to_footer(columns: dict, schema):
@@ -619,8 +610,6 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
         or "doc_id" not in table.column_names
     ):
         return None
-    # layout gate (raises on legacy layouts — identical to distributed)
-    storage.assert_appendable()
     footers = {
         t: _table_footer_schema(storage, t)
         for t in ("docs", "doclens", "postings", "manifest", "field_stats")

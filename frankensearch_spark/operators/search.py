@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.codec import is_delta_layout, with_decoded_docids
+from ..functions.codec import with_decoded_docids
 from ..functions.contract import (
     BM25_K1,
     POSTINGS_PER_BLOCK,
@@ -161,6 +161,7 @@ class SearchEngine:
         self.spark = spark
         self.storage = IndexStorage(spark, index_dir)
         self.meta = self.storage.read_meta()
+        self.storage.check_format(self.meta)
         self.schema = schema or _schema_from_meta(self.meta)
         self.parser = q.DefaultQueryParser(self.schema)
 
@@ -221,22 +222,18 @@ class SearchEngine:
         self._segment_spans = {}
         for r in snapshot:
             seg = int(r["segment_id"])
-            if seg in live_set and r["docid_lo"] is not None:
+            if seg in live_set:
                 lo, hi = int(r["docid_lo"]), int(r["docid_hi"])
                 cur = self._segment_spans.get(seg)
                 if cur is not None:  # replay remnant rows: keep the UNION
                     lo, hi = min(cur[0], lo), max(cur[1], hi)
                 self._segment_spans[seg] = (lo, hi)
-        if len(self._segment_spans) != len(live_set):
-            self._segment_spans = None  # legacy rows without spans
-            self._span_arrays = None
-        else:
-            items = sorted(self._segment_spans.items())
-            self._span_arrays = (
-                np.array([s for s, _ in items], dtype=np.int64),
-                np.array([v[0] for _, v in items], dtype=np.int64),
-                np.array([v[1] for _, v in items], dtype=np.int64),
-            )
+        items = sorted(self._segment_spans.items())
+        self._span_arrays = (
+            np.array([s for s, _ in items], dtype=np.int64),
+            np.array([v[0] for _, v in items], dtype=np.int64),
+            np.array([v[1] for _, v in items], dtype=np.int64),
+        )
         # Tombstones are pinned alongside the segment set: the engine
         # captures (a) the manifest generation and (b) the tombstone files
         # present at open, so deletes issued after open are invisible until
@@ -979,16 +976,7 @@ class SearchEngine:
             if table == "terms":
                 # derive the dictionary from the CACHED postings frame so
                 # both views share one file index (one listing at open)
-                derived = IndexStorage.derive_terms(self._base_table("postings"))
-                if derived is None:
-                    # legacy fallback: load the physical terms directory
-                    # DIRECTLY — storage.read("terms") would re-list and
-                    # re-derive from a fresh, unpinned postings load first
-                    df = self.spark.read.format(self.storage.format).load(
-                        self.storage.path("terms")
-                    )
-                else:
-                    df = derived
+                df = IndexStorage.derive_terms(self._base_table("postings"))
             else:
                 df = self.storage.read(table)
             self._table_cache[table] = df
@@ -1218,26 +1206,15 @@ class SearchEngine:
         The file list is ``inputFiles()`` of the pinned postings relation
         the scoring scan reads, so the dictionary and the scan see the
         same files; non-live segments' files are dropped by their
-        ``segment_id=K`` directory.  Legacy indexes keep the dictionary in
-        a physical ``terms/`` directory, listed on the driver; its files
-        hold several segments each, so their rows are filtered by
-        segment in :meth:`_doc_freqs` instead.
+        ``segment_id=K`` directory.
         """
         if self._dict_files is None:
-            postings = self._base_table("postings")
-            if "term_df" in postings.columns:
-                uris = postings.inputFiles()
-            else:
-                uris = termdict.list_files(self.storage.path("terms"))
             live = set(self.live_segments)
             by_bucket: dict[int, list[str]] = {}
-            for uri in uris:
+            for uri in self._base_table("postings").inputFiles():
                 part = termdict.partition_values(uri)
-                seg = part.get("segment_id")
-                if seg is not None and seg not in live:
-                    continue
-                # both layouts are bucket-partitioned (storage.py)
-                by_bucket.setdefault(part["bucket"], []).append(uri)
+                if part["segment_id"] in live:
+                    by_bucket.setdefault(part["bucket"], []).append(uri)
             self._dict_files = by_bucket
         return self._dict_files
 
@@ -1330,9 +1307,7 @@ class SearchEngine:
                 .withColumn("weight", weight_expr)
                 .where(F.col("leaf_id").isNotNull())
             )
-            joined = with_decoded_docids(
-                joined, is_delta_layout(postings), compact=compact
-            )
+            joined = with_decoded_docids(joined, compact=compact)
             return joined.select(
                 "leaf_id",
                 "field",
@@ -1354,9 +1329,7 @@ class SearchEngine:
         joined = postings.join(
             F.broadcast(qterms), on=["field", "term", "bucket"], how="inner"
         )
-        joined = with_decoded_docids(
-            joined, is_delta_layout(postings), compact=compact
-        )
+        joined = with_decoded_docids(joined, compact=compact)
         return joined.select(
             "leaf_id",
             "field",
@@ -1624,9 +1597,7 @@ class SearchEngine:
             )
         rows = (
             with_decoded_docids(
-                matched,
-                is_delta_layout(postings),
-                compact=self._compact_decode_ok(set(pairs)),
+                matched, compact=self._compact_decode_ok(set(pairs))
             )
             .select(
                 "ord",
@@ -1833,7 +1804,7 @@ class SearchEngine:
                 F.broadcast(tf), on=["field", "term"], how="leftsemi"
             )
         matched = (
-            with_decoded_docids(hit, is_delta_layout(postings))
+            with_decoded_docids(hit)
             .select(F.explode_outer("dec").alias("docid"))
             .distinct()
         )
@@ -1895,10 +1866,10 @@ class SearchEngine:
         O(k × row-group) work bounded by
         :data:`DRIVER_HYDRATION_MAX_BYTES` — at bench scale ~1 ms of IO
         replacing a ~100 ms scheduled Spark job.  Returns None (caller
-        runs the distributed read) on any surprise: no spans, non-local
-        format, non-primitive column types, or over-budget row groups.
+        runs the distributed read) on any surprise: non-local format,
+        non-primitive column types, or over-budget row groups.
         """
-        if self._span_arrays is None or self.storage.format != "parquet":
+        if self.storage.format != "parquet":
             return None
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -2032,18 +2003,17 @@ class SearchEngine:
                 self.spark, [(int(d),) for d in docids], "docid long"
             )
             hydra = docs.join(F.broadcast(ids), on="docid", how="leftsemi")
-        if self._span_arrays is not None:
-            seg_a, lo_a, hi_a = self._span_arrays
-            mask = np.zeros(len(seg_a), dtype=bool)
-            covered = True
-            for d in docids:
-                in_span = (lo_a <= d) & (d <= hi_a)
-                covered &= bool(in_span.any())
-                mask |= in_span
-            if covered:  # a docid outside every span would be dropped
-                hydra = hydra.where(
-                    F.col("segment_id").isin([int(s) for s in seg_a[mask]])
-                )
+        seg_a, lo_a, hi_a = self._span_arrays
+        mask = np.zeros(len(seg_a), dtype=bool)
+        covered = True
+        for d in docids:
+            in_span = (lo_a <= d) & (d <= hi_a)
+            covered &= bool(in_span.any())
+            mask |= in_span
+        if covered:  # a docid outside every span would be dropped
+            hydra = hydra.where(
+                F.col("segment_id").isin([int(s) for s in seg_a[mask]])
+            )
         return self._without_aqe(hydra.select(*cols)).toPandas()
 
     def _materialize(self, winners: pd.DataFrame, hydrate: tuple = ()) -> pd.DataFrame:

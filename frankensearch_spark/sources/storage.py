@@ -14,13 +14,14 @@ snapshots with per-partition lineage):
     <index_dir>/
       docs/               docid, doc_id, segment_id, stored fields...
       doclens/            docid, segment_id, len_<f>, fnid_<f> per text field
-      postings/           segment_id=K/bucket=B/  (term-bucketed, block rows)
-      terms/              bucket=B/ field, term, df, cf
+      postings/           segment_id=K/bucket=B/  (term-bucketed, block rows;
+                          the term dictionary rides in term_df/term_cf)
       field_stats/        segment_id, field, doc_count, total_tokens,
                           docid_lo, docid_hi
       manifest/           generation, segment_id, docid_lo, docid_hi,
                           doc_count, status, built_at
-      index_meta.json     schema + config (buckets, fields, generation)
+      index_meta.json     schema + config (buckets, fields, generation,
+                          format_version)
 
 Postings are directory-partitioned by ``bucket = pmod(crc32(term), B)``
 (crc32 because Spark's builtin is bit-identical to Python's ``zlib.crc32``,
@@ -43,6 +44,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 INDEX_META = "index_meta.json"
+
+#: On-disk layout version, written into ``index_meta.json`` at build and
+#: checked once when an engine or maintenance facade opens the index
+#: (the reference validates its segment magic + version at reader open,
+#: ``segment.rs:20-24``, never per append).  Version 1 is the layout
+#: every writer in this package produces: postings carry the embedded
+#: term dictionary (``term_df``/``term_cf``) and gap-encoded entries
+#: (``functions/codec.py``), there is no physical ``terms/`` table, and
+#: tombstones carry their ``generation``.
+FORMAT_VERSION = 1
 
 #: Commit-time open-state rollup (QG-9 cold-open analogue, reference
 #: keeper open ≤50 ms for a 1M-doc index): every mutation ends in one
@@ -94,6 +105,54 @@ def pin_segments(df: "DataFrame", segments, max_isin: int | None = None) -> "Dat
         [(s,) for s in segs], "segment_id int"
     )
     return df.join(F.broadcast(frame), on="segment_id", how="leftsemi")
+
+
+def first_data_file(root: str) -> str | None:
+    """The first ``.parquet`` file under ``root`` in path order, or None.
+
+    Descends one sorted level at a time and stops at the first file, so
+    a partitioned table costs one listing per level on the way down, not
+    a walk of its whole tree.  Directory names sort with a trailing
+    ``/``, which keeps the order of a sorted full-path walk.  Hidden and
+    ``_``-prefixed entries (in-flight writes, commit markers) are
+    skipped, as Spark's reader skips them.
+    """
+    try:
+        entries = sorted(os.scandir(root), key=lambda e: e.name)
+    except OSError:
+        return None
+    dirs = []
+    for e in entries:
+        if e.name.startswith(("_", ".")):
+            continue
+        if e.is_dir():
+            dirs.append(e)
+        elif e.name.endswith(".parquet"):
+            return e.path
+    for e in sorted(dirs, key=lambda e: e.name + "/"):
+        found = first_data_file(e.path)
+        if found is not None:
+            return found
+    return None
+
+
+def _as_nullable(dt):
+    """Spark's ``DataType.asNullable``: what a file source read reports
+    for a written schema."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 #: Process-wide parquet-schema cache for table reads, keyed by
@@ -175,6 +234,9 @@ class IndexMeta:
     #: text fields whose SOURCE is the edge-ngram expansion of another
     #: column (the CASS *_prefix fields): {field: source_field}
     derived_prefix_fields: dict = dc_field(default_factory=dict)
+    #: on-disk layout version (:data:`FORMAT_VERSION`); None when read
+    #: from a meta written before the field existed
+    format_version: int | None = FORMAT_VERSION
 
     def analyzer_of(self, field: str) -> str:
         return self.analyzers.get(field, "default")
@@ -185,6 +247,7 @@ class IndexMeta:
     @classmethod
     def from_json(cls, text: str) -> "IndexMeta":
         data = json.loads(text)
+        data.setdefault("format_version", None)
         return cls(**{k: v for k, v in data.items() if k in cls.__dataclass_fields__})
 
 
@@ -195,6 +258,7 @@ class IndexStorage:
         "docs",
         "doclens",
         "postings",
+        # never written; a fresh build over a legacy index dir removes it
         "terms",
         "field_stats",
         "manifest",
@@ -231,7 +295,7 @@ class IndexStorage:
 
     def read(self, table: str) -> DataFrame:
         if table == "terms":
-            return self._read_terms()
+            return self.derive_terms(self.read("postings"))
         path = self.path(table)
         if not os.path.exists(path):
             self._recover_interrupted_swap(table)
@@ -272,12 +336,48 @@ class IndexStorage:
         else:
             df = self.spark.read.format(self.format).load(path)
         if key is not None:
-            _SCHEMA_CACHE[(self.index_dir, table)] = (key, df.schema)
-            while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
-                _SCHEMA_CACHE.popitem(last=False)
+            self._cache_schema(table, key, df.schema)
         return df
 
-    def _read_terms(self) -> DataFrame:
+    def _cache_schema(self, table: str, key: tuple, schema) -> None:
+        _SCHEMA_CACHE[(self.index_dir, table)] = (key, schema)
+        while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.popitem(last=False)
+
+    def seed_schema_cache(self, tables) -> None:
+        """Prime the :meth:`read` schema cache for freshly written tables.
+
+        A build's writes change every table root's cache key, so without
+        this the first query after a build pays one schema-inference job.
+        Spark infers the writer's row schema, which it embeds in every
+        footer, made nullable, followed by the partition columns read from
+        the directory names; this package partitions only by int columns
+        (``segment_id``, ``bucket``), which Spark infers as IntegerType.
+        A table whose footer lacks the embedded schema is left to
+        inference.
+        """
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import IntegerType, StructType
+
+        for table in tables:
+            path = self.path(table)
+            sample = first_data_file(path)
+            if sample is None:
+                continue
+            blob = (pq.read_schema(sample).metadata or {}).get(
+                b"org.apache.spark.sql.parquet.row.metadata"
+            )
+            if blob is None:
+                continue
+            schema = _as_nullable(StructType.fromJson(json.loads(blob)))
+            rel = os.path.relpath(os.path.dirname(sample), path)
+            for part in [] if rel == "." else rel.split(os.sep):
+                schema = schema.add(part.split("=", 1)[0], IntegerType(), True)
+            st = os.stat(path)
+            self._cache_schema(table, (st.st_mtime_ns, len(os.listdir(path))), schema)
+
+    @staticmethod
+    def derive_terms(postings: DataFrame) -> DataFrame:
         """The term dictionary as a LOGICAL table.
 
         Posting block rows embed their term's full per-segment df/cf
@@ -286,60 +386,8 @@ class IndexStorage:
         ``block_id = 0`` rows: Parquet column pruning skips the posting
         payload columns entirely and the ``block_id`` predicate prunes at
         row-group level.  No physical terms table is written, copied at
-        merge, or rebuilt at compaction.  Falls back to a physical
-        ``terms/`` directory for indexes written before the dictionary was
-        embedded.
+        merge, or rebuilt at compaction.
         """
-        postings = self.spark.read.format(self.format).load(self.path("postings"))
-        derived = self.derive_terms(postings)
-        if derived is None:
-            return self.spark.read.format(self.format).load(self.path("terms"))
-        return derived
-
-    def assert_appendable(self) -> None:
-        """Refuse to append embedded-dictionary postings onto a legacy
-        (pre-embedded-dictionary) postings table.
-
-        A mixed postings directory — some files with ``term_df``/``term_cf``,
-        some without — is silently wrong: a plain parquet read samples one
-        footer, so :meth:`derive_terms` would either see the embedded
-        columns and emit NULL df/cf for every legacy segment, or miss them
-        and fall back to a stale physical terms table lacking the new
-        segments' rows.  Either way BM25 stats corrupt without an error.
-        Callers must run ``IndexMaintenance.backfill_embedded_terms()``
-        (one-time rewrite) before appending to a legacy index.
-        """
-        if not self.table_exists("postings"):
-            return
-        postings = self.spark.read.format(self.format).load(self.path("postings"))
-        if "term_df" not in postings.columns:
-            raise RuntimeError(
-                "refusing to append to a legacy index whose postings lack "
-                "the embedded term dictionary (term_df/term_cf): a mixed "
-                "postings directory yields silently-wrong BM25 stats.  Run "
-                "IndexMaintenance.backfill_embedded_terms() once (rewrites "
-                "postings with the dictionary embedded), then retry."
-            )
-        element = postings.schema["entries"].dataType.elementType
-        if "d" not in element.fieldNames():
-            raise RuntimeError(
-                "refusing to append to a legacy index whose posting entries "
-                "store absolute docids: mixing them with gap-encoded "
-                "entries (functions/codec.py) in one postings directory "
-                "makes the struct schema file-dependent, so a plain parquet "
-                "read decodes one of the layouts as NULLs.  Run "
-                "IndexMaintenance.backfill_delta_entries() once (in-place "
-                "re-encode of the entry docids), then retry."
-            )
-
-    @staticmethod
-    def derive_terms(postings: DataFrame):
-        """Dictionary projection of a postings frame (None if the frame
-        predates the embedded dictionary)."""
-        from pyspark.sql import functions as F
-
-        if "term_df" not in postings.columns:
-            return None
         return postings.where(F.col("block_id") == 0).select(
             "segment_id",
             "field",
@@ -348,6 +396,64 @@ class IndexStorage:
             F.col("term_df").alias("df"),
             F.col("term_cf").alias("cf"),
         )
+
+    def check_format(self, meta: IndexMeta) -> None:
+        """Refuse an index whose on-disk layout this package cannot read.
+
+        Runs once per open and never schedules a Spark job: a meta that
+        carries :data:`FORMAT_VERSION` is trusted as is.  A meta written
+        before the field existed is classified from one postings footer
+        and one tombstone footer read with pyarrow; a current layout is
+        stamped on ``meta`` in memory (the next commit's meta write
+        persists it), a legacy one raises naming what is missing.
+        """
+        if meta.format_version == FORMAT_VERSION:
+            return
+        if meta.format_version is not None:
+            raise RuntimeError(
+                f"index {self.index_dir} has on-disk format_version "
+                f"{meta.format_version}; this package reads version "
+                f"{FORMAT_VERSION}"
+            )
+        missing = self._legacy_layout()
+        if missing:
+            raise RuntimeError(
+                f"refusing to open legacy index {self.index_dir}: "
+                + "; ".join(missing)
+                + ".  Rebuild it from its source documents."
+            )
+        meta.format_version = FORMAT_VERSION
+
+    def _legacy_layout(self) -> list[str]:
+        """What a pre-:data:`FORMAT_VERSION` index lacks, from at most two
+        parquet footers (every writer produced one layout per table, so
+        one file stands for the table)."""
+        import pyarrow.parquet as pq
+
+        missing = []
+        if os.path.isdir(self.path("terms")):
+            missing.append(
+                "it keeps a physical terms/ table instead of the term "
+                "dictionary embedded in postings"
+            )
+        sample = first_data_file(self.path("postings"))
+        if sample is not None:
+            schema = pq.read_schema(sample)
+            if "term_df" not in schema.names:
+                missing.append(
+                    "its postings lack the embedded term dictionary "
+                    "(term_df/term_cf)"
+                )
+            entry = schema.field("entries").type.value_type
+            if "d" not in [entry.field(i).name for i in range(entry.num_fields)]:
+                missing.append(
+                    "its posting entries store absolute docids, not the "
+                    "gap-encoded d of functions/codec.py"
+                )
+        sample = first_data_file(self.path("tombstones"))
+        if sample is not None and "generation" not in pq.read_schema(sample).names:
+            missing.append("its tombstones lack the generation column")
+        return missing
 
     def write_table(
         self,
@@ -429,19 +535,10 @@ class IndexStorage:
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            sample = next(
-                (
-                    f
-                    for f in sorted(os.listdir(root))
-                    if f.endswith(".parquet")
-                ),
-                None,
-            )
+            sample = first_data_file(root)
             if sample is None:
                 return False
-            target = pq.read_schema(
-                os.path.join(root, sample)
-            ).remove_metadata()
+            target = pq.read_schema(sample).remove_metadata()
             n = max((len(v) for v in columns.values()), default=0)
             if n == 0 or any(len(v) != n for v in columns.values()):
                 return False
@@ -762,29 +859,28 @@ class IndexStorage:
         if not files:
             return None, 0
         df = self.spark.read.parquet(*files)
-        if "generation" in df.columns:
-            state = gen_state if gen_state is not None else self.generation_state()
-            df = df.where(F.col("generation") <= generation)
-            if not include_unsealed:
-                # tombstones staged by a still-unsealed batch activate only
-                # at seal(), together with their replacement segments — a
-                # later sealed commit advancing the pinned generation past
-                # the pending one must not activate them early (docs would
-                # vanish without their replacements)
-                if state.unsealed:
-                    df = df.where(
-                        ~F.col("generation").isin(sorted(state.unsealed))
-                    )
-            # batches already sealed by seal() activate at sealed_at: a
-            # row whose staged generation passed the <= filter above may
-            # still be in this reader's future (snapshot immutability
-            # across seal)
-            late = sorted(
-                g for g, act in state.overrides.items() if act > generation
-            )
-            if late:
-                df = df.where(~F.col("generation").isin(late))
-        if live_segments is not None and "segment_id" in df.columns:
+        state = gen_state if gen_state is not None else self.generation_state()
+        df = df.where(F.col("generation") <= generation)
+        if not include_unsealed:
+            # tombstones staged by a still-unsealed batch activate only
+            # at seal(), together with their replacement segments — a
+            # later sealed commit advancing the pinned generation past
+            # the pending one must not activate them early (docs would
+            # vanish without their replacements)
+            if state.unsealed:
+                df = df.where(
+                    ~F.col("generation").isin(sorted(state.unsealed))
+                )
+        # batches already sealed by seal() activate at sealed_at: a
+        # row whose staged generation passed the <= filter above may
+        # still be in this reader's future (snapshot immutability
+        # across seal)
+        late = sorted(
+            g for g, act in state.overrides.items() if act > generation
+        )
+        if late:
+            df = df.where(~F.col("generation").isin(late))
+        if live_segments is not None:
             df = pin_segments(df, live_segments, self.segment_pin_isin_max)
         df = df.select("docid").distinct().persist()
         if known_count is not None:

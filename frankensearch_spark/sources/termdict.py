@@ -15,10 +15,6 @@ the file, and a reopen after a commit reads only the new segment's files.
 Every use still stats the file and compares (mtime, size) with the cached
 read, so a pinned file that has vanished raises ``FileNotFoundError``
 instead of counting as df = 0.
-
-Legacy indexes (physical ``terms/`` directory, postings without the
-embedded columns) go through the same reader: their files carry ``df``
-and a ``segment_id`` column instead.
 """
 
 from __future__ import annotations
@@ -45,20 +41,6 @@ def partition_values(uri: str) -> dict[str, int]:
     return {k: int(v) for k, v in _PARTITION.findall(uri)}
 
 
-def list_files(root: str) -> list[str]:
-    """Data files under a local table directory, skipping the hidden and
-    ``_``-prefixed names Spark's reader skips too."""
-    out = []
-    for dirpath, dirnames, filenames in os.walk(root):
-        dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
-        out.extend(
-            os.path.join(dirpath, f)
-            for f in sorted(filenames)
-            if not f.startswith(("_", "."))
-        )
-    return out
-
-
 def _local_path(uri: str) -> str:
     """Local path of a ``file:`` URI or plain path (the index layout is
     local POSIX storage throughout, see ``IndexStorage``)."""
@@ -68,34 +50,19 @@ def _local_path(uri: str) -> str:
     return unquote(parts.path)
 
 
-def _read_file(path: str, segment) -> dict:
-    """``{(segment_id, field): {term: df}}`` of one postings or legacy
-    terms file; ``segment`` comes from the path, else from the file."""
+def _read_file(path: str, segment: int) -> dict:
+    """``{(segment_id, field): {term: df}}`` of one postings file of
+    ``segment``."""
     with pq.ParquetFile(path) as pf:
-        names = set(pf.schema_arrow.names)
-        if "term_df" in names:
-            cols, df_col = ["field", "term", "block_id", "term_df"], "term_df"
-        elif "df" in names:
-            cols, df_col = ["field", "term", "df"], "df"
-        else:
-            raise ValueError(f"{path} carries no term dictionary column")
-        if segment is None:
-            cols.append("segment_id")
-        tbl = pf.read(columns=cols)
-    if "block_id" in cols:
-        tbl = tbl.filter(pc.equal(tbl["block_id"], 0))
-    groups = ["field"] if segment is not None else ["segment_id", "field"]
+        tbl = pf.read(columns=["field", "term", "block_id", "term_df"])
+    tbl = tbl.filter(pc.equal(tbl["block_id"], 0))
     # summed per key, like the Spark group-by it replaces
-    agg = tbl.group_by(groups + ["term"]).aggregate([(df_col, "sum")])
+    agg = tbl.group_by(["field", "term"]).aggregate([("term_df", "sum")])
     out = {}
-    for key in agg.group_by(groups).aggregate([]).to_pylist():
-        mask = pc.equal(agg["field"], key["field"])
-        if segment is None:
-            mask = pc.and_(mask, pc.equal(agg["segment_id"], key["segment_id"]))
-        sub = agg.filter(mask)
-        dfs = pc.fill_null(sub[f"{df_col}_sum"], 0).to_pylist()
-        seg = segment if segment is not None else key["segment_id"]
-        out[(seg, key["field"])] = dict(zip(sub["term"].to_pylist(), dfs))
+    for field in pc.unique(agg["field"]).to_pylist():
+        sub = agg.filter(pc.equal(agg["field"], field))
+        dfs = pc.fill_null(sub["term_df_sum"], 0).to_pylist()
+        out[(segment, field)] = dict(zip(sub["term"].to_pylist(), dfs))
     return out
 
 
@@ -140,6 +107,6 @@ def file_doc_freqs(uri: str) -> dict:
     sig = (st.st_mtime_ns, st.st_size)
     dfs = _CACHE.get(uri, sig)
     if dfs is None:
-        dfs = _read_file(path, partition_values(uri).get("segment_id"))
+        dfs = _read_file(path, partition_values(uri)["segment_id"])
         _CACHE.put(uri, sig, dfs)
     return dfs

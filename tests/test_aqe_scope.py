@@ -163,8 +163,7 @@ def test_first_query_of_a_new_term_is_one_job(spark, tmp_path_factory, monkeypat
     Spark job for a single term, an AND query and a phrase.  After an
     upsert and reopen(), the dictionary reads only the new segment's
     postings files; the old segments' files come from the process cache.
-    A first unrelated query pays the engine's one-time table opens (the
-    schema inference a build's new files trigger)."""
+    A first unrelated query warms the engine's plan caches."""
     from frankensearch_spark.sources import termdict
 
     d = str(tmp_path_factory.mktemp("newterm_ix"))
@@ -209,6 +208,47 @@ def test_first_query_of_a_new_term_is_one_job(spark, tmp_path_factory, monkeypat
     ] + 1
     buckets = {zlib.crc32(t.encode()) % 4 for t in ("w3", "w12")}
     assert sorted(loaded) == sorted(new) * len(buckets)
+
+
+def test_first_query_after_build_is_one_job(spark, tmp_path_factory):
+    """The build seeds the table-schema cache with what it wrote, so the
+    very first query after ``build`` runs only its scoring action: no
+    postings schema-inference job."""
+    d = str(tmp_path_factory.mktemp("afterbuild_ix"))
+    corpus = synthetic_transcripts(spark, 400, vocab_size=100)
+    idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("after-build", "first query")
+    try:
+        hits = idx.search("w3", limit=10).hits
+    finally:
+        sc.setJobGroup("after-build-done", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("after-build"))
+    assert n_jobs == 1, f"first query after build ran {n_jobs} jobs (want 1)"
+    assert len(hits) == 10
+
+
+def test_build_seeds_the_schemas_spark_infers(spark, tmp_path_factory):
+    """The schemas a build seeds equal a fresh Spark inference of each
+    table, partition column types included."""
+    import os
+
+    from pyspark.sql.types import IntegerType
+
+    from frankensearch_spark.sources import storage as storage_mod
+
+    d = str(tmp_path_factory.mktemp("seeded_ix"))
+    corpus = synthetic_transcripts(spark, 300, vocab_size=100)
+    LexicalIndex.build_transcripts(spark, corpus, d, num_segments=2, num_buckets=4)
+    for table in ("docs", "doclens", "postings", "field_stats", "manifest"):
+        path = os.path.join(d, table)
+        key, seeded = storage_mod._SCHEMA_CACHE[(d, table)]
+        assert key == (os.stat(path).st_mtime_ns, len(os.listdir(path))), table
+        reader = spark.read.option("mergeSchema", str(table == "manifest").lower())
+        assert seeded == reader.parquet(path).schema, table
+    _, postings = storage_mod._SCHEMA_CACHE[(d, "postings")]
+    assert postings["segment_id"].dataType == IntegerType()
+    assert postings["bucket"].dataType == IntegerType()
 
 
 def test_qterm_inline_path_equals_broadcast_join(spark, tmp_path_factory, monkeypatch):

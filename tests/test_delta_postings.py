@@ -6,10 +6,10 @@ JVM-side by a staged Hillis-Steele scan.  These tests pin:
 
 * the physical layout (schema + gap invariants),
 * decode == an independent numpy cumsum reconstruction,
-* compaction preserving the layout,
-* the one-time ``backfill_delta_entries()`` migration for round-2-shaped
-  indexes (embedded dictionary, absolute entry docids) and the
-  mixed-directory refusal that mandates it.
+* compaction preserving the layout.
+
+Indexes with absolute entry docids are refused at open
+(``test_format_version.py``).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from frankensearch_spark.functions.codec import is_delta_layout, with_decoded_docids
+from frankensearch_spark.functions.codec import with_decoded_docids
 from frankensearch_spark.index import LexicalIndex
 from frankensearch_spark.sources.storage import IndexStorage
 from frankensearch_spark.sources.transcripts import synthetic_transcripts
@@ -42,7 +42,6 @@ def gap_index(spark, tmp_path_factory):
 def test_gap_layout_schema_and_invariants(spark, gap_index):
     d, _, _ = gap_index
     p = spark.read.parquet(IndexStorage(spark, d).path("postings"))
-    assert is_delta_layout(p)
     element = p.schema["entries"].dataType.elementType
     assert element.fieldNames() == ["d", "freq", "fnid"]
     assert [f.dataType.simpleString() for f in element.fields] == ["int", "int", "int"]
@@ -57,7 +56,7 @@ def test_scan_decode_matches_numpy_cumsum(spark, gap_index):
     d, _, _ = gap_index
     p = spark.read.parquet(IndexStorage(spark, d).path("postings"))
     rows = (
-        with_decoded_docids(p, True)
+        with_decoded_docids(p)
         .select("first_doc", F.expr("entries.d").alias("gaps"), "dec")
         .limit(500)
         .collect()
@@ -82,7 +81,7 @@ def test_compaction_preserves_gap_layout(spark, gap_index, tmp_path):
     mapping = idx.maintenance.compact(max_density=0.01)
     assert mapping  # something rewrote
     p = spark.read.parquet(idx.storage.path("postings"))
-    assert is_delta_layout(p)
+    assert p.schema["entries"].dataType.elementType.fieldNames() == ["d", "freq", "fnid"]
     idx.reopen()
     # rewritten index still answers; deleted docs are gone (full
     # compacted == rebuilt differentials live in test_maintenance.py).
@@ -96,50 +95,6 @@ def test_compaction_preserves_gap_layout(spark, gap_index, tmp_path):
             assert hits
 
 
-def test_absolute_entries_refused_then_backfilled(spark, gap_index, tmp_path):
-    """Round-2-shaped index: embedded dictionary present, absolute entry
-    docids.  Appends/compactions refuse; backfill_delta_entries migrates."""
-    import shutil
-
-    d, _, corpus = gap_index
-    d2 = str(tmp_path / "abs_ix")
-    shutil.copytree(d, d2)
-    storage = IndexStorage(spark, d2)
-    idx = LexicalIndex(spark, d2)
-    expected = {q: _hits(idx, q) for q in QUERIES}
-    p = spark.read.parquet(storage.path("postings"))
-    absolute = (
-        with_decoded_docids(p, True)
-        .withColumn(
-            "entries",
-            F.expr(
-                "zip_with(dec, entries, (id, e) -> "
-                "struct(id as docid, e.freq as freq, e.fnid as fnid))"
-            ),
-        )
-        .drop("dec")
-    )
-    storage.atomic_rewrite("postings", absolute, partition_by=("segment_id", "bucket"))
-    # legacy layout still READS correctly (decode branches on the schema)
-    idx = LexicalIndex(spark, d2)
-    for q in QUERIES:
-        assert _hits(idx, q) == expected[q], q
-    # ...but mutations that would mix layouts in one directory refuse
-    with pytest.raises(RuntimeError, match="absolute docids"):
-        storage.assert_appendable()
-    with pytest.raises(RuntimeError, match="absolute docids"):
-        idx.maintenance.compact()
-    # one-time migration, then everything is admitted and identical
-    n = idx.maintenance.backfill_delta_entries()
-    assert n > 0
-    assert is_delta_layout(spark.read.parquet(storage.path("postings")))
-    storage.assert_appendable()
-    idx.reopen()
-    for q in QUERIES:
-        assert _hits(idx, q) == expected[q], q
-    assert idx.maintenance.backfill_delta_entries() == 0  # idempotent
-
-
 def test_compact_decode_identical_to_staged(spark, gap_index):
     """The one-expression compact scan (with_decoded_docids compact=True,
     the interactive-query construction fast path) must be bit-identical
@@ -147,9 +102,9 @@ def test_compact_decode_identical_to_staged(spark, gap_index):
     d, _, _ = gap_index
     p = spark.read.parquet(IndexStorage(spark, d).path("postings"))
     key = ["field", "term", "segment_id", "block_id"]
-    staged = with_decoded_docids(p, True).select(*key, "dec").orderBy(*key).collect()
+    staged = with_decoded_docids(p).select(*key, "dec").orderBy(*key).collect()
     compact = (
-        with_decoded_docids(p, True, compact=True)
+        with_decoded_docids(p, compact=True)
         .select(*key, "dec")
         .orderBy(*key)
         .collect()

@@ -2,9 +2,9 @@
 
 Every block of a term carries the term's full per-segment df/cf
 (``term_df``/``term_cf``); ``storage.read("terms")`` derives the
-dictionary as a scalar projection of ``block_id = 0`` rows, with a
-fallback to a physical ``terms/`` directory for pre-embedding indexes.
-These tests pin that contract independently of the query path.
+dictionary as a scalar projection of ``block_id = 0`` rows (indexes
+with a physical ``terms/`` table are refused at open,
+``test_format_version.py``).  These tests pin that contract independently of the query path.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from frankensearch_spark.index import LexicalIndex
-from frankensearch_spark.sources.storage import IndexStorage
 
 
 @pytest.fixture(scope="module")
@@ -84,34 +83,3 @@ def test_derived_view_schema_and_values(built):
     assert row["alpha"] == (2, 3)
     assert row["gamma"] == (2, 4)
     assert row["common"] == (300, 300)
-
-
-def test_legacy_physical_terms_fallback(spark, built, tmp_path):
-    """An index whose postings predate the embedding reads the physical
-    terms/ directory instead."""
-    legacy_dir = str(tmp_path / "legacy")
-    storage = IndexStorage(spark, legacy_dir)
-    old_postings = built.storage.read("postings").drop("term_df", "term_cf")
-    storage.write_table(
-        old_postings, "postings", "overwrite", partition_by=("segment_id", "bucket")
-    )
-    physical = built.storage.read("terms").withColumn("df", F.col("df") + 1)
-    storage.write_table(
-        physical, "terms", "overwrite", partition_by=("segment_id", "bucket")
-    )
-    # the +1 witness proves the PHYSICAL table was read, not a derivation
-    derived = IndexStorage.derive_terms(storage.spark.read.parquet(storage.path("postings")))
-    assert derived is None
-    got = {
-        r["term"]: r["df"]
-        for r in storage.read("terms").groupBy("term").agg(F.sum("df").alias("df")).collect()
-    }
-    want = {
-        r["term"]: r["df"] + 2  # two segments, +1 per segment row
-        for r in built.storage.read("terms")
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .collect()
-        if r["term"] in got
-    }
-    assert got["common"] == want["common"]

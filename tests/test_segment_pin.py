@@ -49,7 +49,7 @@ def test_semijoin_pin_is_rank_identical_and_literal_free(spark, tmp_path_factory
     assert joined.collect_docids("w3") == idx.collect_docids("w3")
 
 
-def test_hydration_span_pruning_rank_identical(spark, tmp_path_factory):
+def test_hydration_span_pruning_rank_identical(spark, tmp_path_factory, monkeypatch):
     """Point-reads prune by manifest docid spans (round 4): same hits with
     the span filter on and off, and the spans cover every live segment."""
     d = str(tmp_path_factory.mktemp("span_ix"))
@@ -59,7 +59,8 @@ def test_hydration_span_pruning_rank_identical(spark, tmp_path_factory):
     assert eng._span_arrays is not None
     assert set(eng._segment_spans) == set(eng.live_segments)
     pruned = _hits(idx, "w1 w2")
-    eng._span_arrays = None  # legacy fallback path
+    # the distributed point read prunes by the same spans
+    monkeypatch.setattr(eng, "_point_read_docs_driver", lambda *a: None)
     eng._query_cache.clear()
     assert _hits(idx, "w1 w2") == pruned
 
