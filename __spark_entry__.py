@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from frankensearch_spark.index import LexicalIndex  # noqa: E402
 from frankensearch_spark.operators import dedup, simsearch, textops  # noqa: E402
 from frankensearch_spark.sources import duckdb_oracle as dsql  # noqa: E402
+from frankensearch_spark.sources.storage import FORMAT_VERSION  # noqa: E402
 
 _CACHE_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".entry_cache")
 _INDEXES: dict[str, LexicalIndex] = {}
@@ -42,11 +43,12 @@ def _index(spark: SparkSession, sf_dir: str) -> LexicalIndex:
     key = os.path.abspath(sf_dir)
     if key in _INDEXES:
         return _INDEXES[key]
-    # layout tag: bump when the physical postings layout changes so a
-    # cached index is rebuilt in the current layout instead of being read
-    # through the legacy-schema branch (gap1 = gap-encoded entry docids)
+    # layout tag: the on-disk format version, so a cached index is
+    # rebuilt whenever the format changes (the engine refuses any other
+    # version at open)
     index_dir = os.path.join(
-        _CACHE_ROOT, os.path.basename(key.rstrip("/")) + "_index_gap1"
+        _CACHE_ROOT,
+        os.path.basename(key.rstrip("/")) + f"_index_v{FORMAT_VERSION}",
     )
     idx = LexicalIndex(spark, index_dir)
     if not idx.engine_exists():

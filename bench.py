@@ -189,8 +189,8 @@ def main() -> None:
             latencies.append(best)
 
         # ── engine cold-open latency (QG-9 analogue) ───────────────────────
-        # reference keeper opens a 1M-doc index in <=50 ms; with the
-        # commit-time open_state rollup the Spark engine open is zero jobs
+        # reference keeper opens a 1M-doc index in <=50 ms; the engine
+        # open reads one manifest.json and runs zero Spark jobs
         t0 = time.time()
         LexicalIndex(spark, index.index_dir).engine
         queries["engine_open_sec"] = round(time.time() - t0, 4)

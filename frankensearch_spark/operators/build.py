@@ -24,10 +24,10 @@ accumulate, radix flush; ``index.rs:4882`` index_documents):
    a single exchange).
 4. **Denormalized fieldnorms** — each posting block carries the per-doc
    fieldnorm ids inline, so query-time scoring needs NO doclen join.
-5. **Commit** — per-segment manifest rows are written last; a re-run
-   anti-joins sealed segments and rebuilds only the missing ones
-   (idempotent per-segment overwrite = crash-resumable bulk load,
-   reference ``config.rs:26-27``).
+5. **Commit** — the manifest record naming the new segments is
+   published last (``IndexStorage.publish``); a re-run overwrites the
+   unpublished segments' partitions (idempotent per-segment overwrite =
+   crash-resumable bulk load, reference ``config.rs:26-27``).
 
 Skew: block rows bound per-group state by segment size (64Ki-doc leases in
 the reference; partition-sized segments here), so a pathological high-DF
@@ -59,7 +59,7 @@ from ..functions.analyze import tokenize_batch
 from ..plans.localrel import values_frame
 from ..functions.codec import encode_entries_expr
 from ..functions.contract import POSTINGS_PER_BLOCK, fieldnorm_to_id
-from ..sources.storage import IndexMeta, IndexStorage
+from ..sources.storage import IndexMeta, IndexStorage, segment_row
 
 #: Auto-sizing target: one segment ≈ one docid lease span (bounded
 #: per-(segment, term) shuffle-group state — the Q1 skew discipline).
@@ -165,7 +165,7 @@ def build_index(
         # group are capped by the segment's doc count, so no single shuffle
         # group can exceed target_docs_per_segment postings regardless of
         # how skewed the term distribution is.  One cheap count() sizes the
-        # build; at 10^12 turns this yields ~10^7 manifest rows, which is
+        # build; at 10^12 turns this yields ~10^7 record rows, which is
         # Iceberg-manifest scale, not a bottleneck.
         n_docs = df.count()
         num_segments = max(
@@ -190,13 +190,12 @@ def build_index(
         num_segments=num_segments,
         docid_base=0,
         segment_base=0,
+        generation=1,
         mode="overwrite",
     )
     storage.write_meta(meta)
     # the first query after a build reads these with no inference job
-    storage.seed_schema_cache(
-        ("docs", "doclens", "postings", "field_stats", "manifest")
-    )
+    storage.seed_schema_cache(("docs", "doclens", "postings", "field_stats"))
     return storage
 
 
@@ -209,6 +208,7 @@ def append_segment_batch(
     num_segments: Optional[int],
     docid_base: int,
     segment_base: int,
+    generation: int,
     mode: str = "append",
     pre_publish=None,
     manifest_status: str = "sealed",
@@ -218,7 +218,7 @@ def append_segment_batch(
     segments starting at ``segment_base`` with docids from ``docid_base``.
 
     All table writes are append-only (except the initial ``overwrite``
-    build); visibility is controlled by the manifest rows written last —
+    build); visibility is controlled by the record published last —
     the analogue of the reference's seal-then-publish commit protocol
     (``index.rs:6054``).  Returns the new segment ids — ``[]`` when the
     input was empty (nothing written, nothing published).
@@ -266,6 +266,7 @@ def append_segment_batch(
             mode=mode,
             pre_publish=pre_publish,
             new_segments=list(range(segment_base, segment_base + num_segments)),
+            generation=generation,
             manifest_status=manifest_status,
             # Small batches skip write_segment_tables' slim.count()
             # barrier (saves ~0.5 s per watch-mode micro-batch by letting
@@ -298,10 +299,12 @@ def write_segment_tables(
     pre_publish=None,
     new_segments: Optional[list[int]] = None,
     n_docs: Optional[int] = None,
+    generation: int = 1,
     manifest_status: str = "sealed",
 ) -> None:
-    """Write docs/doclens/postings/field_stats/manifest (the term
-    dictionary is embedded in the posting blocks).
+    """Write docs/doclens/postings/field_stats, then publish the record
+    naming the new segments under ``generation`` (the term dictionary is
+    embedded in the posting blocks).
 
     ``docs_frame`` carries (docid, doc_id, content_hash, stored/keyword
     columns) — an assign-only pass over the pinned ranged cache with NO
@@ -313,31 +316,28 @@ def write_segment_tables(
     dynamic partition overwrite: only this batch's own segment_id
     partitions are replaced, which makes a crashed batch's re-run
     idempotent (replay replaces its partial files instead of appending
-    duplicates).  The unpartitioned stats/manifest tables append —
-    possible crash-replay duplicates are deduplicated by every reader —
-    except on the initial full build (mode="overwrite"), which resets them.
+    duplicates).  The unpartitioned field_stats table appends — stats
+    come from the record, and a replayed batch's duplicate rows are
+    deduplicated by its readers — except on the initial full build
+    (mode="overwrite"), which resets it.
 
     ``pre_publish`` (if given) runs concurrently with the data-table
-    writes but strictly BEFORE the manifest append — the publish point.
+    writes but strictly BEFORE the record publish.
     Upsert stages its tombstones there so delete-of-old and add-of-new
-    become visible in the same manifest generation (atomic for readers).
+    become visible in the same generation (atomic for readers).
     Concurrency is safe because the staging writes touch only the
     tombstones table and its reads scope to the PRIOR live segments —
     partition pruning never lets it see this batch's half-committed
     segment directories — and the rows it stages are tagged with the
-    not-yet-published generation, invisible until the manifest append.
-    Its return value (newly staged distinct docids, or None) feeds the
-    incremental open-state publish.
+    not-yet-published generation, in files the record names only at
+    the publish.  It returns ``(newly staged distinct docids, file
+    names)``.
     """
     sm_mode = "overwrite" if mode == "overwrite" else "append"
     if new_segments is None:
         new_segments = [
             r["segment_id"] for r in slim.select("segment_id").distinct().collect()
         ]
-    # Incremental open-state base: capture BEFORE the first table write so
-    # a valid fingerprint proves the stored rollup describes the
-    # pre-mutation tables exactly (None on a fresh dir / stale rollup).
-    prior_raw = storage.open_state_raw() if sm_mode == "append" else None
     # The data-table writers are independent jobs over already-
     # materialized caches writing to DIFFERENT tables (docs <- ranged
     # cache; doclens and postings <- slim cache), so they run on driver
@@ -346,14 +346,14 @@ def write_segment_tables(
     # and the cluster never idles between jobs.  The tombstone staging
     # (pre_publish) rides a fourth thread for the same reason.
     # Dependencies stay explicit: stats follows doclens when it reads the
-    # doclens table (same thread), and the manifest append — the publish
+    # doclens table (same thread), and the record publish — the commit
     # point — happens strictly after every data table is durable AND the
     # staging completed, exactly as before.  Crash semantics are
     # unchanged: an interrupted batch left unpublished is replaced
     # wholesale by its replay's dynamic partition overwrite.
     from concurrent.futures import ThreadPoolExecutor
 
-    def _doclens_then_stats() -> tuple[DataFrame, list]:
+    def _doclens_then_stats() -> list:
         _write_doclens(slim, storage, meta, "overwrite")
         return _write_stats(storage, meta, sm_mode, new_segments)
 
@@ -392,56 +392,35 @@ def write_segment_tables(
             f_stats = pool.submit(_doclens_then_stats)
         f_docs.result()
         f_postings.result()
-        seg_local, seg_rows = f_stats.result()
+        seg_rows = f_stats.result()
         staged_tombstones = f_pre.result() if f_pre is not None else None
-    _write_manifest(
-        seg_local, storage, meta, sm_mode, status=manifest_status,
-        seg_rows=seg_rows,
-    )
-    # commit-time open-state rollup: engines open with zero Spark jobs
-    # (sources/storage.py OPEN_STATE); written after the manifest append
-    # so a crash here only leaves a stale-fingerprint file (safe fallback).
-    # Both commit shapes publish it driver-side when exactness holds
-    # (footer-verified, zero jobs): a fresh build holds everything the
-    # rollup would recompute, and an append commit is prior state + this
-    # batch's delta.  Anything else falls back to the full rollup.
-    new_manifest_rows = [
-        [
-            int(r["segment_id"]),
-            int(meta.generation),
-            None,
+    # The publish point: one record naming the new segments (and the
+    # tombstone files the staging wrote), written after every data table
+    # is durable.  A crash before it leaves the batch's files unnamed; the
+    # replay overwrites them.
+    rows = [
+        segment_row(
+            r["segment_id"],
+            generation,
             manifest_status,
-            None,
-            int(r["docid_lo"]),
-            int(r["docid_hi"]) + 1,  # half-open, matches _write_manifest
-        ]
+            r["docid_lo"],
+            int(r["docid_hi"]) + 1,  # half-open [lo, hi)
+            r["doc_count"],
+            {
+                f: (r["doc_count"], r[f"tokens_{f}"] or 0)
+                for f in meta.text_fields
+            },
+        )
         for r in seg_rows
     ]
-    new_stats = {
-        f: [
-            sum(int(r["doc_count"]) for r in seg_rows),
-            sum(int(r[f"tokens_{f}"] or 0) for r in seg_rows),
-        ]
-        for f in meta.text_fields
-    }
-    published = False
-    if sm_mode == "overwrite" and pre_publish is None and manifest_status == "sealed":
-        published = storage.write_open_state_from_build(
-            manifest_rows=new_manifest_rows,
-            stats=new_stats,
-            expected_stats_rows=len(seg_rows) * len(meta.text_fields),
-        )
-    elif sm_mode == "append" and prior_raw is not None:
-        published = storage.write_open_state_append(
-            prior_raw,
-            manifest_rows=new_manifest_rows,
-            stats_delta=new_stats,
-            expected_stats_rows=len(seg_rows) * len(meta.text_fields),
-            tombstones_appended=int(staged_tombstones or 0),
-            sealed=(manifest_status == "sealed"),
-        )
-    if not published:
-        storage.write_open_state()
+    rec = storage.with_segments(storage.read_manifest(), rows)
+    if staged_tombstones is not None:
+        n_staged, files = staged_tombstones
+        rec["tombstone_files"] = rec["tombstone_files"] + files
+        if n_staged and manifest_status == "sealed":
+            # the default view gains the staged deletes; counted on use
+            rec["tombstone_count"] = None
+    storage.publish(rec)
 
 
 # ── step 1+2: docid assignment + tokenization ──────────────────────────────
@@ -1045,7 +1024,7 @@ def _write_stats(
     mode: str,
     new_segments: list[int],
     slim: Optional[DataFrame] = None,
-) -> tuple[DataFrame, list]:
+) -> list:
     """Per-segment rollup from the just-written doclens TABLE (not the slim
     cache): the parquet read prunes to exactly the scalar len columns,
     while a slim-cache scan would deserialize every posting array again.
@@ -1055,14 +1034,14 @@ def _write_stats(
     run in parallel (one less serialized job on the upsert commit path).
 
     The rollup is collected ONCE (O(new segments) driver rows) and the
-    field_stats / manifest tables are written from a LOCAL frame built on
-    it: writing straight from the distributed plan under ``coalesce(1)``
-    pulled the whole doclens scan+agg into a single task (no shuffle
-    under coalesce — the round-4 dict-fold serialization bug, again), and
-    the manifest write re-ran the identical aggregation a second time.
-    Returns ``(seg_local, seg_rows)`` — the local frame keeps the exact
-    schema the distributed plan produced, so appended parquet types
-    cannot drift."""
+    field_stats table is written from a LOCAL frame built on it: writing
+    straight from the distributed plan under ``coalesce(1)`` pulled the
+    whole doclens scan+agg into a single task (no shuffle under coalesce
+    — the round-4 dict-fold serialization bug, again).  The same rows
+    become the record's segment rows.
+    Returns the collected rows; the local frame keeps the exact schema
+    the distributed plan produced, so appended parquet types cannot
+    drift."""
     aggs = [
         F.count("*").alias("doc_count"),
         F.min("docid").alias("docid_lo"),
@@ -1113,7 +1092,7 @@ def _write_stats(
             ],
         },
     ):
-        return seg_local, seg_rows
+        return seg_rows
     rows = []
     for f in meta.text_fields:
         rows.append(
@@ -1130,49 +1109,4 @@ def _write_stats(
     for r in rows[1:]:
         stats = stats.unionByName(r)
     storage.write_table(stats, "field_stats", mode, coalesce=1)
-    return seg_local, seg_rows
-
-
-def _write_manifest(
-    seg: DataFrame,
-    storage: IndexStorage,
-    meta: IndexMeta,
-    mode: str,
-    status: str = "sealed",
-    seg_rows: Optional[list] = None,
-) -> None:
-    # Append commits go driver-side (one pyarrow file, zero jobs) —
-    # still exactly ONE file, so the committer-v2 atomicity argument for
-    # the manifest publish point is unchanged.  ``sealed_at`` rides along
-    # for post-seal manifest layouts; pre-seal footers just ignore it.
-    if mode == "append" and seg_rows is not None:
-        n = len(seg_rows)
-        if storage.append_driver_side(
-            "manifest",
-            {
-                "generation": [int(meta.generation)] * n,
-                "segment_id": [r["segment_id"] for r in seg_rows],
-                "docid_lo": [r["docid_lo"] for r in seg_rows],
-                "docid_hi": [int(r["docid_hi"]) + 1 for r in seg_rows],
-                "doc_count": [r["doc_count"] for r in seg_rows],
-                "status": [status] * n,
-                "built_at": [float(time.time())] * n,
-                "superseded_at": [None] * n,
-                "sealed_at": [None] * n,
-            },
-        ):
-            return
-    manifest = seg.select(
-        F.lit(meta.generation).alias("generation"),
-        "segment_id",
-        "docid_lo",
-        (F.col("docid_hi") + F.lit(1)).alias("docid_hi"),  # half-open [lo, hi)
-        "doc_count",
-        F.lit(status).alias("status"),
-        F.lit(time.time()).alias("built_at"),
-        # history retention: never-superseded rows carry NULL; maintenance
-        # stamps the superseding generation instead of dropping the row,
-        # so past generations stay openable (at_generation) until gc()
-        F.lit(None).cast("long").alias("superseded_at"),
-    )
-    storage.write_table(manifest, "manifest", mode, coalesce=1)
+    return seg_rows

@@ -12,18 +12,20 @@ Spark analogue:
    runs regardless of quantile nondeterminism.
 2. **Per-batch commit** — each chunk is indexed with
    :func:`~frankensearch_spark.operators.build.append_segment_batch` and
-   then recorded in the plan (atomic json rewrite).  The manifest rows of
-   a batch are written last, so a batch is visible only when complete.
+   then recorded in the plan (atomic json rewrite).  The manifest record
+   naming a batch's segments is published last, so a batch is visible
+   only when complete.
 3. **Idempotent re-run** — a batch that crashed mid-write is re-run with
    dynamic partition overwrite: docs/doclens/postings are
    partitioned by ``segment_id``, so the rewrite replaces exactly the
-   partial batch's own directories.  field_stats/manifest appends may
-   duplicate rows on such a re-run; every reader deduplicates by
-   ``(segment_id, ...)`` (see ``IndexStorage`` readers), making the whole
-   protocol crash-only: kill it anywhere, run it again, converge.
+   partial batch's own directories, and republishing the batch replaces
+   its record rows by segment id.  field_stats appends may duplicate rows
+   on such a re-run; its readers deduplicate by ``(segment_id, field)``,
+   making the whole protocol crash-only: kill it anywhere, run it again,
+   converge.
 
 Resulting lineage: one plan row per batch (docid_base, segment range,
-status, row count) — the per-partition build lineage the manifest table
+status, row count) — the per-partition build lineage the manifest record
 complements.
 """
 
@@ -107,8 +109,8 @@ def bulk_load(
             )
         # Pin every batch's docid/segment base in the plan: a replayed
         # batch MUST reuse its original bases (its crashed attempt may
-        # already have appended manifest rows, so a high-watermark probe
-        # would mint fresh ids and duplicate content instead of
+        # already have published its record rows, so a high-watermark
+        # probe would mint fresh ids and duplicate content instead of
         # overwriting the partial partitions).
         batch_expr = F.lit(0)
         for b in boundaries:
@@ -182,8 +184,8 @@ def bulk_load(
                 cond = cond | F.col(plan["chunk_col"]).isNull()
             batch = batch.where(cond)
         # plan-pinned bases: idempotent under replay (dynamic partition
-        # overwrite replaces exactly this batch's segment partitions; any
-        # duplicated manifest/stats appends are read-side deduplicated)
+        # overwrite replaces exactly this batch's segment partitions, and
+        # the publish replaces its record rows)
         segments = append_segment_batch(
             spark,
             batch,
@@ -193,6 +195,7 @@ def bulk_load(
             num_segments=segments_per_batch,
             docid_base=entry["docid_base"],
             segment_base=entry["segment_base"],
+            generation=1,
             mode="batch" if i > 0 else "overwrite",
         )
         entry.update({"status": "sealed", "segments": segments})

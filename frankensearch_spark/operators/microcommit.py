@@ -14,8 +14,8 @@ batch at or under :data:`DRIVER_UPSERT_MAX_ROWS` rows commits entirely on
 the driver — the SAME tokenizer kernels the distributed build runs
 inside ``mapInArrow`` (``build.assign_tokens``), the same posting-block
 math (gap codec, BLOCKMAX columns, term-clustered layout), the same
-commit protocol (staged tombstones → data tables → manifest append →
-open-state rollup) — producing files byte-compatible with the
+commit protocol (staged tombstones → data tables → one manifest record
+publish) — producing files byte-compatible with the
 distributed writers (every column cast to the table's existing footer
 schema, exactly like ``storage.append_driver_side``).  Anything outside
 the gates returns ``None`` and the caller falls back to the distributed
@@ -23,17 +23,17 @@ path unchanged; at cluster scale with large catch-up batches that path
 still owns the commit.
 
 Identity resolution (the content-hash skip + tombstone staging inputs)
-rides a fingerprint-validated in-process mirror of the docs table's
-(doc_id, content_hash, docid, segment_id) columns plus the tombstone
-rows (:class:`IdentityCache`) — the reference's resident IDHASH
-(``index.rs:10231``).  The mirror is built by ONE bounded Spark collect
-when first needed, updated in place by this module's own commits, and
-invalidated by the docs/tombstones directory listings (any distributed
-writer, compaction, or gc changes the listing and forces a rebuild).
-Gates: ``open_state``-known live doc count ≤
-:data:`IDENTITY_CACHE_MAX_DOCS` and tombstone count ≤
-:data:`IDENTITY_CACHE_MAX_TOMBSTONES` — a 10^9-doc index never mirrors
-driver-side; its micro-batches keep the distributed probe.
+rides an in-process mirror of the docs table's (doc_id, content_hash,
+docid, segment_id) columns plus the tombstone rows
+(:class:`IdentityCache`) — the reference's resident IDHASH
+(``index.rs:10231``).  The mirror is read with pyarrow when first
+needed, updated in place by this module's own commits, carried across
+seals, and keyed on the manifest record's ``seq``: any other publish
+(distributed writer, delete, compaction, gc) forces a rebuild.  Gates:
+the record's live doc count ≤ :data:`IDENTITY_CACHE_MAX_DOCS` and
+tombstone rows ≤ :data:`IDENTITY_CACHE_MAX_TOMBSTONES` — a 10^9-doc
+index never mirrors driver-side; its micro-batches keep the distributed
+probe.
 
 Content hashes come from :mod:`..functions.xxh64` — a numpy XXH64
 bit-identical to Spark's ``xxhash64`` (pinned by test), so a driver
@@ -53,7 +53,7 @@ import numpy as np
 
 from ..functions.contract import POSTINGS_PER_BLOCK, fieldnorm_to_id
 from ..functions.xxh64 import spark_xxhash64_columns
-from ..sources.storage import first_data_file
+from ..sources.storage import first_data_file, segment_row
 
 #: rows at or under this commit driver-side (conf
 #: ``frankensearch.upsert.driverMaxRows`` overrides; 0 disables).  The
@@ -83,76 +83,36 @@ class IdentityCache:
     every row of the docs table in the include-unsealed live segment set
     (tombstoned copies included — exactly what the distributed probe's
     ``matched`` frame sees).  ``tomb`` maps docid → [generation, ...].
-    ``fingerprint`` pins the docs + tombstones directory listings the
-    mirror was derived from.
+    ``seq`` is the manifest record the mirror describes.
     """
 
-    __slots__ = ("fingerprint", "rows", "tomb")
+    __slots__ = ("seq", "rows", "tomb")
 
-    def __init__(self, fingerprint: dict):
-        self.fingerprint = fingerprint
+    def __init__(self, seq: int):
+        self.seq = seq
         self.rows: dict[str, list[tuple[int, int, int]]] = {}
         self.tomb: dict[int, list[int]] = {}
 
 
-def _identity_fingerprint(storage) -> dict:
-    """Listings of the two tables the identity mirror derives from.
-
-    The docs table is segment-partitioned, so the listing walks its
-    partition dirs (O(segments) ``os.listdir`` — the same budget as
-    ``storage._dir_fingerprint``).  A cadence ``seal()`` rewrites only
-    the manifest, so the mirror survives seals; any docs/tombstones
-    mutation (distributed upsert, compact, gc, delete) changes a listing
-    and invalidates it.
-    """
-    out: dict[str, list[str]] = {}
-    for table in ("docs", "tombstones"):
-        root = storage.path(table)
-        names: list[str] = []
-        if os.path.isdir(root):
-            for dirpath, _dirnames, filenames in os.walk(root):
-                rel = os.path.relpath(dirpath, root)
-                for f in filenames:
-                    if f.endswith(".parquet"):
-                        names.append(os.path.join(rel, f))
-        out[table] = sorted(names)
-    return out
-
-
-def _cache_counts_ok(storage) -> bool:
-    """Driver-residency gate from open_state (zero jobs): live docs and
-    tombstones must be bounded before anything is mirrored."""
-    raw = storage.open_state_raw()
-    if raw is None:
-        return False
-    stats = raw.get("stats") or {}
-    n_docs = max((int(v[0]) for v in stats.values()), default=0)
-    n_tomb = int(raw.get("tombstone_count") or 0)
-    # pending (unsealed) batches ride on top of the committed stats
-    for delta in (raw.get("pending") or {}).values():
-        n_docs += max(
-            (int(v[0]) for v in (delta.get("stats") or {}).values()), default=0
-        )
-        n_tomb += int(delta.get("tombstones") or 0)
-    return n_docs <= IDENTITY_CACHE_MAX_DOCS and n_tomb <= IDENTITY_CACHE_MAX_TOMBSTONES
-
-
-def _build_identity_cache(maint) -> Optional[IdentityCache]:
+def _build_identity_cache(maint, rec: dict) -> Optional[IdentityCache]:
     """Driver-side pyarrow reads of the docs mirror columns (live
-    segment partition dirs only) + the tombstone files — zero Spark
-    jobs, bounded by the :func:`_cache_counts_ok` gates.  Returns None
-    when ineligible."""
+    segment partition dirs only) + the record's tombstone files — zero
+    Spark jobs.  None when the live docs or the tombstone rows exceed
+    the residency gates (a 10^9-doc index never mirrors driver-side; its
+    micro-batches keep the distributed probe)."""
     import pyarrow.parquet as pq
 
     storage = maint.storage
-    if not _cache_counts_ok(storage):
+    live = set(storage.live_from_snapshot(rec["segments"], include_unsealed=True))
+    n_docs = sum(r["doc_count"] for r in rec["segments"] if r["segment_id"] in live)
+    tomb_files = storage.tombstone_paths(rec)
+    n_tomb = sum(pq.ParquetFile(f).metadata.num_rows for f in tomb_files)
+    if n_docs > IDENTITY_CACHE_MAX_DOCS or n_tomb > IDENTITY_CACHE_MAX_TOMBSTONES:
         return None
-    fingerprint = _identity_fingerprint(storage)
-    cache = IdentityCache(fingerprint)
-    live = storage.live_segments(include_unsealed=True)
+    cache = IdentityCache(rec["seq"])
     docs_root = storage.path("docs")
     rows = cache.rows
-    for seg in live:
+    for seg in sorted(live):
         part = os.path.join(docs_root, f"segment_id={seg}")
         if not os.path.isdir(part):
             continue
@@ -170,7 +130,7 @@ def _build_identity_cache(maint) -> Optional[IdentityCache]:
             docid = t["docid"].to_numpy(zero_copy_only=False)
             for i, d in enumerate(ids):
                 rows.setdefault(d, []).append((int(docid[i]), int(seg), int(chash[i])))
-    for f in storage.list_tombstone_files():
+    for f in tomb_files:
         t = pq.ParquetFile(f).read(columns=["docid", "generation"])
         for d, g in zip(
             t["docid"].to_numpy(zero_copy_only=False),
@@ -180,15 +140,17 @@ def _build_identity_cache(maint) -> Optional[IdentityCache]:
     return cache
 
 
-def _get_identity_cache(maint) -> Optional[IdentityCache]:
+def _get_identity_cache(maint, rec: dict) -> Optional[IdentityCache]:
+    """The mirror of ``rec``: reused while no other publish has happened
+    since the mirror's own record (every publish advances ``seq``),
+    rebuilt otherwise."""
     key = os.path.realpath(maint.storage.index_dir)
-    fp = _identity_fingerprint(maint.storage)
     with _CACHE_LOCK:
         cached = _IDENTITY_CACHES.get(key)
-        if cached is not None and cached.fingerprint == fp:
+        if cached is not None and cached.seq == rec["seq"]:
             _IDENTITY_CACHES.move_to_end(key)
             return cached
-    built = _build_identity_cache(maint)
+    built = _build_identity_cache(maint, rec)
     if built is None:
         return None
     with _CACHE_LOCK:
@@ -197,6 +159,16 @@ def _get_identity_cache(maint) -> Optional[IdentityCache]:
         while len(_IDENTITY_CACHES) > _IDENTITY_CACHE_SLOTS:
             _IDENTITY_CACHES.popitem(last=False)
     return built
+
+
+def carry_identity_cache(index_dir: str, old_seq: int, new_seq: int) -> None:
+    """Advance a mirror of record ``old_seq`` to ``new_seq`` for a
+    publish that changed neither the docs nor the tombstone files (a
+    seal), so the stream's cadence seal does not force a rebuild."""
+    with _CACHE_LOCK:
+        cached = _IDENTITY_CACHES.get(os.path.realpath(index_dir))
+        if cached is not None and cached.seq == old_seq:
+            cached.seq = new_seq
 
 
 def invalidate_identity_cache(index_dir: str) -> None:
@@ -308,32 +280,6 @@ def _write_partition_file(
         opts["use_deprecated_int96_timestamps"] = True
     pq.write_table(tbl, tmp, **opts)
     os.rename(tmp, os.path.join(out_dir, name))
-
-
-def _create_tombstones_table(storage, columns: dict) -> bool:
-    """First-ever tombstone write on this index, driver-side: establish
-    the table with the distributed writer's exact schema."""
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            pa.field("docid", pa.int64()),
-            pa.field("segment_id", pa.int32()),
-            pa.field("generation", pa.int64()),
-        ]
-    )
-    tbl = _cast_to_footer(columns, schema)
-    if tbl is None:
-        return False
-    root = storage.path("tombstones")
-    os.makedirs(root, exist_ok=True)
-    name = f"part-00000-{uuid.uuid4()}-driver.c000.zstd.parquet"
-    tmp = os.path.join(root, "." + name + ".tmp")
-    import pyarrow.parquet as pq
-
-    pq.write_table(tbl, tmp, compression="zstd")
-    os.rename(tmp, os.path.join(root, name))
-    return True
 
 
 # ── tokenize + posting construction (driver twins of the Arrow passes) ──────
@@ -579,9 +525,7 @@ def upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[in
     Protocol parity with the distributed path, step for step: identity
     resolution against the include-unsealed live view, content-hash
     skip, unique next generation, staged tombstones tagged with it,
-    data tables before the manifest append (the publish point), then the
-    incremental open-state rollup and the same meta/generation
-    bookkeeping for sealed vs unsealed commits.
+    data tables, then one record publish (the commit point).
     """
     global driver_commits, driver_fallbacks
     out = _upsert_arrow_driver(maint, table, sort_cols, seal)
@@ -606,19 +550,19 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
     if (
         storage.format != "parquet"
         or table.num_rows > max_rows
-        or not storage.table_exists("manifest")
         or "doc_id" not in table.column_names
     ):
         return None
     footers = {
         t: _table_footer_schema(storage, t)
-        for t in ("docs", "doclens", "postings", "manifest", "field_stats")
+        for t in ("docs", "doclens", "postings", "field_stats")
     }
     if any(v is None for v in footers.values()):
         return None
     if "content_hash" not in [f.name for f in footers["docs"]]:
         return None
-    cache = _get_identity_cache(maint)
+    rec = storage.read_manifest()
+    cache = _get_identity_cache(maint, rec)
     if cache is None:
         return None
 
@@ -671,14 +615,11 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
     num_segments = _auto_upsert_segments(n_changed, parallelism, meta.num_buckets)
 
     # ── generation bookkeeping (mirrors upsert()) ─────────────────────
-    prior_generation = meta.generation
-    state = storage.generation_state()
-    gen_next = state.current(include_unsealed=True) + 1
-    docid_base, segment_base = storage.next_bases()
-    prior_raw = storage.open_state_raw()
-    meta.generation = gen_next
+    state = storage.state_from_snapshot(rec["segments"])
+    gen_next = state.any_gen + 1
+    docid_base, segment_base = rec["next_docid"], rec["next_segment"]
     try:
-        # ── tombstones to stage (delete_frame's active-view dedup) ────
+        # ── tombstones to stage (_stage_tombstones' active-view dedup) ─
         dedup_against_pending = not seal
         inactive = set() if dedup_against_pending else set(state.unsealed)
         tomb_rows: list[tuple[int, int]] = []
@@ -697,17 +638,13 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
                     continue
                 staged.add(docid)
                 tomb_rows.append((docid, seg))
-        if tomb_rows:
-            tomb_cols = {
-                "docid": [r[0] for r in tomb_rows],
-                "segment_id": [r[1] for r in tomb_rows],
-                "generation": [int(gen_next)] * len(tomb_rows),
-            }
-            if not storage.append_driver_side("tombstones", tomb_cols):
-                if storage.table_exists("tombstones") or not _create_tombstones_table(
-                    storage, tomb_cols
-                ):
-                    raise _FooterMismatch("tombstones")
+        tomb_files = (
+            storage.write_tombstone_rows(
+                [r[0] for r in tomb_rows], [r[1] for r in tomb_rows], gen_next
+            )
+            if tomb_rows
+            else []
+        )
 
         # ── order, docids, segments ───────────────────────────────────
         changed_tbl = table.take(pa.array(changed_idx.astype(np.int64)))
@@ -790,7 +727,7 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
                 storage, meta, seg, seg_fields, docids[lo:hi], footers["postings"]
             )
 
-        # ── field_stats + manifest (the publish point) ────────────────
+        # ── field_stats, then the record (the publish point) ─────────
         seg_rows = []
         for seg in segments:
             lo, hi = seg_slices[seg]
@@ -815,62 +752,29 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
             },
         ):
             raise _FooterMismatch("field_stats")
-        import time as _time
-
         status = "sealed" if seal else "unsealed"
-        if not storage.append_driver_side(
-            "manifest",
-            {
-                "generation": [int(gen_next)] * len(seg_rows),
-                "segment_id": [r["segment_id"] for r in seg_rows],
-                "docid_lo": [r["docid_lo"] for r in seg_rows],
-                "docid_hi": [int(r["docid_hi"]) + 1 for r in seg_rows],
-                "doc_count": [r["doc_count"] for r in seg_rows],
-                "status": [status] * len(seg_rows),
-                "built_at": [float(_time.time())] * len(seg_rows),
-                "superseded_at": [None] * len(seg_rows),
-                "sealed_at": [None] * len(seg_rows),
-            },
-        ):
-            raise _FooterMismatch("manifest")
-
-        # ── open-state rollup + meta (same shape as write_segment_tables
-        #    + upsert()'s tail) ─────────────────────────────────────────
-        new_manifest_rows = [
+        new = storage.with_segments(
+            rec,
             [
-                int(r["segment_id"]),
-                int(gen_next),
-                None,
-                status,
-                None,
-                int(r["docid_lo"]),
-                int(r["docid_hi"]) + 1,
-            ]
-            for r in seg_rows
-        ]
-        new_stats = {
-            f: [
-                sum(int(r["doc_count"]) for r in seg_rows),
-                sum(int(r[f"tokens_{f}"]) for r in seg_rows),
-            ]
-            for f in meta.text_fields
-        }
-        published = False
-        if prior_raw is not None:
-            published = storage.write_open_state_append(
-                prior_raw,
-                manifest_rows=new_manifest_rows,
-                stats_delta=new_stats,
-                expected_stats_rows=len(seg_rows) * len(meta.text_fields),
-                tombstones_appended=len(tomb_rows),
-                sealed=seal,
-            )
-        if not published:
-            storage.write_open_state()
-        if seal:
-            storage.write_meta(meta)
-        else:
-            meta.generation = storage.current_generation()
+                segment_row(
+                    r["segment_id"],
+                    gen_next,
+                    status,
+                    r["docid_lo"],
+                    r["docid_hi"] + 1,
+                    r["doc_count"],
+                    {f: (r["doc_count"], r[f"tokens_{f}"]) for f in meta.text_fields},
+                )
+                for r in seg_rows
+            ],
+        )
+        new["tombstone_files"] = rec["tombstone_files"] + tomb_files
+        if tomb_rows and seal:
+            # the default view gains the staged deletes; counted on use
+            new["tombstone_count"] = None
+        published = storage.publish(new)
+        # a reader's reopen() then needs no schema-inference job
+        storage.seed_schema_cache(("docs", "doclens", "postings", "field_stats"))
 
         # ── update the identity mirror in place ───────────────────────
         for docid, _seg in tomb_rows:
@@ -880,7 +784,7 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
             cache.rows.setdefault(d, []).append(
                 (int(docids[i]), int(seg_of[i]), int(chash_changed[i]))
             )
-        cache.fingerprint = _identity_fingerprint(storage)
+        cache.seq = published["seq"]
         # residency gate re-check: the in-place updates above are the one
         # path that grows the mirror WITHOUT re-entering
         # _build_identity_cache's count gates — a long-lived stream of
@@ -898,13 +802,11 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
         # (footer drift, an un-castable value, an IO error) — not just
         # the explicit _FooterMismatch: the contract is "None when
         # ineligible", and an exception escaping here would kill the
-        # stream with meta.generation left at gen_next.  Replay is safe
-        # at EVERY crash point: before the manifest append nothing is
-        # published (partial segment files are overwritten by the replay,
-        # driver or distributed); after it, the re-upsert's content-hash
-        # skip sees the published copies and converges to an empty
-        # commit (duplicate-then-delete idempotence).  driver_fallbacks
-        # surfaces the rate.
-        meta.generation = prior_generation
+        # stream.  Replay is safe at EVERY crash point: before the
+        # publish nothing is named (partial segment files are
+        # overwritten by the replay, driver or distributed, and staged
+        # tombstone files stay unnamed); after it, the re-upsert's
+        # content-hash skip sees the published copies and converges to
+        # an empty commit.  driver_fallbacks surfaces the rate.
         invalidate_identity_cache(storage.index_dir)
         return None

@@ -35,7 +35,6 @@ from typing import Iterator, Optional, Sequence
 import json
 import os
 import threading
-import time
 import zlib
 
 import numpy as np
@@ -68,11 +67,7 @@ from ..plans.eval import (
     compile_tree_columns,
     phrase_weight,
 )
-from ..sources.storage import (
-    TOMBSTONE_BROADCAST_MAX,
-    IndexStorage,
-    pin_segments,
-)
+from ..sources.storage import TOMBSTONE_BROADCAST_MAX, IndexStorage
 from ..sources.storage import SEGMENT_PIN_ISIN_MAX as _STORAGE_PIN_MAX
 from ..sources import termdict
 
@@ -165,36 +160,25 @@ class SearchEngine:
         self.schema = schema or _schema_from_meta(self.meta)
         self.parser = q.DefaultQueryParser(self.schema)
 
-        # Snapshot pin: the manifest's live segment set at open time.  Every
-        # per-segment table read filters to it (partition pruning), so one
-        # engine instance always queries one generation (the Arc-swap /
-        # VERSION AS OF analogue, reference index.rs:7374).
-        # ``include_unsealed`` opts into pre-commit delta segments AND the
-        # generation they were staged for, so an unsealed upsert's deletes
-        # and adds appear together (reference delta.rs pre-commit reads);
-        # it trades the committed-snapshot guarantee for freshness.
-        # ``at_generation`` time-travels the pin to a PAST committed
-        # generation (VERSION AS OF): the manifest's history rows resolve
-        # the segment set as of that generation, until gc() expires the
-        # history (meta.history_floor records the expiry point so stale
-        # opens fail loudly instead of reading vanished files).
-        # Cold open (QG-9 analogue, reference keeper open ≤50 ms): the
-        # commit-time open_state rollup answers every open-time question
-        # from ONE driver-side JSON read — manifest snapshot rows, the
-        # default-view stats rollup, the tombstone count — so opening an
-        # index with a valid (fingerprint-matching) open_state issues
-        # ZERO Spark actions.  Legacy/stale indexes fall back to the same
-        # one-collect manifest snapshot + Spark rollups as before.
-        open_state = self.storage.read_open_state()
-        if open_state is not None:
-            snapshot = open_state["manifest_rows"]
-        else:
-            snapshot = self.storage.manifest_snapshot()
+        # Snapshot pin: the manifest record's live segment set at open
+        # time.  Every per-segment table read filters to it (partition
+        # pruning), so one engine instance always queries one generation
+        # (the Arc-swap / VERSION AS OF analogue, reference
+        # index.rs:7374).  ``include_unsealed`` opts into pre-commit delta
+        # segments AND the generation they were staged for, so an
+        # unsealed upsert's deletes and adds appear together (reference
+        # delta.rs pre-commit reads); it trades the committed-snapshot
+        # guarantee for freshness.  ``at_generation`` time-travels the pin
+        # to a PAST committed generation (VERSION AS OF): the record's
+        # history rows resolve the segment set as of that generation,
+        # until gc() expires the history (the record's history_floor
+        # makes stale opens fail loudly instead of reading vanished
+        # files).  Open is ONE driver-side JSON read and no Spark job:
+        # segment rows, per-segment stats and the tombstone file names
+        # all come from the record.
+        rec = self.storage.read_manifest()
+        snapshot = rec["segments"]
         gen_state = self.storage.state_from_snapshot(snapshot)
-        # the persisted rollup describes exactly the DEFAULT committed
-        # view; dirty (include_unsealed) and time-travel opens re-derive
-        # their view's stats/tombstones with the usual Spark jobs
-        default_view = at_generation is None and not include_unsealed
         if at_generation is not None:
             at_generation = int(at_generation)
             current = gen_state.current()
@@ -203,31 +187,27 @@ class SearchEngine:
                     f"at_generation={at_generation} is in the future "
                     f"(current generation {current})"
                 )
-            if at_generation < self.meta.history_floor:
+            if at_generation < rec["history_floor"]:
                 raise ValueError(
                     f"at_generation={at_generation} was expired by gc() "
-                    f"(history floor {self.meta.history_floor})"
+                    f"(history floor {rec['history_floor']})"
                 )
         self.live_segments = self.storage.live_from_snapshot(
             snapshot,
             include_unsealed=include_unsealed,
             at_generation=at_generation,
         )
-        # per-live-segment docid spans (manifest lineage): lets O(k)
+        live_set = set(self.live_segments)
+        #: the record rows of the live segments (lineage for reports)
+        self._live_rows = [r for r in snapshot if r["segment_id"] in live_set]
+        # per-live-segment docid spans (record lineage): lets O(k)
         # point-reads (winner hydration) prune to the segment PARTITIONS
         # containing their docids instead of scheduling a task per live
         # file — docid is not a partition column, so without this the
         # hydration scan is O(live files) tasks at any corpus size
-        live_set = set(self.live_segments)
-        self._segment_spans = {}
-        for r in snapshot:
-            seg = int(r["segment_id"])
-            if seg in live_set:
-                lo, hi = int(r["docid_lo"]), int(r["docid_hi"])
-                cur = self._segment_spans.get(seg)
-                if cur is not None:  # replay remnant rows: keep the UNION
-                    lo, hi = min(cur[0], lo), max(cur[1], hi)
-                self._segment_spans[seg] = (lo, hi)
+        self._segment_spans = {
+            r["segment_id"]: (r["docid_lo"], r["docid_hi"]) for r in self._live_rows
+        }
         items = sorted(self._segment_spans.items())
         self._span_arrays = (
             np.array([s for s, _ in items], dtype=np.int64),
@@ -235,11 +215,11 @@ class SearchEngine:
             np.array([v[1] for _, v in items], dtype=np.int64),
         )
         # Tombstones are pinned alongside the segment set: the engine
-        # captures (a) the manifest generation and (b) the tombstone files
-        # present at open, so deletes issued after open are invisible until
+        # keeps (a) the generation and (b) the tombstone files the record
+        # names, so deletes issued after open are invisible until
         # reopen() — no mixed-generation reads (reference Arc-swap
-        # isolation), and tombstones staged by an in-flight upsert for the
-        # NEXT generation are gated out until its manifest append.
+        # isolation).  Named files are immutable and outlive the record
+        # that replaces them by one gc, so the pinned set stays readable.
         self.generation = (
             at_generation
             if at_generation is not None
@@ -247,44 +227,17 @@ class SearchEngine:
         )
         self._gen_state = gen_state
         self._include_unsealed = include_unsealed
-        known_tombstones = (
-            int(open_state["tombstone_count"])
-            if open_state is not None and default_view
+        self._tombstone_files = self.storage.tombstone_paths(rec)
+        #: the record's count describes exactly the DEFAULT view; other
+        #: views (and a count the record left unknown) are counted on
+        #: first use
+        self._tombstone_count: Optional[int] = (
+            rec["tombstone_count"]
+            if at_generation is None and not include_unsealed
             else None
         )
-        if known_tombstones is not None:
-            # fully lazy: the count is authoritative (fingerprint-matched
-            # rollup for this exact view); the docid frame — including its
-            # parquet footer/schema read — is built on first use, so the
-            # open itself performs NO Spark work even on a delete-heavy
-            # index
-            self._tombstone_count = known_tombstones
-            self._tombstones_df = None
-            self._tombstones_pending = known_tombstones > 0
-            # pin the FILE SET from the validated fingerprint itself (no
-            # re-listing — a delete landing between the fingerprint check
-            # and a listdir here would leak into the pinned view and
-            # desync the rollup count from the frame): the lazy frame must
-            # see exactly the open-time tombstones the count describes
-            tomb_root = self.storage.path("tombstones")
-            self._tombstone_files = (
-                [
-                    os.path.join(tomb_root, f)
-                    for f in open_state["fingerprint"]["tombstones"]
-                ]
-                if self._tombstones_pending
-                else []
-            )
-        else:
-            self._tombstones_df, self._tombstone_count = (
-                self.storage.pinned_tombstones(
-                    self.generation,
-                    live_segments=self.live_segments,
-                    include_unsealed=include_unsealed,
-                    gen_state=gen_state,
-                )
-            )
-            self._tombstones_pending = False
+        self._tombstones_df: Optional[DataFrame] = None
+        self._tombstones_pending = True
         #: Force-broadcast the tombstone anti-join only up to this many
         #: tombstoned docids (sources.storage.TOMBSTONE_BROADCAST_MAX);
         #: larger sets use a plain left_anti join so a delete-heavy index
@@ -315,20 +268,10 @@ class SearchEngine:
         self._expr_cache: dict = {}
         self._live_frame_cache: dict[str, DataFrame] = {}
 
-        # snapshot stats: N (total docs) and avgdl per field, from the live
-        # segments' at-seal rows (tombstones do NOT adjust stats until
-        # compaction — reference quiver.rs:11877).  Every segment writes
-        # one stats row per text field (build.py _write_stats), so each
-        # field's doc_count sum is the total.
-        if open_state is not None and default_view:
-            rollup = {
-                f: (int(d), int(t)) for f, (d, t) in open_state["stats"].items()
-            }
-        else:
-            # the ONE stats kernel (storage.stats_rollup) — shared with the
-            # commit-time rollup writer so the fingerprint-valid open and
-            # this from-scratch open cannot drift
-            rollup = self.storage.stats_rollup(self._read_live("field_stats"))
+        # snapshot stats: N (total docs) and avgdl per field, the sum of
+        # the live segments' at-seal record rows (tombstones do NOT
+        # adjust stats until compaction — reference quiver.rs:11877).
+        rollup = self.storage.view_stats(snapshot, self.live_segments)
         tokens: dict[str, int] = {f: t for f, (_, t) in rollup.items()}
         self.doc_count = int(max((d for d, _ in rollup.values()), default=0))
         #: per-field snapshot token totals; an upper bound on the field's
@@ -384,121 +327,23 @@ class SearchEngine:
     def _tombstones(self) -> Optional[DataFrame]:
         """Pinned tombstone docid frame (None when the snapshot has none).
 
-        Lazily constructed when the open came from a commit-time
-        ``open_state`` rollup — the count is known without a job, and the
-        frame's footer read is deferred to the first query that needs the
-        anti-join.
+        Built on first use from the record's file list; the count comes
+        from the record when it describes this view, and is counted here
+        otherwise.
         """
         if self._tombstones_pending:
-            df = None
-            try:
-                df, _ = self.storage.pinned_tombstones(
+            self._tombstones_df, self._tombstone_count = (
+                self.storage.pinned_tombstones(
                     self.generation,
+                    self._tombstone_files,
                     live_segments=self.live_segments,
                     include_unsealed=self._include_unsealed,
                     gen_state=self._gen_state,
                     known_count=self._tombstone_count,
-                    files=self._tombstone_files,  # the OPEN-time file set
                 )
-                # Materialize into the Spark cache NOW: a concurrent
-                # gc()/compaction rewrite swaps the tombstone directory
-                # (the pinned part files vanish), so an un-materialized
-                # frame would crash the first query that touches it.
-                df.count()
-            except Exception:
-                try:  # drop the broken frame's cache registration
-                    if df is not None:
-                        df.unpersist()
-                except Exception:
-                    pass
-                # Fall back ONLY for the condition the fallback exists
-                # for — a concurrent rewrite swapped the tombstone
-                # directory and the pinned part files vanished.  Any
-                # other failure (executor loss, transient FS errors, a
-                # later bug) must surface, not silently change which
-                # tombstone set the reader scores against.
-                if all(os.path.exists(f) for f in self._tombstone_files):
-                    raise
-                df = self._rederive_pinned_tombstones()
-            self._tombstones_df = df
+            )
             self._tombstones_pending = False
         return self._tombstones_df
-
-    def _rederive_pinned_tombstones(self) -> Optional[DataFrame]:
-        """Rebuild the pinned tombstone frame after a rewrite killed the
-        open-time part files.
-
-        Re-derives from the CURRENT table with the pinned filters
-        (generation ≤ pin, segment ∈ pinned live set): rewrites preserve
-        every row live readers need (gc keeps live segments' rows;
-        carry-over keeps generation-gated rows), so nothing is ever
-        resurrected.  Two guarantees make that claim hold:
-
-        * **Lower-bound check.**  Deletes only append and rewrites keep
-          live-segment rows, so any valid re-derivation must see at
-          LEAST the open-time count.  A smaller count means we read a
-          torn state — e.g. ``atomic_rewrite``'s momentary no-directory
-          window between its two renames — so retry briefly, then raise
-          rather than cache a short (doc-resurrecting) set.
-        * **Monotone-forward drift only.**  A delete committed AFTER
-          open at the SAME pinned generation is indistinguishable from
-          an open-time row once the files merged, so it may become
-          visible early — never the reverse.  The count is refreshed
-          with the frame, so the two never desync.
-
-        The count check alone has a blind spot: ``gc(expire_history=
-        True)`` under a pinned reader drops tombstone rows of segments
-        it expired, and deletes appended elsewhere since open could
-        inflate the re-derived count back over the open-time count,
-        masking the loss (resurrecting docs).  gc also removes the
-        expired segments' manifest rows entirely, so the blind spot is
-        detectable set-wise: any pinned live segment with NO row left in
-        the current manifest means history was expired under this pin —
-        raise instead of trusting the count.  (A segment merely
-        *superseded* by compaction keeps its row and its tombstone rows
-        until gc, so normal compaction under a pin does not trip this.)
-        """
-        last_n = -1
-        missing: list[int] = []
-        for attempt in range(5):
-            if attempt:
-                time.sleep(0.2 * attempt)
-            # set-based guard first (see docstring); recomputed per
-            # attempt so a torn manifest rewrite window retries rather
-            # than false-positives
-            present = {
-                int(r["segment_id"]) for r in self.storage.manifest_snapshot()
-            }
-            missing = sorted(set(self.live_segments) - present)
-            if missing:
-                continue
-            df, n = self.storage.pinned_tombstones(
-                self.generation,
-                live_segments=self.live_segments,
-                include_unsealed=self._include_unsealed,
-                gen_state=self._gen_state,
-            )
-            last_n = int(n)
-            if last_n >= self._tombstone_count:
-                self._tombstone_count = last_n
-                return df
-            if df is not None:
-                df.unpersist()
-        if missing:
-            raise RuntimeError(
-                f"pinned live segments {missing} have no manifest row left "
-                "— gc(expire_history=True) ran under this pinned reader "
-                "and expired its snapshot's history (tombstone rows for "
-                "those segments are gone too, so re-derivation would "
-                "silently resurrect their deleted docs); reopen the engine"
-            )
-        raise RuntimeError(
-            "pinned tombstone re-derivation saw only "
-            f"{last_n} of the {self._tombstone_count} open-time tombstones "
-            "— the table was rewritten to a state that no longer covers "
-            "this reader's snapshot (e.g. gc after a compaction that "
-            "superseded its segments); reopen the engine"
-        )
 
     # ── public API ────────────────────────────────────────────────────────
 
@@ -805,7 +650,7 @@ class SearchEngine:
     def segment_metrics(self) -> DataFrame:
         """Per-partition lineage + metrics rollup for this snapshot.
 
-        One row per live segment joining the manifest's lineage (docid
+        One row per live segment joining the record's lineage (docid
         range, status, publish time — what bulk resume keys on) with
         metrics derived from the segment's own tables: token totals,
         posting entries/blocks, distinct terms, and tombstoned docs.
@@ -816,22 +661,22 @@ class SearchEngine:
         stats block (``keeper.rs`` segment records); Iceberg analogue:
         per-partition manifests + ``files`` metadata table.
         """
-        man = (
-            pin_segments(
-                self.storage.read("manifest"),
-                self.live_segments,
-                self.segment_pin_isin_max,
-            )
-            .select(
-                "generation",
-                "segment_id",
-                "status",
-                "docid_lo",
-                "docid_hi",
-                "doc_count",
-                "built_at",
-            )
-            .dropDuplicates(["segment_id"])
+        man = values_frame(
+            self.spark,
+            [
+                (
+                    r["generation"],
+                    r["segment_id"],
+                    r["status"],
+                    r["docid_lo"],
+                    r["docid_hi"],
+                    r["doc_count"],
+                    r["built_at"],
+                )
+                for r in self._live_rows
+            ],
+            "generation long, segment_id int, status string, docid_lo long, "
+            "docid_hi long, doc_count long, built_at double",
         )
         stats = (
             self._read_live("field_stats")

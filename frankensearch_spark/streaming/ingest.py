@@ -8,8 +8,8 @@ live tier immediately, while the sealed commit runs on a cadence.  The
 Structured Streaming mapping is ``writeStream.foreachBatch`` staging each
 micro-batch as UNSEALED delta segments (``upsert(seal=False)`` — durable,
 replayable, visible to ``include_unsealed=True`` readers immediately) and
-sealing on a cadence (every N batches or T seconds): one manifest rewrite
-+ generation commit publishes the whole window to default readers, the
+sealing on a cadence (every N batches or T seconds): one manifest record
+publish commits the whole window's generation to default readers, the
 debounce-window analogue.
 
 Late/duplicate data: ``dropDuplicates`` on the identity inside the batch +
@@ -75,14 +75,13 @@ def _commit_maintenance(index: LexicalIndex):
     """Maintenance facade planning under the commit clone (primary-session
     fallback when the clone seam is unavailable).
 
-    Used by BOTH the per-batch upsert and the cadence seal: the seal's
-    Spark fallback path (fingerprint-invalid rollup → manifest collect +
-    atomic_rewrite + full open-state job) would otherwise plan under the
+    Used by both the per-batch upsert and the cadence seal, so a
+    distributed (fallback) commit plans under the clone instead of the
     index's primary session with AQE on and corpus-sized shuffle
     partitions — the exact per-batch fixed cost the clone exists to
     remove.  Fresh instance per call, same contract as
     ``LexicalIndex.maintenance`` (always sees the current manifest
-    generation).
+    record).
     """
     sess = _commit_session(index)
     if sess is None:
@@ -434,9 +433,10 @@ class IngestQuery:
     would stay unsealed when an ``availableNow`` stream stops; this proxy
     runs the final seal after the wrapped query terminates.  The seal
     only fires when the query is no longer active — a cadence seal racing
-    a mid-publish batch from another thread could rewrite the manifest
-    around a concurrent append; while the stream runs, seals happen only
-    on the micro-batch thread itself.
+    a mid-publish batch from another thread would publish a record
+    derived from the one before that batch's publish, dropping it (the
+    single-writer contract); while the stream runs, seals happen only on
+    the micro-batch thread itself.
     """
 
     def __init__(self, query, cadence: SealCadence) -> None:

@@ -52,7 +52,7 @@ t0 = time.time()
 reopened = LexicalIndex(spark, d)
 eng = reopened.engine
 out["reopen_sec"] = round(time.time() - t0, 4)
-out["rollup_valid"] = reopened.storage.read_open_state() is not None
+out["record_seq"] = reopened.storage.read_manifest()["seq"]
 after_gc = list(reopened.search(q, limit=20).hits["doc_id"])
 out["rank_consistent_after_gc"] = after_gc == after_delete
 out["doc_count"] = eng.doc_count

@@ -39,7 +39,6 @@ B._write_docs = timed("write_docs", B._write_docs)
 B._write_doclens = timed("write_doclens", B._write_doclens)
 B._write_postings = timed("write_postings", B._write_postings)
 B._write_stats = timed("write_stats", B._write_stats)
-B._write_manifest = timed("write_manifest", B._write_manifest)
 _orig_assign = B._assign_docids_and_tokenize
 
 

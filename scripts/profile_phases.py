@@ -84,9 +84,8 @@ try:
                                 new_segments=list(range(16)), timings=sub)
     print(f"write postings (dictionary embedded): {time.time()-t0:.2f}s")
     t0 = time.time()
-    seg_local, _seg_rows = B._write_stats(storage, meta, "overwrite", list(range(16)))
-    B._write_manifest(seg_local, storage, meta, "overwrite")
-    print(f"stats+manifest: {time.time()-t0:.2f}s")
+    B._write_stats(storage, meta, "overwrite", list(range(16)))
+    print(f"stats: {time.time()-t0:.2f}s")
     slim.unpersist(); B.release_checkpoint(ranged)
     print(f"TOTAL: {time.time()-t_all:.2f}s")
 finally:

@@ -51,7 +51,7 @@ def bump(name: str, dt: float) -> None:
     phase[name] = phase.get(name, 0.0) + dt
 
 
-_orig_delete_frame = M.IndexMaintenance.delete_frame
+_orig_delete_frame = M.IndexMaintenance._stage_tombstones
 _orig_append = B.append_segment_batch
 
 
@@ -72,7 +72,6 @@ INNER = [
     "_write_doclens",
     "_write_postings",
     "_write_stats",
-    "_write_manifest",
     "write_segment_tables",
 ]
 _orig_inner = {n: getattr(B, n) for n in INNER}
@@ -83,7 +82,7 @@ def timed_delete_frame(self, *a, **k):
     try:
         return _orig_delete_frame(self, *a, **k)
     finally:
-        bump("delete_frame(stage tombstones)", time.time() - t0)
+        bump("_stage_tombstones", time.time() - t0)
 
 
 def timed_append(*a, **k):
@@ -124,7 +123,7 @@ try:
         for f in os.listdir(upd_src)
         if f.endswith(".parquet")
     )
-    M.IndexMaintenance.delete_frame = timed_delete_frame
+    M.IndexMaintenance._stage_tombstones = timed_delete_frame
     M.append_segment_batch = timed_append  # the name upsert actually calls
     for n in INNER:
         setattr(B, n, _timed_fn(n, _orig_inner[n]))
@@ -143,7 +142,7 @@ try:
         if cadence.pending < _pend_before + 1:
             seal_secs.append(dt)  # a seal fired inside this batch
     t_direct = time.time() - t_direct0
-    M.IndexMaintenance.delete_frame = _orig_delete_frame
+    M.IndexMaintenance._stage_tombstones = _orig_delete_frame
     M.append_segment_batch = _orig_append
     for n in INNER:
         setattr(B, n, _orig_inner[n])

@@ -228,6 +228,34 @@ def test_first_query_after_build_is_one_job(spark, tmp_path_factory):
     assert len(hits) == 10
 
 
+def test_first_query_after_driver_micro_commit_is_one_job(spark, tmp_path_factory):
+    """A driver micro-commit seeds the schema cache for the tables it
+    wrote, so a reader's first query after ``reopen()`` — before any seal
+    — runs as many jobs as the first query after a build: only its
+    scoring action, no schema inference of docs or postings."""
+    from frankensearch_spark.streaming.ingest import transcript_batch_to_docs
+
+    d = str(tmp_path_factory.mktemp("aftercommit_ix"))
+    corpus = synthetic_transcripts(spark, 400, vocab_size=100)
+    idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
+    batch = transcript_batch_to_docs(
+        synthetic_transcripts(spark, 40, vocab_size=100, seed=7, partitions=1)
+    ).dropDuplicates(["doc_id"])
+    assert idx.maintenance.upsert_arrow_small(
+        batch.toArrow(), sort_cols=("conv_id", "turn_idx"), seal=False
+    )
+    idx.reopen()
+    sc = spark.sparkContext
+    sc.setJobGroup("after-commit", "first query")
+    try:
+        hits = idx.search("w3", limit=10).hits
+    finally:
+        sc.setJobGroup("after-commit-done", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("after-commit"))
+    assert n_jobs == 1, f"first query after a micro-commit ran {n_jobs} jobs (want 1)"
+    assert len(hits) == 10
+
+
 def test_build_seeds_the_schemas_spark_infers(spark, tmp_path_factory):
     """The schemas a build seeds equal a fresh Spark inference of each
     table, partition column types included."""
@@ -240,12 +268,11 @@ def test_build_seeds_the_schemas_spark_infers(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("seeded_ix"))
     corpus = synthetic_transcripts(spark, 300, vocab_size=100)
     LexicalIndex.build_transcripts(spark, corpus, d, num_segments=2, num_buckets=4)
-    for table in ("docs", "doclens", "postings", "field_stats", "manifest"):
+    for table in ("docs", "doclens", "postings", "field_stats"):
         path = os.path.join(d, table)
         key, seeded = storage_mod._SCHEMA_CACHE[(d, table)]
         assert key == (os.stat(path).st_mtime_ns, len(os.listdir(path))), table
-        reader = spark.read.option("mergeSchema", str(table == "manifest").lower())
-        assert seeded == reader.parquet(path).schema, table
+        assert seeded == spark.read.parquet(path).schema, table
     _, postings = storage_mod._SCHEMA_CACHE[(d, "postings")]
     assert postings["segment_id"].dataType == IntegerType()
     assert postings["bucket"].dataType == IntegerType()

@@ -144,11 +144,8 @@ def test_behavior_writer_mutations(spark, tmp_path_factory):
     # delete
     assert idx.delete(["d9"]) == 1
     assert idx.search("xray").hits.empty
-    # commit-or-seal: every published segment is sealed in the manifest
-    states = {
-        r["status"]
-        for r in idx.storage.read("manifest").select("status").distinct().collect()
-    }
+    # commit-or-seal: every published segment is sealed in the record
+    states = {r["status"] for r in idx.storage.read_manifest()["segments"]}
     assert states == {"sealed"}
     # delete_all
     assert idx.delete_all() == 3
@@ -219,16 +216,17 @@ def test_behavior_segments_durability(built, tmp_path_factory):
     storage = built.storage
     # terms is a logical table derived from the posting blocks' embedded
     # dictionary columns — only the physical directories are asserted
-    for table in ("docs", "doclens", "postings", "manifest"):
+    for table in ("docs", "doclens", "postings"):
         path = storage.path(table)
         assert path.startswith(built.index_dir)
         assert os.path.isdir(path)
+    assert os.path.isfile(storage.path("manifest.json"))
     # tombstone-aware open: a fresh engine excludes tombstoned docs
     victim = _ids(built.search("golf").hits)[0]
     built.delete([victim])
     assert built.search("golf").hits.empty  # reopened via delete()
-    # manifest stays a readable single consistent table after mutations
-    assert storage.read("manifest").count() >= 1
+    # the record stays readable and names the segments after mutations
+    assert storage.read_manifest()["segments"]
 
 
 # ── behavior-errors-no-panic ────────────────────────────────────────────────

@@ -1,12 +1,12 @@
-"""The zero-job metadata append fast path stays ENGAGED, not fallen back.
+"""The zero-job metadata writes stay ENGAGED, not fallen back.
 
 storage.append_driver_side falls back to the Spark writer silently on
 any surprise — correct for safety, but it means every equivalence suite
 would stay green if the fast path quietly died (the same failure mode
 the no-AQE rebind seam had).  These tests pin engagement: a commit's
-manifest/field_stats/tombstone appends must land as driver-written
+field_stats rows and small tombstone sets must land as driver-written
 parquet files, mixed-writer directories must read back whole, and the
-fallback must refuse cleanly on schema surprises.
+append must refuse cleanly on schema surprises.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from frankensearch_spark.index import LexicalIndex
 from frankensearch_spark.sources.storage import IndexStorage
@@ -47,59 +46,56 @@ def test_upsert_commit_metadata_appends_engage_driver_side(spark, ix):
         "doc_id string, content string",
     )
     assert ix.maintenance.upsert(up, sort_cols=("doc_id",))
-    # the append-mode manifest + field_stats rows must be pyarrow files
-    # written on the driver, not Spark job output
-    assert _driver_files(ix.index_dir, "manifest"), "manifest append fell back"
+    # the append-mode field_stats rows and the staged tombstones must be
+    # pyarrow files written on the driver, not Spark job output
     assert _driver_files(ix.index_dir, "field_stats"), "stats append fell back"
-    # the FIRST tombstone write creates the table through the Spark
-    # writer (no directory to copy a footer schema from yet); the next
-    # mutation's staging must take the driver path
+    assert _driver_files(ix.index_dir, "tombstones"), "tombstone write fell back"
     up2 = spark.createDataFrame(
         [("d", "delta fresh spark again")], "doc_id string, content string"
     )
     assert ix.maintenance.upsert(up2, sort_cols=("doc_id",))
-    assert _driver_files(ix.index_dir, "tombstones"), "tombstone append fell back"
+    assert len(_driver_files(ix.index_dir, "tombstones")) == 2
     # mixed-writer directories read back whole and the engine agrees
     ix.reopen()
     assert set(ix.search("spark", limit=10).hits["doc_id"]) == {"d"}
     assert set(ix.search("merge", limit=10).hits["doc_id"]) == {"a"}
     st = IndexStorage(spark, ix.index_dir)
-    man = st.read("manifest")
-    assert man.where(F.col("status") == "sealed").count() >= 2
+    rec = st.read_manifest()
+    assert sum(r["status"] == "sealed" for r in rec["segments"]) >= 3
+    assert sorted(rec["tombstone_files"]) == sorted(
+        _driver_files(ix.index_dir, "tombstones")
+    )
     stats = st.read("field_stats")
     assert stats.select("segment_id").distinct().count() >= 2
 
 
 def test_interactive_delete_tombstones_engage_driver_side(spark, ix):
-    # first delete creates the table via Spark; the second must append
-    # driver-side
     assert ix.maintenance.delete(["c"]) == 1
     assert ix.maintenance.delete(["b"]) == 1
-    assert _driver_files(ix.index_dir, "tombstones"), "tombstone append fell back"
+    assert len(_driver_files(ix.index_dir, "tombstones")) == 2, (
+        "tombstone write fell back"
+    )
     ix.reopen()
     assert "b" not in set(ix.search("sort OR window", limit=10).hits["doc_id"])
 
 
 def test_append_driver_side_refuses_on_schema_surprise(spark, ix):
     st = IndexStorage(spark, ix.index_dir)
-    before = sorted(os.listdir(st.path("manifest")))
+    before = sorted(os.listdir(st.path("field_stats")))
     # missing a column the footer requires -> refuse, write nothing
-    assert not st.append_driver_side("manifest", {"generation": [1]})
+    assert not st.append_driver_side("field_stats", {"segment_id": [1]})
     # unknown table / absent directory -> refuse
     assert not st.append_driver_side("no_such_table", {"x": [1]})
     # length mismatch between columns -> refuse
     assert not st.append_driver_side(
-        "manifest",
+        "field_stats",
         {
-            "generation": [1, 2],
-            "segment_id": [0],
+            "segment_id": [0, 1],
+            "field": ["content"],
+            "doc_count": [1],
+            "total_tokens": [1],
             "docid_lo": [0],
             "docid_hi": [1],
-            "doc_count": [1],
-            "status": ["sealed"],
-            "built_at": [0.0],
-            "superseded_at": [None],
-            "sealed_at": [None],
         },
     )
-    assert sorted(os.listdir(st.path("manifest"))) == before
+    assert sorted(os.listdir(st.path("field_stats"))) == before

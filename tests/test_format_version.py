@@ -1,17 +1,15 @@
 """On-disk format check at open (``IndexStorage.check_format``).
 
-``index_meta.json`` carries ``format_version``; engines and maintenance
-facades check it once when they open the index, with no Spark job, and
-commits never re-check the layout.  An index whose meta predates the
-field is classified from one postings footer and one tombstone footer.
-These tests pin:
+``index_meta.json`` and ``manifest.json`` carry ``format_version``;
+engines and maintenance facades check it once when they open the index,
+with no Spark job, and commits never re-check the layout.  These tests
+pin:
 
-* each legacy layout (postings without the embedded dictionary, absolute
-  entry docids, a physical ``terms/`` table, tombstones without
-  ``generation``) is refused at open, naming what is missing;
-* an index written without ``format_version`` opens, scores
-  hash-identical to the index as built, and the next commit persists the
-  version;
+* the build records version 2 in both files;
+* an index without the version (every layout written before the field
+  existed), a version-1 index and an unknown version are refused at
+  open, by engine and maintenance alike, with a message naming the
+  version and asking for a rebuild — and refusing runs no Spark job;
 * opening and checking launch no Spark job, and a steady micro-batch of
   the stream sink schedules none of its own.
 """
@@ -28,12 +26,15 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
-from frankensearch_spark.functions.codec import with_decoded_docids
 from frankensearch_spark.index import LexicalIndex
 from frankensearch_spark.operators.maintenance import IndexMaintenance
-from frankensearch_spark.sources.storage import FORMAT_VERSION, INDEX_META, IndexStorage
+from frankensearch_spark.sources.storage import (
+    FORMAT_VERSION,
+    INDEX_META,
+    MANIFEST,
+    IndexStorage,
+)
 from frankensearch_spark.sources.transcripts import synthetic_transcripts
 
 QUERIES = ["w3", "w3 w47 w200", "w12 AND w47", '"w12 w47"']
@@ -59,13 +60,6 @@ def _meta(d) -> dict:
         return json.load(fh)
 
 
-def _strip_version(d) -> None:
-    meta = _meta(d)
-    meta.pop("format_version")
-    with open(os.path.join(d, INDEX_META), "w") as fh:
-        json.dump(meta, fh)
-
-
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fmt_ix"))
@@ -82,93 +76,64 @@ def _copy(built, tmp_path, name="copy") -> str:
 
 def test_build_records_format_version(built):
     assert _meta(built[0])["format_version"] == FORMAT_VERSION
+    with open(os.path.join(built[0], MANIFEST)) as fh:
+        assert json.load(fh)["format_version"] == FORMAT_VERSION
 
 
-def test_meta_without_format_version_opens_hash_identical(spark, built, tmp_path):
+def _as_older_index(d, version) -> None:
+    """Rewrite a copy into what an older writer left: its meta carries
+    ``version`` (None: no field) and there is no manifest record."""
+    meta = _meta(d)
+    meta.pop("format_version")
+    if version is not None:
+        meta["format_version"] = version
+    with open(os.path.join(d, INDEX_META), "w") as fh:
+        json.dump(meta, fh)
+    os.remove(os.path.join(d, MANIFEST))
+
+
+@pytest.mark.parametrize(
+    "version, found",
+    [(None, "no format_version"), (1, "format_version 1")],
+    ids=["unversioned", "v1"],
+)
+def test_unversioned_and_v1_refused_at_open(spark, built, tmp_path, version, found):
     d = _copy(built, tmp_path)
-    _strip_version(d)
-    idx = LexicalIndex(spark, d)
-    assert idx.engine.meta.format_version == FORMAT_VERSION  # classified
-    assert _digest(idx) == built[1]
-    assert "format_version" not in _meta(d)  # opening wrote nothing
-    # the next commit's meta write persists the classification
-    one = spark.createDataFrame([("zz:0", "w3 w12 zzfresh")], "doc_id string, content string")
-    idx.upsert(one)
-    assert _meta(d)["format_version"] == FORMAT_VERSION
+    _as_older_index(d, version)
 
+    def refuse(open_fn):
+        with pytest.raises(RuntimeError) as err:
+            open_fn()
+        text = str(err.value)
+        assert found in text and "Rebuild" in text, text
+        assert f"format_version {FORMAT_VERSION}" in text, text
 
-def _postings_without_dictionary(spark, storage):
-    p = spark.read.parquet(storage.path("postings"))
-    return p.drop("term_df", "term_cf")
-
-
-def _postings_with_absolute_entries(spark, storage):
-    p = spark.read.parquet(storage.path("postings"))
-    return (
-        with_decoded_docids(p)
-        .withColumn(
-            "entries",
-            F.expr(
-                "zip_with(dec, entries, (id, e) -> "
-                "struct(id as docid, e.freq as freq, e.fnid as fnid))"
-            ),
-        )
-        .drop("dec")
+    n = _jobs_in_group(
+        spark,
+        f"fmt-refuse-{version}",
+        lambda: (
+            refuse(lambda: LexicalIndex(spark, d).engine),
+            refuse(lambda: IndexMaintenance(spark, d)),
+        ),
     )
-
-
-def _make_legacy(spark, d, layout):
-    storage = IndexStorage(spark, d)
-    if layout in ("no_term_df", "absolute_entries"):
-        make = (
-            _postings_without_dictionary
-            if layout == "no_term_df"
-            else _postings_with_absolute_entries
-        )
-        storage.atomic_rewrite(
-            "postings", make(spark, storage), partition_by=("segment_id", "bucket")
-        )
-    elif layout == "terms_dir":
-        terms = IndexStorage.derive_terms(spark.read.parquet(storage.path("postings")))
-        terms.write.partitionBy("bucket").parquet(storage.path("terms"))
-    else:  # tombstones written before they carried their generation
-        os.makedirs(storage.path("tombstones"), exist_ok=True)
-        pq.write_table(
-            pa.table({"docid": pa.array([0], pa.int64()), "segment_id": pa.array([0], pa.int32())}),
-            os.path.join(storage.path("tombstones"), "part-00000.parquet"),
-        )
-
-
-#: what the refusal names for each legacy layout
-LEGACY_MESSAGES = {
-    "no_term_df": r"postings lack the embedded term dictionary \(term_df/term_cf\)",
-    "absolute_entries": "posting entries store absolute docids",
-    "terms_dir": "physical terms/ table",
-    "tombstones_no_generation": "tombstones lack the generation column",
-}
-
-
-@pytest.mark.parametrize("layout", list(LEGACY_MESSAGES))
-def test_legacy_layout_refused_at_open(spark, built, tmp_path, layout):
-    message = LEGACY_MESSAGES[layout]
-    d = _copy(built, tmp_path, layout)
-    _make_legacy(spark, d, layout)
-    _strip_version(d)
-    with pytest.raises(RuntimeError, match=message) as err:
-        LexicalIndex(spark, d).engine
-    assert "refusing to open legacy index" in str(err.value)
-    with pytest.raises(RuntimeError, match=message):
-        IndexMaintenance(spark, d)
+    assert n == 0
 
 
 def test_unknown_format_version_refused(spark, built, tmp_path):
     d = _copy(built, tmp_path)
-    meta = _meta(d)
-    meta["format_version"] = FORMAT_VERSION + 1
-    with open(os.path.join(d, INDEX_META), "w") as fh:
-        json.dump(meta, fh)
-    with pytest.raises(RuntimeError, match="format_version"):
-        LexicalIndex(spark, d).engine
+    for name in (INDEX_META, MANIFEST):
+        with open(os.path.join(d, name)) as fh:
+            doc = json.load(fh)
+        doc["format_version"] = FORMAT_VERSION + 1
+        with open(os.path.join(d, name), "w") as fh:
+            json.dump(doc, fh)
+        with pytest.raises(RuntimeError, match="format_version"):
+            LexicalIndex(spark, d).engine
+        with pytest.raises(RuntimeError, match="format_version"):
+            IndexMaintenance(spark, d).seal()
+        doc["format_version"] = FORMAT_VERSION
+        with open(os.path.join(d, name), "w") as fh:
+            json.dump(doc, fh)
 
 
 def _jobs_in_group(spark, group, fn):
@@ -184,21 +149,18 @@ def _jobs_in_group(spark, group, fn):
 
 def test_open_and_format_check_run_no_spark_job(spark, built, tmp_path):
     d = _copy(built, tmp_path)
-    assert LexicalIndex(spark, d).delete(["conv-00000000:1"]) == 1  # a tombstone footer to classify
-    for stripped in (False, True):
-        if stripped:
-            _strip_version(d)
-        storage = IndexStorage(spark, d)
-        n = _jobs_in_group(
-            spark,
-            f"fmt-open-{stripped}",
-            lambda: (
-                LexicalIndex(spark, d).engine,
-                IndexMaintenance(spark, d),
-                storage.check_format(storage.read_meta()),
-            ),
-        )
-        assert n == 0, (stripped, n)
+    assert LexicalIndex(spark, d).delete(["conv-00000000:1"]) == 1
+    storage = IndexStorage(spark, d)
+    n = _jobs_in_group(
+        spark,
+        "fmt-open",
+        lambda: (
+            LexicalIndex(spark, d).engine,
+            IndexMaintenance(spark, d),
+            storage.check_format(storage.read_meta()),
+        ),
+    )
+    assert n == 0
 
 
 # ── steady stream batch: no Spark job of the sink's own ────────────────────

@@ -180,7 +180,7 @@ def test_upsert_unchanged_batch_is_skipped(spark, batches, tmp_path_factory):
     assert new_segments == []  # zero new segments
     idx.reopen()
     assert idx.storage.live_segments() == segs_before
-    assert not idx.storage.table_exists("tombstones")  # zero tombstones
+    assert not idx.storage.read_manifest()["tombstone_files"]  # zero tombstones
     for q in QUERIES:
         assert _hits(idx, q) == before[q], q
     # a partially-changed batch indexes ONLY the changed docs
@@ -194,7 +194,7 @@ def test_upsert_unchanged_batch_is_skipped(spark, batches, tmp_path_factory):
     changed_id = one.collect()[0]["doc_id"]
     assert list(idx.search("zzchanged", limit=5).hits["doc_id"]) == [changed_id]
     # exactly one doc was tombstoned + one new doc indexed
-    assert idx.storage.read("tombstones").count() == 1
+    assert idx.storage.read_tombstones(idx.storage.read_manifest()).count() == 1
     live = idx.engine._filter_tombstones(
         idx.engine._read_live("docs").select("docid", "doc_id")
     )
@@ -222,20 +222,27 @@ def test_delete_snapshot_pinning(spark, batches, tmp_path_factory):
 
 
 def test_upsert_staged_tombstones_gated_by_generation(spark, batches, tmp_path_factory):
-    """A crash between upsert's tombstone write and its manifest append
-    must leave readers on the complete OLD generation (tombstones staged
-    for g+1 are ignored while the manifest max generation is g)."""
+    """Tombstones tagged for generation g+1 are ignored while the
+    record's max generation is g, even once a record names their file
+    (a crashed upsert's staged files are not even named)."""
     b1, _ = batches
     d = str(tmp_path_factory.mktemp("gate_ix"))
     idx = LexicalIndex.build_transcripts(spark, b1, d, num_segments=2, num_buckets=4)
     before = _hits(idx, "w3")
     g = idx.storage.current_generation()
     victims = [doc for doc, _ in before[:3]]
-    # simulate the staged (pre-publish) tombstone write of an upsert
+    # the staged (pre-publish) tombstone write of an upsert
     ids = spark.createDataFrame([(v,) for v in victims], "doc_id string")
-    idx.maintenance.delete_frame(ids, generation=g + 1)
+    m = idx.maintenance
+    rec = m.storage.read_manifest()
+    n, files = m._stage_tombstones(rec, ids, generation=g + 1)
+    assert n == len(victims)
     idx.reopen()
-    # no manifest row with g+1 exists -> staged deletes are invisible
+    assert _hits(idx, "w3") == before  # unnamed: invisible
+    m.storage.publish(dict(rec, tombstone_files=rec["tombstone_files"] + files))
+    idx.reopen()
+    # no segment row with g+1 exists -> the named staged deletes are
+    # still invisible
     assert _hits(idx, "w3") == before
 
 
@@ -525,10 +532,10 @@ def test_gc_without_expiry_sweeps_crash_orphans(spark, tmp_path_factory):
 
 
 def test_gc_refreshes_meta_before_floor_write(spark, tmp_path_factory):
-    """gc() must not regress on-disk meta written by OTHER maintenance
-    instances since this one was constructed (round-4 ADVICE): the
-    history_floor write re-reads meta instead of persisting the stale
-    construction-time snapshot."""
+    """gc() must not regress state written by OTHER maintenance
+    instances since this one was constructed (round-4 ADVICE): every
+    commit derives its record from the one in force, so the floor and
+    the generation it publishes include the other instance's upsert."""
     from frankensearch_spark.operators.maintenance import IndexMaintenance
     from frankensearch_spark.sources.transcripts import synthetic_transcripts
 
@@ -548,44 +555,9 @@ def test_gc_refreshes_meta_before_floor_write(spark, tmp_path_factory):
     )
     gen_after_upsert = stale.storage.current_generation()
     assert gen_after_upsert == 2
-    stale.gc()  # must NOT write generation=1 meta back to disk
-    meta = stale.storage.read_meta()
-    assert meta.generation == gen_after_upsert
-    assert meta.history_floor == gen_after_upsert
-
-
-def test_supersede_dedup_is_deterministic_max_generation(spark, tmp_path_factory):
-    """Crash-replay can leave two manifest rows for one segment (both
-    superseded_at NULL) differing in generation/docid span; the supersede
-    rewrite must keep the MAX-generation row deterministically, not an
-    arbitrary dropDuplicates pick (round-4 ADVICE)."""
-    from frankensearch_spark.sources.transcripts import synthetic_transcripts
-
-    d = str(tmp_path_factory.mktemp("dedup_ix"))
-    corpus = synthetic_transcripts(spark, 300, vocab_size=100)
-    idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=2, num_buckets=4)
-    segs = idx.storage.live_segments()
-    victim = segs[0]
-    man = idx.storage.read("manifest")
-    # simulate a replay remnant: a second row for `victim` at a LOWER
-    # generation with a narrower docid span
-    dup = man.where(F.col("segment_id") == victim).withColumn(
-        "generation", F.lit(0).cast(man.schema["generation"].dataType.simpleString())
-    ).withColumn("docid_hi", F.col("docid_lo") + 1)
-    idx.storage.write_table(dup, "manifest", "append", coalesce=1)
-    out = idx.maintenance.concat_merge(segs)
-    rows = (
-        idx.storage.read("manifest")
-        .where(F.col("segment_id") == victim)
-        .collect()
-    )
-    assert len(rows) == 1  # one row per (segment, superseded_at)
-    # the max-generation replay row won, with its full docid span
-    assert int(rows[0]["generation"]) == 1
-    assert int(rows[0]["docid_hi"]) > int(rows[0]["docid_lo"]) + 1
-    # and the merge output serves identical results
-    idx.reopen()
-    assert idx.storage.live_segments() == [out]
+    stale.gc()  # must NOT publish the generation-1 state back
+    assert stale.storage.current_generation() == gen_after_upsert
+    assert stale.storage.read_manifest()["history_floor"] == gen_after_upsert
 
 
 def test_bulk_delete_writes_multiple_tombstone_files(spark, tmp_path_factory, monkeypatch):

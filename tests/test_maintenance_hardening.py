@@ -31,23 +31,22 @@ def _build(spark, d, docs):
 
 
 def test_compaction_never_folds_orphan_tombstones(spark, tmp_path_factory):
-    """A crashed upsert leaves tombstone rows at a generation with NO
-    manifest row (staged pre-publish, manifest append never ran).  No
-    reader applies them (generation > committed watermark), so compaction
-    must not physically drop those docids — that would silently delete
-    visible docs until the batch's replay."""
+    """A crashed upsert leaves tombstone files no record names
+    (staged pre-publish, the publish never ran).  No reader applies them,
+    so compaction must not physically drop those docids — that would
+    silently delete visible docs until the batch's replay."""
     d = str(tmp_path_factory.mktemp("orphan_ix"))
     idx = _build(spark, d, [("x", "alpha keepme"), ("y", "bravo dropme"),
                             ("z", "charlie filler")])
     m = idx.maintenance
     orphan_gen = m.storage.current_generation(include_unsealed=True) + 1
     # simulate the crash window: stage tombstones tagged with the next
-    # generation, then never append the manifest (exactly upsert's
-    # pre_publish state when the commit dies before publish)
+    # generation, then never publish (exactly upsert's pre_publish state
+    # when the commit dies before publish)
     ids = spark.createDataFrame([("x",)], "doc_id string")
-    staged = m.delete_frame(
-        ids, generation=orphan_gen, include_unsealed=True,
-        refresh_open_state=False,
+    staged, _files = m._stage_tombstones(
+        m.storage.read_manifest(), ids, generation=orphan_gen,
+        include_unsealed=True,
     )
     assert staged == 1
     # readers exclude the orphan: x is still visible
@@ -65,18 +64,16 @@ def test_compaction_never_folds_orphan_tombstones(spark, tmp_path_factory):
 def test_zero_survivor_compaction_keeps_docid_span_across_gc(
     spark, tmp_path_factory
 ):
-    """Compacting a fully-dead segment must publish a doc_count=0 manifest
-    row carrying its docid span: after gc(expire_history=True) drops the
-    superseded rows, next_bases() must not regress below the dead
+    """Compacting a fully-dead segment must publish a doc_count=0 record
+    row carrying its docid span, and after gc(expire_history=True) drops
+    the superseded rows, next_bases() must not regress below the dead
     segment's high watermark (docids are never reused)."""
     d = str(tmp_path_factory.mktemp("deadseg_ix"))
     idx = _build(spark, d, [(f"d{i:02d}", f"alpha w{i}") for i in range(16)])
     hi_before, _ = idx.storage.next_bases()
     # kill every doc in the highest-docid segment
-    man = idx.storage.read("manifest")
-    top = (
-        man.orderBy(F.desc("docid_hi")).select("segment_id").first()["segment_id"]
-    )
+    rows = idx.storage.read_manifest()["segments"]
+    top = max(rows, key=lambda r: r["docid_hi"])["segment_id"]
     victims = [
         r["doc_id"]
         for r in idx.storage.read("docs")
@@ -93,7 +90,7 @@ def test_zero_survivor_compaction_keeps_docid_span_across_gc(
     idx.maintenance.gc(expire_history=True, orphan_grace_sec=0)
     hi_after, _ = LexicalIndex(spark, d).storage.next_bases()
     assert hi_after >= hi_before, (
-        "gc expired the only manifest row carrying the dead segment's span — "
+        "gc expired the only record row carrying the dead segment's span — "
         "next upsert would re-mint previously assigned docids"
     )
 
@@ -177,17 +174,19 @@ def test_bulk_load_single_distinct_key_completes(spark, tmp_path_factory):
 def test_write_meta_never_regresses_history_floor(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("floor_ix"))
     idx = _build(spark, d, [(f"d{i}", f"alpha w{i}") for i in range(8)])
-    stale = IndexMaintenance(spark, d)  # captures meta with floor 0
+    stale = IndexMaintenance(spark, d)  # constructed at floor 0
     # build some history and expire it, advancing the floor on disk
     idx.delete(["d0"])
     idx.maintenance.compact(max_density=0.01)
     idx.maintenance.gc(expire_history=True, orphan_grace_sec=0)
-    floor = idx.storage.read_meta().history_floor
+    floor = idx.storage.read_manifest()["history_floor"]
     assert floor > 0
-    # the stale facade persists its whole snapshot (as seal/upsert do)
+    # the stale facade rewrites its meta and commits: the floor lives in
+    # the record, which every commit derives from the one in force
     stale.storage.write_meta(stale.meta)
-    assert idx.storage.read_meta().history_floor >= floor, (
-        "stale write_meta regressed history_floor — at_generation readers "
+    stale.delete(["d1"])
+    assert idx.storage.read_manifest()["history_floor"] >= floor, (
+        "a stale facade regressed history_floor — at_generation readers "
         "would be admitted onto gc-deleted history"
     )
 

@@ -86,7 +86,10 @@ def equiv_pair(spark, tmp_path_factory):
 
 
 def _rows(spark, index, table, cols=None):
-    df = IndexStorage(spark, index.index_dir).read(table)
+    st = IndexStorage(spark, index.index_dir)
+    if table == "manifest":  # the record's segment rows
+        return sorted(tuple(r[c] for c in cols) for r in st.read_manifest()["segments"])
+    df = st.read(table)
     if cols:
         df = df.select(*cols)
     return sorted(map(tuple, df.collect()))
@@ -243,8 +246,8 @@ def test_stream_file_route_distrusts_transformed_sources(spark, tmp_path, monkey
 
 
 def test_identity_cache_invalidated_by_distributed_writer(spark, tmp_path):
-    """A distributed mutation between driver commits changes the docs
-    listing; the mirror must rebuild, not serve stale rows."""
+    """A distributed mutation between driver commits publishes a new
+    record; the mirror must rebuild, not serve stale rows."""
     corpus = synthetic_transcripts(spark, 6_000, partitions=8)
     index = LexicalIndex.build_transcripts(
         spark, corpus, os.path.join(tmp_path, "ix"),
@@ -258,7 +261,7 @@ def test_identity_cache_invalidated_by_distributed_writer(spark, tmp_path):
         b1.toArrow(), sort_cols=("conv_id", "turn_idx")
     )
     # distributed upsert of the SAME identities with different content →
-    # docs listing changes under the mirror
+    # a publish the mirror did not make
     b2 = b1.withColumn("content", F.concat(F.col("content"), F.lit(" changed")))
     maint2 = index.maintenance
     maint2.upsert(b2, sort_cols=("conv_id", "turn_idx"))

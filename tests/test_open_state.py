@@ -1,27 +1,25 @@
-"""Commit-time open-state rollup: zero-Spark-job engine open.
+"""The manifest record: zero-Spark-job engine open from one JSON file.
 
 The reference's keeper opens a 1M-doc index in ≤50 ms (QG-9,
-COMPREHENSIVE_PLAN §keeper cold open); the Spark analogue persists the
-open-time questions (manifest snapshot rows, default-view stats rollup,
-tombstone count) into ``open_state.json`` at every mutation's publish
-point, fingerprinted against the manifest/tombstone/field_stats file
-listings so staleness fails safe (fall back to the Spark jobs).
+COMPREHENSIVE_PLAN §keeper cold open); here every commit publishes one
+``manifest.json`` — segment rows with per-field stats, the tombstone file
+names and the default view's tombstone count — and an engine open reads
+it once, with no Spark job and no directory listing.
 
-These tests pin: zero jobs at open, byte-identical state vs the fallback
-path, refresh at every mutation publish point, fail-safe fallback on a
-stale fingerprint, and that dirty/time-travel opens re-derive their view.
+These tests pin: zero jobs at open for every view, the record's state
+equal to a Spark recount from the data tables after every mutation
+(field_stats sums over the live segments, a distinct count of the named
+tombstones), a count the record leaves unknown counted exactly on use,
+and pinned tombstone files outliving the record that replaces them.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 import numpy as np
-import pytest
+from pyspark.sql import functions as F
 
 from frankensearch_spark.index import LexicalIndex
-from frankensearch_spark.sources.storage import OPEN_STATE
+from frankensearch_spark.sources.storage import pin_segments
 from frankensearch_spark.sources.transcripts import synthetic_transcripts
 
 
@@ -45,6 +43,7 @@ def _jobs_during_open(spark, index_dir, group, **kw):
 
 
 def _engine_state(engine):
+    engine._tombstones  # resolves a count the record left unknown
     return (
         engine.generation,
         engine.live_segments,
@@ -52,6 +51,42 @@ def _engine_state(engine):
         {f: round(v, 12) for f, v in engine.avgdl.items()},
         engine.field_tokens,
         engine._tombstone_count,
+    )
+
+
+def _recounted_state(engine):
+    """The engine's open state recomputed with Spark from the data
+    tables: stats from ``field_stats`` over the live segments, the
+    tombstone count as a distinct count of the view's named files."""
+    st = engine.storage
+    rows = (
+        pin_segments(st.read("field_stats"), engine.live_segments)
+        .dropDuplicates(["segment_id", "field"])
+        .groupBy("field")
+        .agg(F.sum("doc_count").alias("d"), F.sum("total_tokens").alias("t"))
+        .collect()
+    )
+    stats = {r["field"]: (int(r["d"]), int(r["t"])) for r in rows}
+    n_docs = max((d for d, _ in stats.values()), default=0)
+    df, n_tomb = st.pinned_tombstones(
+        engine.generation,
+        engine._tombstone_files,
+        live_segments=engine.live_segments,
+        include_unsealed=engine._include_unsealed,
+        gen_state=engine._gen_state,
+    )
+    if df is not None:
+        df.unpersist()
+    return (
+        engine.generation,
+        engine.live_segments,
+        n_docs,
+        {
+            f: round(stats.get(f, (0, 0))[1] / n_docs if n_docs else 0.0, 12)
+            for f in engine.meta.text_fields
+        },
+        {f: t for f, (_, t) in stats.items()},
+        n_tomb,
     )
 
 
@@ -64,33 +99,26 @@ def test_open_is_zero_spark_jobs_and_matches_fallback(spark, tmp_path_factory):
     idx, d = _build(spark, tmp_path_factory, "os_zero")
     fast_idx, fast, n_jobs = _jobs_during_open(spark, d, "os-zero-open")
     assert n_jobs == 0  # the QG-9 contract: open issues no Spark actions
-    fast_hits = _hits(fast_idx, "w3 w7")
-    # fallback path (open_state removed) must produce IDENTICAL state
-    os.remove(os.path.join(d, OPEN_STATE))
-    slow_idx = LexicalIndex(spark, d)
-    assert _engine_state(slow_idx.engine) == _engine_state(fast)
-    assert _hits(slow_idx, "w3 w7") == fast_hits
+    # the record's state equals a Spark recount from the data tables
+    assert _engine_state(fast) == _recounted_state(fast)
+    assert _hits(fast_idx, "w3 w7") == _hits(LexicalIndex(spark, d), "w3 w7")
 
 
 def test_open_state_refreshed_by_every_mutation(spark, tmp_path_factory):
     idx, d = _build(spark, tmp_path_factory, "os_mut")
-    path = os.path.join(d, OPEN_STATE)
+    seqs = [idx.storage.read_manifest()["seq"]]
 
-    def assert_valid_and_identical(tag):
-        # rollup present and fingerprint-fresh
-        assert idx.storage.read_open_state() is not None, tag
+    def assert_published_and_exact(tag):
+        seq = idx.storage.read_manifest()["seq"]
+        assert seq == seqs[-1] + 1, (tag, seqs, seq)  # exactly one publish
+        seqs.append(seq)
         _, fast, n_jobs = _jobs_during_open(spark, d, f"os-mut-{tag}")
         assert n_jobs == 0, tag
-        saved = json.load(open(path))
-        os.remove(path)
-        slow = LexicalIndex(spark, d).engine
-        assert _engine_state(slow) == _engine_state(fast), tag
-        json.dump(saved, open(path, "w"))  # restore for the next step
+        assert _engine_state(fast) == _recounted_state(fast), tag
 
-    assert_valid_and_identical("build")
     victim = idx.search("w1", limit=1).hits["doc_id"][0]
     idx.delete([victim])
-    assert_valid_and_identical("delete")
+    assert_published_and_exact("delete")
     conv_id, turn_idx = victim.rsplit(":", 1)
     replacement = spark.createDataFrame(
         [(victim, conv_id, int(turn_idx), "user", None, "fresh replacement text")],
@@ -98,7 +126,7 @@ def test_open_state_refreshed_by_every_mutation(spark, tmp_path_factory):
         "tool string, content string",
     )
     idx.maintenance.upsert(replacement, sort_cols=("conv_id", "turn_idx"))
-    assert_valid_and_identical("upsert")
+    assert_published_and_exact("upsert")
     # unsealed upsert + seal
     unsealed_doc = spark.createDataFrame(
         [("zz:9", "zz", 9, "user", None, "pending unsealed doc")],
@@ -106,9 +134,9 @@ def test_open_state_refreshed_by_every_mutation(spark, tmp_path_factory):
         "tool string, content string",
     )
     idx.maintenance.upsert(unsealed_doc, sort_cols=("conv_id", "turn_idx"), seal=False)
-    assert_valid_and_identical("unsealed-upsert")
+    assert_published_and_exact("unsealed-upsert")
     idx.maintenance.seal()
-    assert_valid_and_identical("seal")
+    assert_published_and_exact("seal")
     # delete enough docs of one segment to trigger compaction
     seg0_docs = (
         idx.storage.read("docs")
@@ -118,40 +146,20 @@ def test_open_state_refreshed_by_every_mutation(spark, tmp_path_factory):
         .collect()
     )
     idx.delete([r["doc_id"] for r in seg0_docs])
+    assert_published_and_exact("delete-many")
     mapping = idx.maintenance.compact(max_density=0.05)
     assert mapping
-    assert_valid_and_identical("compact")
+    assert_published_and_exact("compact")
     live = idx.storage.live_segments()
     idx.maintenance.concat_merge(live)
-    assert_valid_and_identical("merge")
+    assert_published_and_exact("merge")
     idx.maintenance.gc()
-    assert_valid_and_identical("gc")
-
-
-def test_stale_open_state_falls_back_safely(spark, tmp_path_factory):
-    idx, d = _build(spark, tmp_path_factory, "os_stale")
-    before = _hits(idx, "w3 w7")
-    path = os.path.join(d, OPEN_STATE)
-    state = json.load(open(path))
-    # simulate a crash between the manifest publish and the open_state
-    # write: fingerprint no longer matches the directory listings
-    state["fingerprint"]["manifest"].append("part-bogus.parquet")
-    # AND poison the rollup so using it would be visibly wrong
-    state["stats"] = {"content": [1, 1]}
-    state["tombstone_count"] = 12345
-    json.dump(state, open(path, "w"))
-    assert idx.storage.read_open_state() is None  # stale -> rejected
-    reopened = LexicalIndex(spark, d)
-    assert reopened.engine.doc_count == idx.engine.doc_count
-    assert _hits(reopened, "w3 w7") == before
-    # corrupt JSON is equally fail-safe
-    with open(path, "w") as fh:
-        fh.write("{not json")
-    assert idx.storage.read_open_state() is None
-    assert _hits(LexicalIndex(spark, d), "w3 w7") == before
+    assert_published_and_exact("gc")
 
 
 def test_dirty_and_time_travel_opens_rederive_their_view(spark, tmp_path_factory):
+    """Every view's stats are the sum of its live segments' record rows:
+    dirty and time-travel opens run no stats job either."""
     idx, d = _build(spark, tmp_path_factory, "os_views")
     pending = spark.createDataFrame(
         [("pp:0", "pp", 0, "user", None, "zzunsealed pending marker")],
@@ -159,17 +167,20 @@ def test_dirty_and_time_travel_opens_rederive_their_view(spark, tmp_path_factory
         "tool string, content string",
     )
     idx.maintenance.upsert(pending, sort_cols=("conv_id", "turn_idx"), seal=False)
-    # default open: rollup applies, pending batch invisible
+    # default open: pending batch invisible
     _, default_eng, n_default = _jobs_during_open(spark, d, "os-views-default")
     assert n_default == 0
     assert default_eng.doc_count == 400
-    # dirty open: rollup must NOT apply (its stats describe the sealed
-    # view); the pending doc is visible and counted
-    dirty = LexicalIndex(spark, d, include_unsealed=True)
-    assert dirty.engine.doc_count == 401
+    # dirty open: the pending doc is visible and counted
+    dirty, dirty_eng, n_dirty = _jobs_during_open(
+        spark, d, "os-views-dirty", include_unsealed=True
+    )
+    assert n_dirty == 0
+    assert dirty_eng.doc_count == 401
+    assert _engine_state(dirty_eng) == _recounted_state(dirty_eng)
     assert list(dirty.search("zzunsealed", limit=5).hits["doc_id"]) == ["pp:0"]
     assert idx.search("zzunsealed", limit=5).hits.empty
-    # time-travel open: stats re-derived at the pinned generation
+    # time-travel open: stats of the pinned generation
     idx.maintenance.seal()
     idx.maintenance.upsert(
         spark.createDataFrame(
@@ -181,29 +192,33 @@ def test_dirty_and_time_travel_opens_rederive_their_view(spark, tmp_path_factory
     )
     # the sealed batch activated at generation 3 (seal mints a fresh
     # generation); the later replacement committed generation 4
-    past = LexicalIndex(spark, d, at_generation=3)
+    past, past_eng, n_past = _jobs_during_open(
+        spark, d, "os-views-past", at_generation=3
+    )
+    assert n_past == 0
     assert list(past.search("zzunsealed", limit=5).hits["doc_id"]) == ["pp:0"]
-    assert past.engine.doc_count == 401
+    assert past_eng.doc_count == 401
+    assert _engine_state(past_eng) == _recounted_state(past_eng)
 
 
 def test_lazy_tombstone_pin_excludes_post_open_deletes(spark, tmp_path_factory):
-    """Round-4 fix: the open_state path defers the tombstone FRAME to the
-    first query, but the FILE SET is pinned at open — a delete issued
-    after open (tagged with the same pinned generation) must stay
-    invisible until reopen, exactly like the eager path."""
+    """The tombstone FRAME is built on the first query, but the FILE SET
+    is the one the record named at open — a delete issued after open
+    (tagged with the same pinned generation) stays invisible until
+    reopen."""
     idx, d = _build(spark, tmp_path_factory, "os_lazy_pin")
     all_ids = list(idx.search("w1", limit=400).hits["doc_id"])
     assert len(all_ids) >= 2
-    idx.delete([all_ids[0]])  # open_state now records tombstone_count > 0
+    idx.delete([all_ids[0]])  # the record now counts one tombstone
 
     reader = LexicalIndex(spark, d)
-    eng = reader.engine  # opens via open_state: lazy tombstone frame
-    assert eng._tombstones_pending  # frame NOT materialized yet
+    eng = reader.engine
+    assert eng._tombstones_pending  # frame NOT built yet
 
     victim = all_ids[1]
     LexicalIndex(spark, d).delete([victim])  # post-open delete
 
-    # first query materializes the lazy frame: open-time pin must hold
+    # first query builds the lazy frame: the open-time pin must hold
     visible = set(reader.search("w1", limit=400).hits["doc_id"])
     assert victim in visible  # post-open delete invisible to pinned reader
     assert all_ids[0] not in visible  # pre-open delete applied
@@ -213,9 +228,9 @@ def test_lazy_tombstone_pin_excludes_post_open_deletes(spark, tmp_path_factory):
 
 
 def test_gc_grace_protects_fresh_unpublished_dirs(spark, tmp_path_factory):
-    """Round-4 fix: an unreferenced segment dir younger than the grace
-    window looks like an in-flight writer's un-published output and must
-    survive gc; past the grace (forced to 0) it is swept as an orphan."""
+    """An unreferenced segment dir younger than the grace window looks
+    like an in-flight writer's unpublished output and must survive gc;
+    past the grace (forced to 0) it is swept as an orphan."""
     import os as _os
 
     idx, d = _build(spark, tmp_path_factory, "os_gc_grace")
@@ -230,72 +245,72 @@ def test_gc_grace_protects_fresh_unpublished_dirs(spark, tmp_path_factory):
 
 
 def test_delete_updates_rollup_incrementally(spark, tmp_path_factory):
-    """Round-4 fix: an interactive delete must not re-run the full
-    tombstone distinct-count (at 10^9+ tombstones that job dominates a
-    one-doc delete) — with a fingerprint-valid prior rollup the count
-    updates as ``prior + newly_appended`` with zero extra Spark jobs,
-    verified exact via the new files' parquet footers.  Pinned by making
-    the full-recompute kernel unreachable during the delete."""
+    """An interactive delete must not re-run the tombstone distinct-count
+    (at 10^9+ tombstones that job dominates a one-doc delete): the
+    record's count grows by exactly the newly tombstoned docids.  Pinned
+    by making the counting kernel unreachable during the deletes."""
     from frankensearch_spark.sources.storage import IndexStorage
 
     idx, d = _build(spark, tmp_path_factory, "os_incr")
     ids = list(idx.search("w1", limit=400).hits["doc_id"])
     assert len(ids) >= 3
-    st = idx.storage
     # CLASS-level patch: LexicalIndex.maintenance constructs a fresh
-    # IndexMaintenance (own IndexStorage) per call, so an instance patch
-    # on idx.storage would never reach the delete path
+    # IndexMaintenance (own IndexStorage) per call
     orig_pt = IndexStorage.pinned_tombstones
 
-    def boom(self, *a, **k):  # the full rollup's one tombstone-count entry
-        raise AssertionError("full rollup recompute ran — fast path expected")
+    def boom(self, *a, **k):
+        raise AssertionError("tombstone recount ran — prior + n expected")
 
     IndexStorage.pinned_tombstones = boom
     try:
-        assert idx.delete([ids[0]]) == 1  # first delete: table didn't exist
-        assert idx.delete(ids[1:3]) == 2  # append onto an existing table
-        assert idx.delete([ids[0]]) == 0  # no-op redelete: nothing appended
+        assert idx.delete([ids[0]]) == 1
+        assert idx.delete(ids[1:3]) == 2
+        assert idx.delete([ids[0]]) == 0  # no-op redelete publishes nothing
     finally:
         IndexStorage.pinned_tombstones = orig_pt
-    path = os.path.join(d, OPEN_STATE)
-    fast_state = json.load(open(path))
-    assert fast_state["tombstone_count"] == 3
-    assert st.read_open_state() is not None  # fingerprint fresh
-    # ... and byte-identical to what the full recompute writes
-    st.write_open_state()
-    assert json.load(open(path)) == fast_state
+    rec = idx.storage.read_manifest()
+    assert rec["tombstone_count"] == 3
+    assert len(rec["tombstone_files"]) == 2
+    eng = LexicalIndex(spark, d).engine
+    assert _engine_state(eng) == _recounted_state(eng)
 
 
 def test_rollup_fast_path_fails_safe(spark, tmp_path_factory):
-    """The incremental update must refuse (→ full recompute) whenever its
-    exactness proof fails: a concurrent writer's rows in the new files, a
-    manifest change, or a tombstone rewrite under the prior listing."""
+    """Where a commit cannot know the default view's tombstone count
+    without a Spark job (a sealed upsert or a seal activating staged
+    deletes) the record stores it as unknown — never a guess — and the
+    engine counts it exactly on first use; a later delete keeps it
+    unknown."""
     idx, d = _build(spark, tmp_path_factory, "os_race")
     ids = list(idx.search("w1", limit=400).hits["doc_id"])
-    st = idx.storage
     idx.delete([ids[0]])
-    prior = st.open_state_raw()
-    assert prior is not None
-    # concurrent writer's delete lands after the prior capture: the new
-    # files' footer rows can't equal OUR claimed append -> refuse
-    LexicalIndex(spark, d).delete([ids[1]])
-    assert st._write_open_state_incremental(0, prior) is False
-    # manifest drift -> refuse
-    prior2 = st.open_state_raw()
-    bad = json.loads(json.dumps(prior2))
-    bad["fingerprint"]["manifest"] = ["part-other.parquet"]
-    assert st._write_open_state_incremental(1, bad) is False
-    # rewrite under the prior listing (old files vanished) -> refuse
-    st.rewrite_tombstones(st.read("tombstones"))
-    assert st._write_open_state_incremental(1, prior2) is False
+    assert idx.storage.read_manifest()["tombstone_count"] == 1
+    conv_id, turn_idx = ids[1].rsplit(":", 1)
+    idx.maintenance.upsert(
+        spark.createDataFrame(
+            [(ids[1], conv_id, int(turn_idx), "user", None, "replaced text")],
+            "doc_id string, conv_id string, turn_idx long, role string, "
+            "tool string, content string",
+        ),
+        sort_cols=("conv_id", "turn_idx"),
+    )
+    assert idx.storage.read_manifest()["tombstone_count"] is None
+    idx.delete([ids[2]])
+    assert idx.storage.read_manifest()["tombstone_count"] is None
+    eng = LexicalIndex(spark, d).engine
+    assert eng._tombstone_count is None  # unknown until used
+    assert _engine_state(eng) == _recounted_state(eng)
+    assert eng._tombstone_count == 3
 
 
 def test_gc_reclaims_just_superseded_dirs_within_grace(spark, tmp_path_factory):
-    """Round-4 fix: segments whose history rows gc just expired are
-    provably published (in-flight writes have no manifest row), so the
-    orphan grace window must not defer their reclamation — gc right
-    after a compaction reclaims disk, while a fresh UNPUBLISHED orphan
-    dir in the same pass keeps its grace protection."""
+    """Segments whose history rows gc just expired are provably published
+    (in-flight writes have no record row), so the orphan grace window
+    must not defer their reclamation — gc right after a compaction
+    reclaims disk, while a fresh UNPUBLISHED orphan dir in the same pass
+    keeps its grace protection."""
+    import os
+
     idx, d = _build(spark, tmp_path_factory, "os_gc_sup")
     seg0 = (
         idx.storage.read("docs")
@@ -323,35 +338,43 @@ def test_gc_reclaims_just_superseded_dirs_within_grace(spark, tmp_path_factory):
 
 
 def test_pinned_lazy_tombstones_survive_concurrent_rewrite(spark, tmp_path_factory):
-    """Round-4 fix: the lazily-built pinned tombstone frame must survive
-    a concurrent gc() swapping the tombstone directory between open and
-    the first query (the pinned part files vanish) — it re-derives the
-    same visible set from the rewritten table instead of crashing."""
+    """gc writes the reduced tombstone set as NEW files and deletes a file
+    only when neither its start record nor its published one names it:
+    a reader opened before a gc keeps its pinned files through that gc,
+    and the second gc reclaims them."""
+    import os
+
     idx, d = _build(spark, tmp_path_factory, "os_lazy_gc")
     ids = list(idx.search("w1", limit=400).hits["doc_id"])
     idx.delete([ids[0]])
     reader = LexicalIndex(spark, d)
     eng = reader.engine
-    assert eng._tombstones_pending  # lazy: frame not yet materialized
-    idx.maintenance.gc()  # rewrites the tombstone table (directory swap)
+    assert eng._tombstones_pending  # lazy: frame not yet built
+    pinned = list(eng._tombstone_files)
+    idx.maintenance.gc(orphan_grace_sec=0)  # publishes a rewritten set
+    assert idx.storage.read_manifest()["tombstone_files"] != [
+        os.path.basename(f) for f in pinned
+    ]
+    assert all(os.path.exists(f) for f in pinned)
     visible = set(reader.search("w1", limit=400).hits["doc_id"])
     assert ids[0] not in visible  # the pinned delete still applies
     assert len(visible) == len(ids) - 1  # no doc resurrected
     assert eng._tombstone_count == 1
+    idx.maintenance.gc(orphan_grace_sec=0)  # the second gc reclaims them
+    assert not any(os.path.exists(f) for f in pinned)
+    fresh = set(LexicalIndex(spark, d).search("w1", limit=400).hits["doc_id"])
+    assert fresh == visible
 
 
 def test_open_state_random_mutation_walk(spark, tmp_path_factory):
     """Generalizes the deterministic mutation chain: a seeded random
-    interleaving of the publish protocol's operations must leave a
-    fingerprint-valid rollup after EVERY step, and the zero-job open it
-    serves must be state-identical to the from-scratch fallback open —
-    including the delete fast path composing with compact/merge/gc/seal
-    in arbitrary orders."""
+    interleaving of the publish protocol's operations must leave, after
+    EVERY step, a record whose zero-job open equals a Spark recount from
+    the data tables."""
     import random
 
     idx, d = _build(spark, tmp_path_factory, "os_walk", n=300, segs=3)
     rng = random.Random(20260818)
-    path = os.path.join(d, OPEN_STATE)
     counter = [0]
     pending = [False]
 
@@ -408,34 +431,27 @@ def test_open_state_random_mutation_walk(spark, tmp_path_factory):
         step()
         idx.reopen()  # gc may have swept dirs a stale pin referenced
         tag = f"{i}:{step.__name__}"
-        assert idx.storage.read_open_state() is not None, tag
         _, fast, n_jobs = _jobs_during_open(spark, d, f"walk-{tag}")
         assert n_jobs == 0, tag
-        saved = json.load(open(path))
-        os.remove(path)
-        slow = LexicalIndex(spark, d).engine
-        assert _engine_state(slow) == _engine_state(fast), tag
-        json.dump(saved, open(path, "w"))
+        assert _engine_state(fast) == _recounted_state(fast), tag
+        dirty = LexicalIndex(spark, d, include_unsealed=True).engine
+        assert _engine_state(dirty) == _recounted_state(dirty), tag
 
 
 def test_lazy_tombstone_fallback_semantics(spark, tmp_path_factory):
-    """The rewrite-race fallback's contract, pinned explicitly: (a) it
-    triggers ONLY when the pinned part files actually vanished — other
-    materialization failures re-raise instead of silently changing the
-    scoring set; (b) the re-derived set never resurrects a doc, and its
-    documented drift is monotone-forward only (a post-open delete at the
-    pinned generation becomes visible early), with the count refreshed
-    alongside the frame so the two never desync."""
+    """The pinned tombstone set is exact, with no fallback: a failure
+    while building it surfaces instead of changing the scoring set, and
+    a post-open delete followed by a gc stays invisible to the pinned
+    reader (no early visibility) while nothing is resurrected."""
     from frankensearch_spark.sources.storage import IndexStorage
+    import pytest
 
     idx, d = _build(spark, tmp_path_factory, "os_fb")
     ids = list(idx.search("w1", limit=400).hits["doc_id"])
     idx.delete([ids[0]])
 
-    # (a) files intact + unrelated failure -> re-raise, not fallback
     reader = LexicalIndex(spark, d)
-    eng = reader.engine
-    assert eng._tombstones_pending
+    assert reader.engine._tombstones_pending
     orig_pt = IndexStorage.pinned_tombstones
 
     def flaky(self, *a, **k):
@@ -448,76 +464,15 @@ def test_lazy_tombstone_fallback_semantics(spark, tmp_path_factory):
     finally:
         IndexStorage.pinned_tombstones = orig_pt
 
-    # (b) post-open delete + rewrite: early visibility, consistent count
     reader2 = LexicalIndex(spark, d)
     eng2 = reader2.engine
-    assert eng2._tombstones_pending
     LexicalIndex(spark, d).delete([ids[1]])  # post-open, same generation
-    idx.maintenance.gc()  # swaps the tombstone directory
+    idx.maintenance.gc()
     visible = set(reader2.search("w1", limit=400).hits["doc_id"])
     assert ids[0] not in visible  # pre-open delete applied
-    assert ids[1] not in visible  # documented drift: visible EARLY
-    assert len(visible) == len(ids) - 2  # nothing resurrected
-    assert eng2._tombstone_count == 2  # count refreshed with the frame
-
-
-def test_lazy_tombstone_fallback_refuses_short_rederivation(spark, tmp_path_factory):
-    """If the re-derived tombstone set covers FEWER docids than the
-    open-time count — e.g. the fallback read atomic_rewrite's momentary
-    no-directory window, or gc dropped this reader's rows after a
-    compaction — the engine must raise (reopen required), never cache
-    the short set: caching 0 would silently resurrect deleted docs."""
-    import shutil as _shutil
-
-    idx, d = _build(spark, tmp_path_factory, "os_fb_short")
-    ids = list(idx.search("w1", limit=400).hits["doc_id"])
-    idx.delete([ids[0]])
-    reader = LexicalIndex(spark, d)
-    eng = reader.engine
-    assert eng._tombstones_pending and eng._tombstone_count == 1
-    # simulate the torn window outliving the retries: the table vanishes
-    _shutil.rmtree(idx.storage.path("tombstones"))
-    with pytest.raises(RuntimeError, match="reopen the engine"):
-        reader.search("w1", limit=5)
-
-
-def test_rederive_raises_when_gc_expired_pinned_history(spark, tmp_path_factory):
-    """The count lower-bound alone can be MASKED: post-open deletes at the
-    pinned generation into a still-live segment can inflate the re-derived
-    count past the open-time count while gc(expire_history=True) silently
-    dropped another pinned segment's tombstone rows (resurrecting its
-    deleted docs).  gc also removes the expired segment's manifest rows,
-    so the fallback detects the case set-wise — any pinned live segment
-    with no manifest row left raises instead of trusting the count."""
-    idx, d = _build(spark, tmp_path_factory, "os_fb_gcpin", segs=2)
-    rows = (
-        idx.storage.read("docs").select("doc_id", "segment_id").collect()
-    )
-    segs = sorted({int(r["segment_id"]) for r in rows})
-    assert len(segs) == 2
-    a, b = segs
-    a_ids = [r["doc_id"] for r in rows if int(r["segment_id"]) == a][:3]
-    b_ids = [r["doc_id"] for r in rows if int(r["segment_id"]) == b][:5]
-
-    idx.delete(a_ids)  # open-time tombstones live in segment A
-    reader = LexicalIndex(spark, d)
-    eng = reader.engine
-    assert eng._tombstones_pending and eng._tombstone_count == len(a_ids)
-
-    # post-open deletes at the SAME pinned generation, into segment B:
-    # these alone push the re-derived count past the open-time count
-    LexicalIndex(spark, d).delete(b_ids)
-
-    # supersede ONLY segment A (B stays live), then expire history:
-    # gc drops A's manifest row, tombstone rows, and data dirs
-    m = idx.maintenance
-    _, nxt = idx.storage.next_bases()
-    m._rewrite_segments({a: nxt})
-    m._publish_supersede({a: nxt}, fold_tombstones=True)
-    m.gc()
-
-    with pytest.raises(RuntimeError, match="no manifest row left"):
-        reader.search("w1", limit=5)
+    assert ids[1] in visible  # post-open delete stays invisible
+    assert len(visible) == len(ids) - 1  # nothing resurrected
+    assert eng2._tombstone_count == 1
 
 
 def _jobs_during(spark, group, fn):
@@ -541,121 +496,47 @@ def _unsealed_replacement(spark, idx, doc_id):
     idx.maintenance.upsert(batch, sort_cols=("conv_id", "turn_idx"), seal=False)
 
 
-def test_seal_fast_path_is_zero_jobs_and_matches_spark_path(
-    spark, tmp_path_factory, monkeypatch
-):
-    """The cadence seal (stream sink) flips pending batches with ZERO
-    Spark jobs when every pending commit recorded its activation delta:
-    pyarrow manifest rewrite + incremental rollup, nothing scheduled.
-    State must be byte-identical to the forced Spark seal path."""
-    import shutil
-
-    from frankensearch_spark.sources.storage import IndexStorage
-
+def test_seal_fast_path_is_zero_jobs_and_matches_spark_path(spark, tmp_path_factory):
+    """seal() flips pending batches with ZERO Spark jobs — one record
+    publish — and the state it publishes equals a Spark recount."""
     idx, d = _build(spark, tmp_path_factory, "os_fastseal")
     victim = idx.search("w2", limit=1).hits["doc_id"][0]
     _unsealed_replacement(spark, idx, victim)  # stages 1 tombstone too
-    d2 = str(tmp_path_factory.mktemp("os_fastseal_ctl"))
-    os.rmdir(d2)
-    shutil.copytree(d, d2)
 
     sealed, n_jobs = _jobs_during(
         spark, "fast-seal", lambda: idx.maintenance.seal()
     )
     assert sealed  # one pending batch flipped
-    assert n_jobs == 0  # the whole point: driver-side flip
-
-    # control: force the Spark fallback on an identical copy
-    monkeypatch.setattr(
-        IndexStorage, "seal_driver_side", lambda self: None
-    )
-    ctl = LexicalIndex(spark, d2)
-    assert ctl.maintenance.seal() == sealed
-    monkeypatch.undo()
-
-    fast, slow = LexicalIndex(spark, d).engine, LexicalIndex(spark, d2).engine
-    assert _engine_state(fast) == _engine_state(slow)
-    # and the re-derived (no-rollup) view agrees with the fast-written one
-    os.remove(os.path.join(d, OPEN_STATE))
-    assert _engine_state(LexicalIndex(spark, d).engine) == _engine_state(fast)
-
-
-def test_seal_fast_path_falls_back_without_pending_delta(
-    spark, tmp_path_factory
-):
-    """A pending commit whose delta is missing from open_state (its
-    publish fell back to the full rollup) must make seal() fall back to
-    the Spark path — never guess an activation delta."""
-    idx, d = _build(spark, tmp_path_factory, "os_fastseal_fb")
-    victim = idx.search("w2", limit=1).hits["doc_id"][0]
-    _unsealed_replacement(spark, idx, victim)
-    path = os.path.join(d, OPEN_STATE)
-    state = json.load(open(path))
-    assert state.get("pending")  # the commit recorded its delta
-    del state["pending"]
-    json.dump(state, open(path, "w"))
-
-    assert idx.storage.seal_driver_side() is None  # refuses, no mutation
-    sealed = idx.maintenance.seal()  # Spark fallback still seals
-    assert sealed
+    assert n_jobs == 0
     eng = LexicalIndex(spark, d).engine
-    os.remove(path)
-    assert _engine_state(LexicalIndex(spark, d).engine) == _engine_state(eng)
+    assert _engine_state(eng) == _recounted_state(eng)
+    assert eng.doc_count == 401 and eng._tombstone_count == 1
+    assert list(LexicalIndex(spark, d).search("fastpath", limit=5).hits["doc_id"]) == [victim]
 
 
 def test_full_rollup_preserves_pending_deltas(spark, tmp_path_factory):
-    """A full rollup between an unsealed commit and its seal must carry
-    over the recorded activation delta — otherwise every intervening
-    full-rollup publish demotes the next seal to the Spark path."""
+    """A pending batch's stats live in its own record rows, so commits
+    between its staging and its seal (a sealed delete, a sealed upsert)
+    cannot lose them: the zero-job seal then publishes exact stats."""
     idx, d = _build(spark, tmp_path_factory, "os_pend_carry")
-    victim = idx.search("w2", limit=1).hits["doc_id"][0]
-    _unsealed_replacement(spark, idx, victim)
-    path = os.path.join(d, OPEN_STATE)
-    before = json.load(open(path))
-    assert before.get("pending")
-
-    idx.storage.write_open_state()  # forced full rollup
-    after = json.load(open(path))
-    assert after.get("pending") == before["pending"]
-
+    hits = list(idx.search("w2", limit=3).hits["doc_id"])
+    _unsealed_replacement(spark, idx, hits[0])
+    idx.delete([hits[1]])
+    idx.maintenance.upsert(
+        spark.createDataFrame(
+            [("nn:0", "nn", 0, "user", None, "a sealed newcomer")],
+            "doc_id string, conv_id string, turn_idx long, role string, "
+            "tool string, content string",
+        ),
+        sort_cols=("conv_id", "turn_idx"),
+    )
     sealed, n_jobs = _jobs_during(
         spark, "carry-seal", lambda: idx.maintenance.seal()
     )
     assert sealed and n_jobs == 0
     eng = LexicalIndex(spark, d).engine
-    os.remove(path)
-    assert _engine_state(LexicalIndex(spark, d).engine) == _engine_state(eng)
-
-
-def test_interrupted_swap_recovers_from_prev(spark, tmp_path_factory):
-    """Crash between the two renames of a directory swap (atomic_rewrite /
-    seal_driver_side) leaves the table dir absent with only `.prev` on
-    disk; the next reader restores it and the interrupted mutation's
-    replay converges."""
-    idx, d = _build(spark, tmp_path_factory, "os_swapcrash")
-    victim = idx.search("w2", limit=1).hits["doc_id"][0]
-    _unsealed_replacement(spark, idx, victim)
-
-    # simulate the crash window mid-seal: root renamed away, tmp not yet in
-    man = os.path.join(d, "manifest")
-    os.replace(man, man + ".prev")
-    os.remove(os.path.join(d, OPEN_STATE))  # fingerprint is stale anyway
-
-    recovered = LexicalIndex(spark, d)
-    eng = recovered.engine  # open triggers the .prev restore
-    assert os.path.isdir(man) and not os.path.exists(man + ".prev")
-    assert eng.doc_count == 400  # pre-seal committed view intact
-
-    sealed = recovered.maintenance.seal()  # the replay converges
-    assert sealed
-    reopened = LexicalIndex(spark, d)
-    eng2 = reopened.engine
-    # replacement, not addition: at-seal stats count both copies (tombstones
-    # don't adjust stats until compaction), the staged tombstone activated,
-    # and exactly ONE live copy of the doc matches the new content
-    assert eng2.doc_count == 401 and eng2._tombstone_count == 1
-    hits = reopened.search("fastpath", limit=5).hits
-    assert list(hits["doc_id"]) == [victim]
+    assert eng.doc_count == 402
+    assert _engine_state(eng) == _recounted_state(eng)
 
 
 def test_seal_fast_path_refuses_after_overlapping_sealed_delete(
@@ -663,22 +544,17 @@ def test_seal_fast_path_refuses_after_overlapping_sealed_delete(
 ):
     """An interactive (default-view) delete dedups against ACTIVE rows
     only, so it re-stages a docid a pending batch already staged.  The
-    recorded pending delta would double-count that docid at seal — the
-    fast path must refuse and the Spark path must produce the exact
-    distinct count."""
+    seal must not add the two up: it leaves the count unknown, and the
+    engine's count is the exact distinct one."""
     idx, d = _build(spark, tmp_path_factory, "os_fastseal_dup")
     victim = idx.search("w2", limit=1).hits["doc_id"][0]
     _unsealed_replacement(spark, idx, victim)  # stages old docid at gen gU
     # sealed delete of the SAME doc: its dedup excludes the pending row,
     # so the same docid is staged again at the committed generation
     idx.delete([victim])
-    state = json.load(open(os.path.join(d, OPEN_STATE)))
-    assert not state.get("pending")  # delta invalidated by the delete
-
-    assert idx.storage.seal_driver_side() is None  # refuses
-    sealed = idx.maintenance.seal()  # exact Spark path
-    assert sealed
+    sealed, n_jobs = _jobs_during(spark, "dup-seal", lambda: idx.maintenance.seal())
+    assert sealed and n_jobs == 0
+    assert idx.storage.read_manifest()["tombstone_count"] is None
     eng = LexicalIndex(spark, d).engine
+    assert _engine_state(eng) == _recounted_state(eng)
     assert eng._tombstone_count == 1  # distinct: the one dead docid
-    os.remove(os.path.join(d, OPEN_STATE))
-    assert _engine_state(LexicalIndex(spark, d).engine) == _engine_state(eng)

@@ -64,7 +64,7 @@ def test_hydration_span_pruning_rank_identical(spark, tmp_path_factory, monkeypa
     eng._query_cache.clear()
     assert _hits(idx, "w1 w2") == pruned
 
-    # spans survive a mutation + reopen (open_state v2 carries them)
+    # spans survive a mutation + reopen (the record carries them)
     idx.delete([pruned[0][0]])
     reopened = LexicalIndex(spark, d).engine
     assert reopened._span_arrays is not None
@@ -73,7 +73,7 @@ def test_hydration_span_pruning_rank_identical(spark, tmp_path_factory, monkeypa
 def test_maintenance_plans_are_literal_free_past_gate(spark, tmp_path_factory):
     """Round-5: the >SEGMENT_PIN_ISIN_MAX semi-join gate covers the
     maintenance reads too (delete targeting, tier-merge planning,
-    tombstone density, segment metrics, open-state stats rollup) — at
+    tombstone density, segment metrics) — at
     10^4+ live segments none of these plans may embed an O(segments)
     IN-literal, and behavior must be identical either way."""
     from frankensearch_spark.sources.storage import pin_segments
@@ -83,7 +83,7 @@ def test_maintenance_plans_are_literal_free_past_gate(spark, tmp_path_factory):
     idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
 
     # plan shape: past the gate the pin is a semi-join with no literal list
-    man = idx.storage.read("manifest")
+    man = idx.storage.read("field_stats")
     live = idx.storage.live_segments()
     big = pin_segments(man, live, max_isin=1)
     plan = big._jdf.queryExecution().executedPlan().toString()
@@ -119,11 +119,8 @@ def test_maintenance_plans_are_literal_free_past_gate(spark, tmp_path_factory):
         == baseline_metrics
     )
 
-    # delete + open-state rollup through the forced gate stay correct
+    # a delete through the forced gate stays correct
     victim = idx.search("w1", limit=1).hits["doc_id"][0]
     assert maint.delete([victim]) == 1
-    st = forced.storage
-    st.segment_pin_isin_max = 1
-    st.write_open_state()
     reread = LexicalIndex(spark, d)
     assert victim not in set(reread.search("w1", limit=50).hits["doc_id"])

@@ -79,8 +79,8 @@ def test_note_empty_batch_time_trigger_seals_staged_tail(spark, built):
 
     upsert_batch(built, fresh, 0, cadence=cadence)
     assert cadence.pending == 1
-    assert built.storage.unsealed_generations(), (
-        "staged batch left no unsealed manifest rows"
+    assert built.storage.generation_state().unsealed, (
+        "staged batch left no unsealed record rows"
     )
 
     # a no-change batch after the window elapsed must trip the TIME seal
@@ -89,6 +89,6 @@ def test_note_empty_batch_time_trigger_seals_staged_tail(spark, built):
     cadence.last_seal = time.time() - 7200.0
     upsert_batch(built, fresh, 1, cadence=cadence)
     assert cadence.pending == 0, "note_empty_batch never sealed the staged tail"
-    assert not built.storage.unsealed_generations(), (
-        "seal left unsealed manifest rows behind"
+    assert not built.storage.generation_state().unsealed, (
+        "seal left unsealed record rows behind"
     )
