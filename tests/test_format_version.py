@@ -7,8 +7,10 @@ pin:
 
 * the build records version 2 in both files;
 * an index without the version (every layout written before the field
-  existed), a version-1 index and an unknown version are refused at
-  open, by engine and maintenance alike, with a message naming the
+  existed: postings without the embedded dictionary or with absolute
+  entry docids, a physical ``terms/`` table, tombstones without
+  ``generation``), a version-1 index and an unknown version are refused
+  at open, by engine and maintenance alike, with a message naming the
   version and asking for a rebuild — and refusing runs no Spark job;
 * opening and checking launch no Spark job, and a steady micro-batch of
   the stream sink schedules none of its own.
@@ -26,7 +28,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from frankensearch_spark.functions.codec import with_decoded_docids
 from frankensearch_spark.index import LexicalIndex
 from frankensearch_spark.operators.maintenance import IndexMaintenance
 from frankensearch_spark.sources.storage import (
@@ -92,14 +96,9 @@ def _as_older_index(d, version) -> None:
     os.remove(os.path.join(d, MANIFEST))
 
 
-@pytest.mark.parametrize(
-    "version, found",
-    [(None, "no format_version"), (1, "format_version 1")],
-    ids=["unversioned", "v1"],
-)
-def test_unversioned_and_v1_refused_at_open(spark, built, tmp_path, version, found):
-    d = _copy(built, tmp_path)
-    _as_older_index(d, version)
+def _assert_refused_at_open(spark, d, found, group) -> None:
+    """Engine and maintenance both refuse ``d`` naming ``found`` and the
+    version this package reads, asking for a rebuild, with no Spark job."""
 
     def refuse(open_fn):
         with pytest.raises(RuntimeError) as err:
@@ -110,13 +109,77 @@ def test_unversioned_and_v1_refused_at_open(spark, built, tmp_path, version, fou
 
     n = _jobs_in_group(
         spark,
-        f"fmt-refuse-{version}",
+        group,
         lambda: (
             refuse(lambda: LexicalIndex(spark, d).engine),
             refuse(lambda: IndexMaintenance(spark, d)),
         ),
     )
     assert n == 0
+
+
+@pytest.mark.parametrize(
+    "version, found",
+    [(None, "no format_version"), (1, "format_version 1")],
+    ids=["unversioned", "v1"],
+)
+def test_unversioned_and_v1_refused_at_open(spark, built, tmp_path, version, found):
+    d = _copy(built, tmp_path)
+    _as_older_index(d, version)
+    _assert_refused_at_open(spark, d, found, f"fmt-refuse-{version}")
+
+
+def _replace_postings(storage, postings) -> None:
+    """Rewrite the postings table as ``postings`` (written beside it
+    first: the frame reads the table it replaces)."""
+    target = storage.path("postings")
+    postings.write.partitionBy("segment_id", "bucket").parquet(target + ".legacy")
+    shutil.rmtree(target)
+    os.replace(target + ".legacy", target)
+
+
+def _make_legacy(spark, d, layout) -> None:
+    """Rewrite a copy into one of the layouts written before
+    ``format_version`` existed."""
+    storage = IndexStorage(spark, d)
+    postings = spark.read.parquet(storage.path("postings"))
+    if layout == "no_term_df":  # postings without the embedded dictionary
+        _replace_postings(storage, postings.drop("term_df", "term_cf"))
+    elif layout == "absolute_entries":  # entries carry absolute docids
+        absolute = (
+            with_decoded_docids(postings)
+            .withColumn(
+                "entries",
+                F.expr(
+                    "zip_with(dec, entries, (id, e) -> "
+                    "struct(id as docid, e.freq as freq, e.fnid as fnid))"
+                ),
+            )
+            .drop("dec")
+        )
+        _replace_postings(storage, absolute)
+    elif layout == "terms_dir":  # a physical terms/ table
+        IndexStorage.derive_terms(postings).write.partitionBy("bucket").parquet(
+            storage.path("terms")
+        )
+    else:  # tombstones written before they carried their generation
+        os.makedirs(storage.path("tombstones"), exist_ok=True)
+        pq.write_table(
+            pa.table({"docid": pa.array([0], pa.int64()), "segment_id": pa.array([0], pa.int32())}),
+            os.path.join(storage.path("tombstones"), "part-00000.parquet"),
+        )
+    _as_older_index(d, None)
+
+
+@pytest.mark.parametrize(
+    "layout", ["absolute_entries", "no_term_df", "terms_dir", "tombstones_no_generation"]
+)
+def test_legacy_layout_refused_at_open(spark, built, tmp_path, layout):
+    """Every legacy layout predates the version, so the version gate
+    refuses it before anything reads a postings or tombstone file."""
+    d = _copy(built, tmp_path, layout)
+    _make_legacy(spark, d, layout)
+    _assert_refused_at_open(spark, d, "no format_version", f"fmt-legacy-{layout}")
 
 
 def test_unknown_format_version_refused(spark, built, tmp_path):
