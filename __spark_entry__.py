@@ -219,14 +219,13 @@ def _q_top_terms(spark, sf_dir):
 
 
 def _q_field_stats(spark, sf_dir):
+    """The live view's per-field stats, summed from the record's rows."""
     storage = _index(spark, sf_dir).storage
-    return (
-        storage.read("field_stats")
-        .groupBy("field")
-        .agg(
-            F.sum("doc_count").cast("long").alias("doc_count"),
-            F.sum("total_tokens").cast("long").alias("total_tokens"),
-        )
+    rows = storage.read_manifest()["segments"]
+    stats = storage.view_stats(rows, storage.live_from_snapshot(rows))
+    return spark.createDataFrame(
+        [(f, d, t) for f, (d, t) in sorted(stats.items())],
+        "field string, doc_count bigint, total_tokens bigint",
     )
 
 

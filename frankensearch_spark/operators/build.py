@@ -56,7 +56,6 @@ from pyspark.sql.types import (
 )
 
 from ..functions.analyze import tokenize_batch
-from ..plans.localrel import values_frame
 from ..functions.codec import encode_entries_expr
 from ..functions.contract import POSTINGS_PER_BLOCK, fieldnorm_to_id
 from ..sources.storage import IndexMeta, IndexStorage, segment_row
@@ -177,25 +176,24 @@ def build_index(
         )
         num_segments = max(num_segments, min(spark.sparkContext.defaultParallelism, 64))
 
-    # Fresh build: clear any prior generation so dynamic partition
-    # overwrite cannot leave stale segment directories behind.
-    storage.clear_tables()
-
-    append_segment_batch(
-        spark,
-        df,
-        storage,
-        meta,
-        sort_cols=list(sort_cols),
-        num_segments=num_segments,
-        docid_base=0,
-        segment_base=0,
-        generation=1,
-        mode="overwrite",
-    )
-    storage.write_meta(meta)
+    with storage.writer():
+        # Fresh build: clear any prior generation so dynamic partition
+        # overwrite cannot leave stale segment directories behind.
+        storage.clear_tables()
+        append_segment_batch(
+            spark,
+            df,
+            storage,
+            meta,
+            sort_cols=list(sort_cols),
+            num_segments=num_segments,
+            docid_base=0,
+            segment_base=0,
+            generation=1,
+        )
+        storage.write_meta(meta)
     # the first query after a build reads these with no inference job
-    storage.seed_schema_cache(("docs", "doclens", "postings", "field_stats"))
+    storage.seed_schema_cache(("docs", "doclens", "postings"))
     return storage
 
 
@@ -209,7 +207,6 @@ def append_segment_batch(
     docid_base: int,
     segment_base: int,
     generation: int,
-    mode: str = "append",
     pre_publish=None,
     manifest_status: str = "sealed",
     num_segments_fn=None,
@@ -217,8 +214,8 @@ def append_segment_batch(
     """Tokenize + index one batch of documents as ``num_segments`` new
     segments starting at ``segment_base`` with docids from ``docid_base``.
 
-    All table writes are append-only (except the initial ``overwrite``
-    build); visibility is controlled by the record published last —
+    Every table write lands under this batch's own new segment ids;
+    visibility is controlled by the record published last —
     the analogue of the reference's seal-then-publish commit protocol
     (``index.rs:6054``).  Returns the new segment ids — ``[]`` when the
     input was empty (nothing written, nothing published).
@@ -263,7 +260,6 @@ def append_segment_batch(
             slim,
             storage,
             meta,
-            mode=mode,
             pre_publish=pre_publish,
             new_segments=list(range(segment_base, segment_base + num_segments)),
             generation=generation,
@@ -295,14 +291,13 @@ def write_segment_tables(
     slim: DataFrame,
     storage: IndexStorage,
     meta: IndexMeta,
-    mode: str,
     pre_publish=None,
     new_segments: Optional[list[int]] = None,
     n_docs: Optional[int] = None,
     generation: int = 1,
     manifest_status: str = "sealed",
 ) -> None:
-    """Write docs/doclens/postings/field_stats, then publish the record
+    """Write docs/doclens/postings, then publish the record
     naming the new segments under ``generation`` (the term dictionary is
     embedded in the posting blocks).
 
@@ -316,10 +311,7 @@ def write_segment_tables(
     dynamic partition overwrite: only this batch's own segment_id
     partitions are replaced, which makes a crashed batch's re-run
     idempotent (replay replaces its partial files instead of appending
-    duplicates).  The unpartitioned field_stats table appends — stats
-    come from the record, and a replayed batch's duplicate rows are
-    deduplicated by its readers — except on the initial full build
-    (mode="overwrite"), which resets it.
+    duplicates).  Per-segment stats live only in the record rows.
 
     ``pre_publish`` (if given) runs concurrently with the data-table
     writes but strictly BEFORE the record publish.
@@ -333,7 +325,6 @@ def write_segment_tables(
     the publish.  It returns ``(newly staged distinct docids, file
     names)``.
     """
-    sm_mode = "overwrite" if mode == "overwrite" else "append"
     if new_segments is None:
         new_segments = [
             r["segment_id"] for r in slim.select("segment_id").distinct().collect()
@@ -355,7 +346,7 @@ def write_segment_tables(
 
     def _doclens_then_stats() -> list:
         _write_doclens(slim, storage, meta, "overwrite")
-        return _write_stats(storage, meta, sm_mode, new_segments)
+        return _segment_stats(storage, meta, new_segments)
 
     with ThreadPoolExecutor(max_workers=5) as pool:
         f_pre = pool.submit(pre_publish) if pre_publish is not None else None
@@ -384,9 +375,7 @@ def write_segment_tables(
         # re-deserializing every posting array.
         if n_docs <= STATS_FROM_SLIM_MAX_DOCS:
             f_doclens = pool.submit(_write_doclens, slim, storage, meta, "overwrite")
-            f_stats = pool.submit(
-                _write_stats, storage, meta, sm_mode, new_segments, slim
-            )
+            f_stats = pool.submit(_segment_stats, storage, meta, new_segments, slim)
             f_doclens.result()
         else:
             f_stats = pool.submit(_doclens_then_stats)
@@ -415,11 +404,12 @@ def write_segment_tables(
     ]
     rec = storage.with_segments(storage.read_manifest(), rows)
     if staged_tombstones is not None:
-        n_staged, files = staged_tombstones
-        rec["tombstone_files"] = rec["tombstone_files"] + files
-        if n_staged and manifest_status == "sealed":
-            # the default view gains the staged deletes; counted on use
-            rec["tombstone_count"] = None
+        n, files = staged_tombstones
+        rec = (
+            storage.with_tombstones(rec, files, n)
+            if manifest_status == "sealed"
+            else storage.with_tombstones(rec, files, 0, n)
+        )
     storage.publish(rec)
 
 
@@ -1018,30 +1008,21 @@ def _write_postings(
         timings["postings_sec"] = time.time() - t0
 
 
-def _write_stats(
+def _segment_stats(
     storage: IndexStorage,
     meta: IndexMeta,
-    mode: str,
     new_segments: list[int],
     slim: Optional[DataFrame] = None,
 ) -> list:
-    """Per-segment rollup from the just-written doclens TABLE (not the slim
+    """Per-segment rollup (doc_count, docid span, per-field token totals)
+    for the record's new segment rows, collected as O(new segments)
+    driver rows.  Read from the just-written doclens TABLE (not the slim
     cache): the parquet read prunes to exactly the scalar len columns,
     while a slim-cache scan would deserialize every posting array again.
     Small batches pass ``slim`` to aggregate the cached frame directly
     instead — the posting arrays are tiny there, and dropping the
-    doclens-table dependency lets the doclens write and the stats rollup
-    run in parallel (one less serialized job on the upsert commit path).
-
-    The rollup is collected ONCE (O(new segments) driver rows) and the
-    field_stats table is written from a LOCAL frame built on it: writing
-    straight from the distributed plan under ``coalesce(1)`` pulled the
-    whole doclens scan+agg into a single task (no shuffle under coalesce
-    — the round-4 dict-fold serialization bug, again).  The same rows
-    become the record's segment rows.
-    Returns the collected rows; the local frame keeps the exact schema
-    the distributed plan produced, so appended parquet types cannot
-    drift."""
+    doclens-table dependency lets the doclens write and the rollup run
+    in parallel (one less serialized job on the upsert commit path)."""
     aggs = [
         F.count("*").alias("doc_count"),
         F.min("docid").alias("docid_lo"),
@@ -1054,59 +1035,4 @@ def _write_stats(
         if slim is not None
         else storage.read("doclens").where(F.col("segment_id").isin(new_segments))
     )
-    seg = src.groupBy("segment_id").agg(*aggs)
-    seg_rows = seg.collect()
-    # VALUES-backed LocalRelation (plans/localrel.py), NOT createDataFrame:
-    # the RDD-backed local plan schedules a Python worker per write task
-    # (measured 4-8 s per tiny write on this host); the inline table stays
-    # JVM-side.  The DDL is derived from the distributed plan's own schema
-    # so appended parquet types cannot drift.
-    ddl = ", ".join(
-        f"{fld.name} {fld.dataType.simpleString()}" for fld in seg.schema.fields
-    )
-    seg_local = values_frame(
-        storage.spark, [tuple(r) for r in seg_rows], ddl
-    )
-    # Append-mode commits write the per-field rollup rows driver-side
-    # (one pyarrow file, zero jobs — see storage.append_driver_side);
-    # the fresh build and any fallback keep the Spark writer, which also
-    # establishes the table's canonical schema.
-    if mode == "append" and storage.append_driver_side(
-        "field_stats",
-        {
-            "segment_id": [
-                r["segment_id"] for f in meta.text_fields for r in seg_rows
-            ],
-            "field": [f for f in meta.text_fields for _ in seg_rows],
-            "doc_count": [
-                r["doc_count"] for f in meta.text_fields for r in seg_rows
-            ],
-            "total_tokens": [
-                r[f"tokens_{f}"] for f in meta.text_fields for r in seg_rows
-            ],
-            "docid_lo": [
-                r["docid_lo"] for f in meta.text_fields for r in seg_rows
-            ],
-            "docid_hi": [
-                r["docid_hi"] for f in meta.text_fields for r in seg_rows
-            ],
-        },
-    ):
-        return seg_rows
-    rows = []
-    for f in meta.text_fields:
-        rows.append(
-            seg_local.select(
-                "segment_id",
-                F.lit(f).alias("field"),
-                "doc_count",
-                F.col(f"tokens_{f}").cast("long").alias("total_tokens"),
-                "docid_lo",
-                "docid_hi",
-            )
-        )
-    stats = rows[0]
-    for r in rows[1:]:
-        stats = stats.unionByName(r)
-    storage.write_table(stats, "field_stats", mode, coalesce=1)
-    return seg_rows
+    return src.groupBy("segment_id").agg(*aggs).collect()

@@ -9,8 +9,10 @@ immutable; ``index.rs:5489`` index_documents_with_replacements;
 * **Everything is append-only**: segment data lands under fresh segment
   ids and tombstones in fresh files, and each mutation ends by publishing
   one new manifest record (``IndexStorage.publish``, one ``os.replace``).
-  Readers pin the record they opened, so concurrent queries keep seeing
-  the previous generation until they reopen (snapshot isolation,
+  Mutations hold the index's writer lock from the record read they start
+  from to that publish, so they run one at a time.  Readers take no lock
+  and pin the record they opened, so concurrent queries keep seeing the
+  previous generation until they reopen (snapshot isolation,
   Iceberg-style).
 * **Delete** appends ``(segment_id, docid, generation)`` tombstones;
   segment files are untouched and BM25 stats stay at-seal (reference
@@ -34,6 +36,7 @@ immutable; ``index.rs:5489`` index_documents_with_replacements;
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 from typing import Optional, Sequence
@@ -100,6 +103,19 @@ DEFAULT_MERGE_FANOUT = 8
 SMALL_TIER_WIDTH = 1 << 16
 
 
+def _writes(method):
+    """Run a mutation under the index's writer lock
+    (:meth:`IndexStorage.writer`): no other commit lands between the
+    record it reads and the record it publishes."""
+
+    @functools.wraps(method)
+    def locked(self, *args, **kwargs):
+        with self.storage.writer():
+            return method(self, *args, **kwargs)
+
+    return locked
+
+
 class IndexMaintenance:
     """Maintenance operations over one index directory."""
 
@@ -129,25 +145,18 @@ class IndexMaintenance:
         )
         return self.delete_frame(ids)
 
+    @_writes
     def delete_frame(self, ids: DataFrame) -> int:
         """Tombstone live docs matching ``ids`` (a doc_id frame) — fully
         distributed: identity resolution is a join against the docs table
         (the IDHASH analogue), never a driver-side list.  The new rows
         are tagged with the CURRENT generation and become visible at this
-        call's publish; the record's tombstone count grows by exactly the
-        newly tombstoned docids.
+        call's publish.
         """
         rec = self.storage.read_manifest()
         n, files = self._stage_tombstones(rec, ids)
         if n:
-            count = rec["tombstone_count"]
-            self.storage.publish(
-                dict(
-                    rec,
-                    tombstone_files=rec["tombstone_files"] + files,
-                    tombstone_count=None if count is None else count + n,
-                )
-            )
+            self.storage.publish(self.storage.with_tombstones(rec, files, n))
         return n
 
     def _stage_tombstones(
@@ -252,6 +261,7 @@ class IndexMaintenance:
         finally:
             docs.unpersist()
 
+    @_writes
     def delete_all(self) -> int:
         """Tombstone every live doc (reference writer ``delete_all``)."""
         live = self.storage.live_segments()
@@ -260,6 +270,7 @@ class IndexMaintenance:
         ).select("doc_id")
         return self.delete_frame(ids)
 
+    @_writes
     def upsert(
         self,
         df: DataFrame,
@@ -424,6 +435,7 @@ class IndexMaintenance:
             if matched is not None:
                 matched.unpersist()
 
+    @_writes
     def upsert_arrow_small(
         self,
         table,
@@ -446,6 +458,7 @@ class IndexMaintenance:
 
         return upsert_arrow_driver(self, table, list(sort_cols), seal)
 
+    @_writes
     def seal(self) -> list[int]:
         """Commit previously unsealed segments for all readers.
 
@@ -478,8 +491,9 @@ class IndexMaintenance:
                     else r
                     for r in rows
                 ],
-                # the staged deletes join the default view: counted on use
-                tombstone_count=None if rec["tombstone_files"] else 0,
+                # the staged deletes activate with their batches
+                tombstone_rows=rec["tombstone_rows"] + rec["pending_tombstone_rows"],
+                pending_tombstone_rows=0,
             )
         )
         # a seal changes neither the docs nor the tombstone files
@@ -530,6 +544,7 @@ class IndexMaintenance:
             s: (counts.get(s, 0) / docs[s] if docs.get(s) else 0.0) for s in live
         }
 
+    @_writes
     def compact(
         self, max_density: float = DEFAULT_TOMBSTONE_DENSITY
     ) -> dict[int, int]:
@@ -592,6 +607,7 @@ class IndexMaintenance:
             plans.append([x["segment_id"] for x in run])
         return plans
 
+    @_writes
     def concat_merge(self, segment_ids: Sequence[int]) -> int:
         """Merge ordered, docid-disjoint segments into one output segment.
 
@@ -652,12 +668,12 @@ class IndexMaintenance:
             "docid_hi": max(r["docid_hi"] for r in srcs),
             "stats": stats,
         }
-        self._write_stats_rows({out_seg: out})
         self._publish_supersede(rec, mapping, {out_seg: out}, remap_tombstones=True)
         return out_seg
 
     # ── GC ────────────────────────────────────────────────────────────────
 
+    @_writes
     def gc(
         self,
         expire_history: bool = True,
@@ -681,13 +697,17 @@ class IndexMaintenance:
 
         Every write protocol lands DATA files first and publishes the
         record after, so an in-flight writer's segments and tombstone
-        files look exactly like crash orphans until their publish — the
-        sweep therefore skips anything written within
+        files look exactly like crash orphans until their publish.  The
+        writer lock keeps this package's writers on one host out of a
+        gc's way, but not a writer on another host sharing the
+        directory, so the sweep still skips anything written within
         ``orphan_grace_sec`` (default :attr:`orphan_grace_sec`, 1h);
         pass ``0`` only when no concurrent writer can exist.
 
         Tombstone files are never rewritten in place: expiry writes the
-        reduced set as NEW files, and a file is deleted only when
+        reduced set as NEW files (only when some row was superseded —
+        otherwise the named set is already reduced and stays as it is),
+        and a file is deleted only when
         neither the record this gc read nor the one it publishes names
         it (and it is past the grace), so a reader opened before this gc
         keeps its files until a second gc.  Superseded SEGMENT
@@ -719,18 +739,25 @@ class IndexMaintenance:
             history_floor=max(
                 rec["history_floor"], self.storage.state_from_snapshot(rows).current()
             ),
-            tombstone_files=[],
         )
-        tombs = self.storage.read_tombstones(rec)
+        tombs = self.storage.read_tombstones(rec) if expired else None
         if tombs is not None:
             kept = pin_segments(
                 tombs, sorted(keep), self.storage.segment_pin_isin_max
             ).persist()
-            n = kept.count()
-            if n:
-                new["tombstone_files"] = self.storage.write_tombstone_frame(kept, n)
+            active, pending = self.storage.split_pending(
+                kept, self.storage.state_from_snapshot(rows).unsealed
+            )
+            n = active + pending
+            new = self.storage.with_tombstones(
+                dict(
+                    new, tombstone_files=[], tombstone_rows=0, pending_tombstone_rows=0
+                ),
+                self.storage.write_tombstone_frame(kept, n) if n else [],
+                active,
+                pending,
+            )
             kept.unpersist()
-        new["tombstone_count"] = self.storage.count_tombstones(new)
         # publish BEFORE touching files: a crash mid-gc then leaves only
         # unnamed files (the next gc sweeps them), never a record naming
         # vanished ones
@@ -936,29 +963,8 @@ class IndexMaintenance:
             .agg(*aggs)
             .collect()
         }
-        self._write_stats_rows(out)
         dead.unpersist()
         return out
-
-    def _write_stats_rows(self, out: dict) -> None:
-        """Append the field_stats rows of new output segments (the
-        record carries the same numbers; the table serves reports)."""
-        rows = [
-            (s, f, *o["stats"][f], o["docid_lo"], o["docid_hi"] - 1)
-            for s, o in sorted(out.items())
-            for f in self.meta.text_fields
-        ]
-        if rows:
-            self.storage.write_table(
-                self.spark.createDataFrame(
-                    rows,
-                    "segment_id int, field string, doc_count long, "
-                    "total_tokens long, docid_lo long, docid_hi long",
-                ),
-                "field_stats",
-                "append",
-                coalesce=1,
-            )
 
     def _publish_supersede(
         self,
@@ -1046,11 +1052,13 @@ class IndexMaintenance:
             moved = moved.withColumn(
                 "segment_id", seg_map[F.col("segment_id")]
             ).persist()
-            n = moved.count()
-            if n:
-                new["tombstone_files"] = rec[
-                    "tombstone_files"
-                ] + self.storage.write_tombstone_frame(moved, n)
+            active, pending = self.storage.split_pending(moved, state.unsealed)
+            if active + pending:
+                new = self.storage.with_tombstones(
+                    new,
+                    self.storage.write_tombstone_frame(moved, active + pending),
+                    active,
+                    pending,
+                )
             moved.unpersist()
-        new["tombstone_count"] = self.storage.count_tombstones(new)
         self.storage.publish(new)

@@ -17,7 +17,7 @@ math (gap codec, BLOCKMAX columns, term-clustered layout), the same
 commit protocol (staged tombstones → data tables → one manifest record
 publish) — producing files byte-compatible with the
 distributed writers (every column cast to the table's existing footer
-schema, exactly like ``storage.append_driver_side``).  Anything outside
+schema, :func:`_cast_to_footer`).  Anything outside
 the gates returns ``None`` and the caller falls back to the distributed
 path unchanged; at cluster scale with large catch-up batches that path
 still owns the commit.
@@ -105,9 +105,11 @@ def _build_identity_cache(maint, rec: dict) -> Optional[IdentityCache]:
     storage = maint.storage
     live = set(storage.live_from_snapshot(rec["segments"], include_unsealed=True))
     n_docs = sum(r["doc_count"] for r in rec["segments"] if r["segment_id"] in live)
-    tomb_files = storage.tombstone_paths(rec)
-    n_tomb = sum(pq.ParquetFile(f).metadata.num_rows for f in tomb_files)
-    if n_docs > IDENTITY_CACHE_MAX_DOCS or n_tomb > IDENTITY_CACHE_MAX_TOMBSTONES:
+    if (
+        n_docs > IDENTITY_CACHE_MAX_DOCS
+        or rec["tombstone_rows"] + rec["pending_tombstone_rows"]
+        > IDENTITY_CACHE_MAX_TOMBSTONES
+    ):
         return None
     cache = IdentityCache(rec["seq"])
     docs_root = storage.path("docs")
@@ -130,7 +132,7 @@ def _build_identity_cache(maint, rec: dict) -> Optional[IdentityCache]:
             docid = t["docid"].to_numpy(zero_copy_only=False)
             for i, d in enumerate(ids):
                 rows.setdefault(d, []).append((int(docid[i]), int(seg), int(chash[i])))
-    for f in tomb_files:
+    for f in storage.tombstone_paths(rec):
         t = pq.ParquetFile(f).read(columns=["docid", "generation"])
         for d, g in zip(
             t["docid"].to_numpy(zero_copy_only=False),
@@ -555,7 +557,7 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
         return None
     footers = {
         t: _table_footer_schema(storage, t)
-        for t in ("docs", "doclens", "postings", "field_stats")
+        for t in ("docs", "doclens", "postings")
     }
     if any(v is None for v in footers.values()):
         return None
@@ -727,54 +729,32 @@ def _upsert_arrow_driver(maint, table, sort_cols, seal: bool) -> Optional[list[i
                 storage, meta, seg, seg_fields, docids[lo:hi], footers["postings"]
             )
 
-        # ── field_stats, then the record (the publish point) ─────────
-        seg_rows = []
+        # ── the record (the publish point) ────────────────────────────
+        status = "sealed" if seal else "unsealed"
+        rows = []
         for seg in segments:
             lo, hi = seg_slices[seg]
-            row = {
-                "segment_id": seg,
-                "doc_count": hi - lo,
-                "docid_lo": int(docids[lo]),
-                "docid_hi": int(docids[hi - 1]),
-            }
-            for f in meta.text_fields:
-                row[f"tokens_{f}"] = int(fields[f][1][lo:hi].sum())
-            seg_rows.append(row)
-        if not storage.append_driver_side(
-            "field_stats",
-            {
-                "segment_id": [r["segment_id"] for f in meta.text_fields for r in seg_rows],
-                "field": [f for f in meta.text_fields for _ in seg_rows],
-                "doc_count": [r["doc_count"] for f in meta.text_fields for r in seg_rows],
-                "total_tokens": [r[f"tokens_{f}"] for f in meta.text_fields for r in seg_rows],
-                "docid_lo": [r["docid_lo"] for f in meta.text_fields for r in seg_rows],
-                "docid_hi": [r["docid_hi"] for f in meta.text_fields for r in seg_rows],
-            },
-        ):
-            raise _FooterMismatch("field_stats")
-        status = "sealed" if seal else "unsealed"
-        new = storage.with_segments(
-            rec,
-            [
+            rows.append(
                 segment_row(
-                    r["segment_id"],
+                    seg,
                     gen_next,
                     status,
-                    r["docid_lo"],
-                    r["docid_hi"] + 1,
-                    r["doc_count"],
-                    {f: (r["doc_count"], r[f"tokens_{f}"]) for f in meta.text_fields},
+                    int(docids[lo]),
+                    int(docids[hi - 1]) + 1,
+                    hi - lo,
+                    {
+                        f: (hi - lo, int(fields[f][1][lo:hi].sum()))
+                        for f in meta.text_fields
+                    },
                 )
-                for r in seg_rows
-            ],
+            )
+        staged = (len(tomb_rows), 0) if seal else (0, len(tomb_rows))
+        new = storage.with_tombstones(
+            storage.with_segments(rec, rows), tomb_files, *staged
         )
-        new["tombstone_files"] = rec["tombstone_files"] + tomb_files
-        if tomb_rows and seal:
-            # the default view gains the staged deletes; counted on use
-            new["tombstone_count"] = None
         published = storage.publish(new)
         # a reader's reopen() then needs no schema-inference job
-        storage.seed_schema_cache(("docs", "doclens", "postings", "field_stats"))
+        storage.seed_schema_cache(("docs", "doclens", "postings"))
 
         # ── update the identity mirror in place ───────────────────────
         for docid, _seg in tomb_rows:

@@ -228,13 +228,11 @@ class SearchEngine:
         self._gen_state = gen_state
         self._include_unsealed = include_unsealed
         self._tombstone_files = self.storage.tombstone_paths(rec)
-        #: the record's count describes exactly the DEFAULT view; other
-        #: views (and a count the record left unknown) are counted on
-        #: first use
-        self._tombstone_count: Optional[int] = (
-            rec["tombstone_count"]
-            if at_generation is None and not include_unsealed
-            else None
+        #: the record's bound on the docids this view tombstones (see
+        #: IndexStorage.with_tombstones): the broadcast gate needs no
+        #: count job, and 0 means no anti-join at all
+        self._tombstone_rows = int(rec["tombstone_rows"]) + (
+            int(rec["pending_tombstone_rows"]) if include_unsealed else 0
         )
         self._tombstones_df: Optional[DataFrame] = None
         self._tombstones_pending = True
@@ -327,21 +325,18 @@ class SearchEngine:
     def _tombstones(self) -> Optional[DataFrame]:
         """Pinned tombstone docid frame (None when the snapshot has none).
 
-        Built on first use from the record's file list; the count comes
-        from the record when it describes this view, and is counted here
-        otherwise.
+        Built on first use from the record's file list, with no job: the
+        first query's action fills its cache.
         """
         if self._tombstones_pending:
-            self._tombstones_df, self._tombstone_count = (
-                self.storage.pinned_tombstones(
+            if self._tombstone_rows:
+                self._tombstones_df = self.storage.pinned_tombstones(
                     self.generation,
                     self._tombstone_files,
                     live_segments=self.live_segments,
                     include_unsealed=self._include_unsealed,
                     gen_state=self._gen_state,
-                    known_count=self._tombstone_count,
                 )
-            )
             self._tombstones_pending = False
         return self._tombstones_df
 
@@ -651,8 +646,8 @@ class SearchEngine:
         """Per-partition lineage + metrics rollup for this snapshot.
 
         One row per live segment joining the record's lineage (docid
-        range, status, publish time — what bulk resume keys on) with
-        metrics derived from the segment's own tables: token totals,
+        range, status, publish time — what bulk resume keys on — and
+        token totals) with metrics derived from the segment's own tables:
         posting entries/blocks, distinct terms, and tombstoned docs.
         Everything is computed at report time from data the build already
         wrote — the build hot path pays nothing — and the frame stays
@@ -672,17 +667,12 @@ class SearchEngine:
                     r["docid_hi"],
                     r["doc_count"],
                     r["built_at"],
+                    sum(t for _, t in r["stats"].values()),
                 )
                 for r in self._live_rows
             ],
             "generation long, segment_id int, status string, docid_lo long, "
-            "docid_hi long, doc_count long, built_at double",
-        )
-        stats = (
-            self._read_live("field_stats")
-            .dropDuplicates(["segment_id", "field"])
-            .groupBy("segment_id")
-            .agg(F.sum("total_tokens").alias("total_tokens"))
+            "docid_hi long, doc_count long, built_at double, total_tokens long",
         )
         postings = self._read_live("postings")
         post = postings.groupBy("segment_id").agg(
@@ -690,10 +680,7 @@ class SearchEngine:
             F.sum(F.size("entries")).alias("posting_entries"),
             F.sum(F.when(F.col("block_id") == 0, 1).otherwise(0)).alias("terms"),
         )
-        out = (
-            man.join(stats, on="segment_id", how="left")
-            .join(post, on="segment_id", how="left")
-        )
+        out = man.join(post, on="segment_id", how="left")
         if self._tombstones is not None:
             dead = (
                 self._read_live("docs")
@@ -863,7 +850,7 @@ class SearchEngine:
         if self._tombstones is None:
             return frame
         tombs = self._tombstones
-        if self._tombstone_count <= self.tombstone_broadcast_max:
+        if self._tombstone_rows <= self.tombstone_broadcast_max:
             tombs = F.broadcast(tombs)
         return frame.join(tombs, on="docid", how="left_anti")
 

@@ -12,8 +12,6 @@ is visible:
       doclens/            docid, segment_id, len_<f>, fnid_<f> per text field
       postings/           segment_id=K/bucket=B/  (term-bucketed, block rows;
                           the term dictionary rides in term_df/term_cf)
-      field_stats/        segment_id, field, doc_count, total_tokens,
-                          docid_lo, docid_hi
       tombstones/         docid, segment_id, generation (immutable files,
                           each one named by the record before it counts)
       manifest.json       the record: format_version, seq, history_floor,
@@ -21,17 +19,20 @@ is visible:
                           segment (generation, sealed_at, status,
                           superseded_at, docid span, doc_count, built_at,
                           per-field [doc_count, total_tokens]), the
-                          tombstone file names and the default view's
-                          tombstone count
+                          tombstone file names and their row counts
+                          (active, and staged by unsealed batches)
       index_meta.json     schema + config (buckets, fields, analyzers,
                           format_version), written at build
 
 Every commit writes a new record to a temp file and publishes it with one
 ``os.replace``; readers read it once at open and never list a metadata
-directory.  Data files are only ever added (segment directories under
-fresh ids, tombstone files under fresh names), so a reader holding an
-older record keeps reading exactly the files it names until gc removes
-them.
+directory.  Writers serialize on an exclusive ``flock`` of
+``<index_dir>/.writer.lock`` held from the read of the record a commit
+derives from to its publish (:meth:`IndexStorage.writer`), so no commit
+can replace a record it did not read; readers take no lock.  Data files
+are only ever added (segment directories under fresh ids, tombstone
+files under fresh names), so a reader holding an older record keeps
+reading exactly the files it names until gc removes them.
 
 Postings are directory-partitioned by ``bucket = pmod(crc32(term), B)``
 (crc32 because Spark's builtin is bit-identical to Python's ``zlib.crc32``,
@@ -44,12 +45,15 @@ reference ``config.rs:26``).
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections import OrderedDict
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +61,11 @@ from pyspark.sql import functions as F
 
 INDEX_META = "index_meta.json"
 MANIFEST = "manifest.json"
+WRITER_LOCK = ".writer.lock"
+
+#: per thread: realpath(index_dir) -> nesting depth of the writer lock
+#: this thread holds (a mutation's publish runs inside its own hold)
+_WRITER_HELD = threading.local()
 
 #: On-disk layout version, written into ``index_meta.json`` and the
 #: manifest record, and checked once when an engine or maintenance facade
@@ -261,9 +270,9 @@ def segment_row(
 class IndexStorage:
     """Path-based table access for one index directory."""
 
-    TABLES = ("docs", "doclens", "postings", "field_stats", "tombstones")
+    TABLES = ("docs", "doclens", "postings", "tombstones")
     #: directories only older layouts wrote; a fresh build removes them
-    _OLD_LAYOUT_DIRS = ("terms", "manifest")
+    _OLD_LAYOUT_DIRS = ("terms", "manifest", "field_stats")
 
     def __init__(self, spark: SparkSession, index_dir: str, format: str | None = None):
         self.spark = spark
@@ -433,57 +442,6 @@ class IndexStorage:
             writer = writer.partitionBy(*partition_by)
         writer.save(self.path(table))
 
-    def append_driver_side(self, table: str, columns: dict[str, list]) -> bool:
-        """Zero-job append of O(metadata) rows to an UNPARTITIONED table.
-
-        The per-commit ``field_stats`` rows are a handful of rows, yet a
-        Spark write schedules a job plus a commit protocol.  This writes
-        ONE parquet file with pyarrow on the driver, casting every column
-        to the table's existing footer schema so mixed-writer directories
-        stay physically type-identical (Spark resolves one schema per
-        directory read; an int32/int64 drift between files fails the
-        vectorized scan).  Footer metadata is stripped — Spark trusts an
-        embedded row-metadata blob over the physical schema.
-
-        A key MISSING for a field the footer requires aborts.  Returns
-        False — nothing written — on any surprise (no table dir yet,
-        unknown field, cast failure); the caller falls back to the Spark
-        writer.  Written under a dot-prefixed temp name (invisible to
-        Spark's file listing) and renamed into place.
-        """
-        root = self.path(table)
-        if self.format != "parquet" or not os.path.isdir(root):
-            return False
-        tmp = None
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            sample = first_data_file(root)
-            if sample is None:
-                return False
-            target = pq.read_schema(sample).remove_metadata()
-            n = max((len(v) for v in columns.values()), default=0)
-            if n == 0 or any(len(v) != n for v in columns.values()):
-                return False
-            arrays = [
-                pa.array(columns[name]).cast(target.field(name).type)
-                for name in target.names
-            ]
-            tbl = pa.Table.from_arrays(arrays, schema=target)
-            name = f"part-{uuid.uuid4()}-driver.parquet"
-            tmp = os.path.join(root, "." + name + ".tmp")
-            pq.write_table(tbl, tmp)
-            os.rename(tmp, os.path.join(root, name))
-            return True
-        except Exception:
-            if tmp is not None:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-            return False
-
     def exists(self) -> bool:
         return os.path.exists(os.path.join(self.index_dir, INDEX_META))
 
@@ -494,7 +452,8 @@ class IndexStorage:
         for table in self.TABLES + self._OLD_LAYOUT_DIRS:
             shutil.rmtree(self.path(table), ignore_errors=True)
         os.makedirs(self.index_dir, exist_ok=True)
-        self.publish(self.fresh_record())
+        with self.writer():
+            self.publish(self.fresh_record())
 
     # ── the manifest record ───────────────────────────────────────────────
 
@@ -516,7 +475,8 @@ class IndexStorage:
             "next_segment": 0,
             "segments": [],
             "tombstone_files": [],
-            "tombstone_count": 0,
+            "tombstone_rows": 0,
+            "pending_tombstone_rows": 0,
         }
 
     def read_manifest(self) -> dict:
@@ -526,13 +486,58 @@ class IndexStorage:
         self._require_version(rec.get("format_version"))
         return rec
 
+    @contextmanager
+    def writer(self):
+        """Hold this index's single-writer lock for the block.
+
+        Every mutation holds it from the read of the record it derives
+        from, through its data writes, to its publish: two writers (a
+        stream micro-commit and an operator's compact, say) run one
+        after the other, so neither publishes over a record it did not
+        read and both never mint the same segment ids.  An exclusive
+        ``flock`` of :data:`WRITER_LOCK` in the index directory: it
+        serializes threads and processes on one host and is released
+        when the holder exits, however it exits.  Re-entrant within a
+        thread; readers never take it.
+        """
+        key = os.path.realpath(self.index_dir)
+        held = getattr(_WRITER_HELD, "depth", None)
+        if held is None:
+            held = _WRITER_HELD.depth = {}
+        if held.get(key):
+            held[key] += 1
+            try:
+                yield
+            finally:
+                held[key] -= 1
+            return
+        os.makedirs(self.index_dir, exist_ok=True)
+        fd = os.open(
+            os.path.join(self.index_dir, WRITER_LOCK), os.O_RDWR | os.O_CREAT, 0o644
+        )
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            held[key] = 1
+            try:
+                yield
+            finally:
+                held[key] = 0
+        finally:
+            os.close(fd)  # releases the flock
+
     def publish(self, rec: dict) -> dict:
         """Publish ``rec`` as the next record: a temp file, then ONE
         ``os.replace``.  This is the commit point of every mutation; a
         crash before it leaves the previous record in force and every
         file the mutation wrote unnamed.  Returns the published record
-        (``seq`` advanced by one).  Single-writer: ``rec`` must derive
-        from the record in force."""
+        (``seq`` advanced by one).  Must run inside :meth:`writer`, and
+        ``rec`` must derive from a record read inside the same hold."""
+        if not getattr(_WRITER_HELD, "depth", {}).get(
+            os.path.realpath(self.index_dir)
+        ):
+            raise RuntimeError(
+                f"publish to {self.index_dir} outside IndexStorage.writer()"
+            )
         rec = dict(rec, format_version=FORMAT_VERSION, seq=int(rec["seq"]) + 1)
         final = os.path.join(self.index_dir, MANIFEST)
         tmp = f"{final}.{uuid.uuid4().hex}.tmp"
@@ -564,6 +569,38 @@ class IndexStorage:
                 [rec["next_segment"], *(r["segment_id"] + 1 for r in rows)]
             ),
         )
+
+    @staticmethod
+    def with_tombstones(
+        rec: dict, files: list, n_rows: int, n_pending: int = 0
+    ) -> dict:
+        """``rec`` naming ``files`` too: ``n_rows`` rows a default reader
+        applies and ``n_pending`` rows staged by still-unsealed batches.
+
+        ``tombstone_rows`` bounds the docids the default (and any
+        time-travel) view tombstones, and adding ``pending_tombstone_rows``
+        bounds the dirty view's, so the engine sizes its anti-join — or
+        skips it at 0 — with no count job.  A docid staged twice counts
+        twice: the bound only over-estimates."""
+        return dict(
+            rec,
+            tombstone_files=rec["tombstone_files"] + list(files),
+            tombstone_rows=rec["tombstone_rows"] + int(n_rows),
+            pending_tombstone_rows=rec["pending_tombstone_rows"] + int(n_pending),
+        )
+
+    @staticmethod
+    def split_pending(tombs: DataFrame, unsealed) -> tuple[int, int]:
+        """(rows a default reader applies, rows staged by the ``unsealed``
+        generations) of a tombstone frame: one aggregation job."""
+        flag = (
+            F.col("generation").isin(sorted(unsealed)) if unsealed else F.lit(False)
+        )
+        n = {
+            r["p"]: r["n"]
+            for r in tombs.groupBy(flag.alias("p")).agg(F.count("*").alias("n")).collect()
+        }
+        return int(n.get(False, 0)), int(n.get(True, 0))
 
     # ── snapshot kernels over record rows ─────────────────────────────────
 
@@ -708,27 +745,20 @@ class IndexStorage:
         gen_state: GenerationState,
         live_segments=None,
         include_unsealed: bool = False,
-        known_count: int | None = None,
-    ):
+    ) -> DataFrame | None:
         """Tombstoned docids visible at ``generation`` among ``files`` (a
-        record's tombstone paths).  Returns ``(df, count)`` where ``df``
-        is a persisted single-column (docid) DataFrame (``(None, 0)``
-        when empty); the count lets callers size-gate broadcast
-        anti-joins against the set.
+        record's tombstone paths): a persisted single-column (docid)
+        DataFrame, or None when ``files`` is empty.  Lazy — building it
+        runs no job; the first query's action fills the cache.
 
         ``live_segments`` (the caller's pinned segment set) scopes the set
         to tombstones whose segment is live at the pinned generation: a
         row whose segment was superseded is *folded* — compaction already
         removed those docids physically, so the row lingers only as
         history for time-travel readers pinned before the supersede.
-
-        ``known_count`` (the record's count for the SAME view) skips the
-        count job: 0 short-circuits to ``(None, 0)`` with no reads, and a
-        positive count leaves the frame lazy (the first query's action
-        fills the cache).  Without it the set is counted here.
         """
-        if known_count == 0 or not files:
-            return None, 0
+        if not files:
+            return None
         df = self.spark.read.schema(TOMBSTONE_DDL).parquet(*files)
         df = df.where(F.col("generation") <= generation)
         if not include_unsealed and gen_state.unsealed:
@@ -743,29 +773,7 @@ class IndexStorage:
             df = df.where(~F.col("generation").isin(late))
         if live_segments is not None:
             df = pin_segments(df, live_segments, self.segment_pin_isin_max)
-        df = df.select("docid").distinct().persist()
-        if known_count is not None:
-            return df, int(known_count)
-        n = df.count()
-        if n == 0:
-            df.unpersist()
-            return None, 0
-        return df, n
-
-    def count_tombstones(self, rec: dict) -> int:
-        """Exact default-view tombstone count of ``rec`` (one Spark job;
-        the commits that already run Spark jobs store it in the record)."""
-        rows = rec["segments"]
-        state = self.state_from_snapshot(rows)
-        df, n = self.pinned_tombstones(
-            state.current(),
-            self.tombstone_paths(rec),
-            live_segments=self.live_from_snapshot(rows),
-            gen_state=state,
-        )
-        if df is not None:
-            df.unpersist()
-        return n
+        return df.select("docid").distinct().persist()
 
     def tombstone_file_count(self, n_rows: int) -> int:
         """Output files for a tombstone write of ``n_rows`` (≥1)."""
@@ -773,9 +781,10 @@ class IndexStorage:
         return max(1, min(TOMBSTONE_MAX_FILES, -(-int(n_rows) // per_file)))
 
     def write_tombstone_frame(self, df: DataFrame, n_rows: int) -> list[str]:
-        """Write a (docid, segment_id, generation) frame as NEW tombstone
-        files and return their names; nothing counts until a record names
-        them.  Interactive sets stay single-file, bulk sets hash-partition
+        """Write a (docid, segment_id, generation) frame of ``n_rows``
+        rows as NEW tombstone files and return their names; nothing
+        counts until a record names them (and adds ``n_rows`` to its
+        ``tombstone_rows``).  Interactive sets stay single-file, bulk sets hash-partition
         on docid so many tasks write in parallel.  Spark writes into a
         ``_``-prefixed directory (invisible to listings) and the files
         move up under their unique part names."""

@@ -432,11 +432,11 @@ class IngestQuery:
     foreachBatch has no end-of-stream hook, so the final cadence window
     would stay unsealed when an ``availableNow`` stream stops; this proxy
     runs the final seal after the wrapped query terminates.  The seal
-    only fires when the query is no longer active — a cadence seal racing
-    a mid-publish batch from another thread would publish a record
-    derived from the one before that batch's publish, dropping it (the
-    single-writer contract); while the stream runs, seals happen only on
-    the micro-batch thread itself.
+    only fires when the query is no longer active, so it follows the
+    last batch rather than landing between two of them; while the stream
+    runs, seals happen only on the micro-batch thread itself.  (Commits
+    from other threads cannot drop a batch either way: every writer holds
+    the index's writer lock from its record read to its publish.)
     """
 
     def __init__(self, query, cadence: SealCadence) -> None:

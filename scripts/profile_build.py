@@ -38,7 +38,7 @@ def timed(name, fn):
 B._write_docs = timed("write_docs", B._write_docs)
 B._write_doclens = timed("write_doclens", B._write_doclens)
 B._write_postings = timed("write_postings", B._write_postings)
-B._write_stats = timed("write_stats", B._write_stats)
+B._segment_stats = timed("segment_stats", B._segment_stats)
 _orig_assign = B._assign_docids_and_tokenize
 
 

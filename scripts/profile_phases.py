@@ -84,7 +84,7 @@ try:
                                 new_segments=list(range(16)), timings=sub)
     print(f"write postings (dictionary embedded): {time.time()-t0:.2f}s")
     t0 = time.time()
-    B._write_stats(storage, meta, "overwrite", list(range(16)))
+    B._segment_stats(storage, meta, list(range(16)))
     print(f"stats: {time.time()-t0:.2f}s")
     slim.unpersist(); B.release_checkpoint(ranged)
     print(f"TOTAL: {time.time()-t_all:.2f}s")

@@ -71,7 +71,7 @@ INNER = [
     "_write_docs",
     "_write_doclens",
     "_write_postings",
-    "_write_stats",
+    "_segment_stats",
     "write_segment_tables",
 ]
 _orig_inner = {n: getattr(B, n) for n in INNER}

@@ -268,7 +268,7 @@ def test_build_seeds_the_schemas_spark_infers(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("seeded_ix"))
     corpus = synthetic_transcripts(spark, 300, vocab_size=100)
     LexicalIndex.build_transcripts(spark, corpus, d, num_segments=2, num_buckets=4)
-    for table in ("docs", "doclens", "postings", "field_stats"):
+    for table in ("docs", "doclens", "postings"):
         path = os.path.join(d, table)
         key, seeded = storage_mod._SCHEMA_CACHE[(d, table)]
         assert key == (os.stat(path).st_mtime_ns, len(os.listdir(path))), table

@@ -1,11 +1,12 @@
-"""The zero-job metadata writes stay ENGAGED, not fallen back.
+"""The zero-job driver-side writes stay ENGAGED, not fallen back.
 
-storage.append_driver_side falls back to the Spark writer silently on
-any surprise — correct for safety, but it means every equivalence suite
-would stay green if the fast path quietly died (the same failure mode
-the no-AQE rebind seam had).  These tests pin engagement: a commit's
-field_stats rows and small tombstone sets must land as driver-written
-parquet files, mixed-writer directories must read back whole, and the
+The driver-side writers fall back to Spark silently on any surprise —
+correct for safety, but it means every equivalence suite would stay
+green if the fast path quietly died (the same failure mode the no-AQE
+rebind seam had).  These tests pin engagement: a commit's small
+tombstone sets must land as driver-written parquet files, per-segment
+stats live only in the record (no stats table is written),
+mixed-writer directories must read back whole, and the driver-side
 append must refuse cleanly on schema surprises.
 """
 
@@ -46,9 +47,8 @@ def test_upsert_commit_metadata_appends_engage_driver_side(spark, ix):
         "doc_id string, content string",
     )
     assert ix.maintenance.upsert(up, sort_cols=("doc_id",))
-    # the append-mode field_stats rows and the staged tombstones must be
-    # pyarrow files written on the driver, not Spark job output
-    assert _driver_files(ix.index_dir, "field_stats"), "stats append fell back"
+    # the staged tombstones must be a pyarrow file written on the
+    # driver, not Spark job output
     assert _driver_files(ix.index_dir, "tombstones"), "tombstone write fell back"
     up2 = spark.createDataFrame(
         [("d", "delta fresh spark again")], "doc_id string, content string"
@@ -65,8 +65,9 @@ def test_upsert_commit_metadata_appends_engage_driver_side(spark, ix):
     assert sorted(rec["tombstone_files"]) == sorted(
         _driver_files(ix.index_dir, "tombstones")
     )
-    stats = st.read("field_stats")
-    assert stats.select("segment_id").distinct().count() >= 2
+    # the commit's stats are record rows; no stats table exists
+    assert all(r["stats"]["content"][0] == r["doc_count"] for r in rec["segments"])
+    assert not os.path.exists(os.path.join(ix.index_dir, "field_stats"))
 
 
 def test_interactive_delete_tombstones_engage_driver_side(spark, ix):
@@ -80,22 +81,25 @@ def test_interactive_delete_tombstones_engage_driver_side(spark, ix):
 
 
 def test_append_driver_side_refuses_on_schema_surprise(spark, ix):
-    st = IndexStorage(spark, ix.index_dir)
-    before = sorted(os.listdir(st.path("field_stats")))
-    # missing a column the footer requires -> refuse, write nothing
-    assert not st.append_driver_side("field_stats", {"segment_id": [1]})
-    # unknown table / absent directory -> refuse
-    assert not st.append_driver_side("no_such_table", {"x": [1]})
-    # length mismatch between columns -> refuse
-    assert not st.append_driver_side(
-        "field_stats",
-        {
-            "segment_id": [0, 1],
-            "field": ["content"],
-            "doc_count": [1],
-            "total_tokens": [1],
-            "docid_lo": [0],
-            "docid_hi": [1],
-        },
+    """A driver-side micro-commit casts each column to the table's
+    footer schema and refuses (the commit falls back to Spark, nothing
+    named) on any surprise."""
+    from frankensearch_spark.operators.microcommit import (
+        _cast_to_footer,
+        _table_footer_schema,
     )
-    assert sorted(os.listdir(st.path("field_stats"))) == before
+
+    import pyarrow as pa
+
+    st = IndexStorage(spark, ix.index_dir)
+    footer = _table_footer_schema(st, "docs")
+    full = {f.name: pa.array([None], f.type) for f in footer}
+    assert _cast_to_footer(full, footer) is not None
+    # missing a column the footer requires -> refuse
+    assert _cast_to_footer(dict(list(full.items())[1:]), footer) is None
+    # a value the footer type cannot hold -> raises, which the commit's
+    # fallback turns into "ineligible"
+    with pytest.raises(pa.ArrowInvalid):
+        _cast_to_footer(dict(full, docid=pa.array(["x"])), footer)
+    # absent table directory -> no footer, the commit is ineligible
+    assert _table_footer_schema(st, "no_such_table") is None

@@ -239,7 +239,8 @@ def test_upsert_staged_tombstones_gated_by_generation(spark, batches, tmp_path_f
     assert n == len(victims)
     idx.reopen()
     assert _hits(idx, "w3") == before  # unnamed: invisible
-    m.storage.publish(dict(rec, tombstone_files=rec["tombstone_files"] + files))
+    with m.storage.writer():
+        m.storage.publish(m.storage.with_tombstones(rec, files, n))
     idx.reopen()
     # no segment row with g+1 exists -> the named staged deletes are
     # still invisible
@@ -586,13 +587,13 @@ def test_bulk_delete_writes_multiple_tombstone_files(spark, tmp_path_factory, mo
     idx.reopen()
     live = set(idx.search("w1", limit=400).hits["doc_id"])
     assert not live & set(victims)
-    assert idx.engine._tombstone_count == len(victims)
+    assert idx.engine._tombstone_rows == len(victims)
     # the rewrite path (compaction fold -> gc) handles multi-file tables
     idx.maintenance.compact(max_density=0.10)
     idx.maintenance.gc()
     idx.reopen()
     assert set(idx.search("w1", limit=400).hits["doc_id"]) == live
-    assert idx.engine._tombstone_count == 0  # folded + swept
+    assert idx.engine._tombstone_rows == 0  # folded + swept
 
 
 def test_auto_upsert_segment_sizing():

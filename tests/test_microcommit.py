@@ -89,6 +89,12 @@ def _rows(spark, index, table, cols=None):
     st = IndexStorage(spark, index.index_dir)
     if table == "manifest":  # the record's segment rows
         return sorted(tuple(r[c] for c in cols) for r in st.read_manifest()["segments"])
+    if table == "field_stats":  # the record rows' per-field stats
+        return sorted(
+            (r["segment_id"], f, d, t, r["docid_lo"], r["docid_hi"])
+            for r in st.read_manifest()["segments"]
+            for f, (d, t) in r["stats"].items()
+        )
     df = st.read(table)
     if cols:
         df = df.select(*cols)

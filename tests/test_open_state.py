@@ -3,17 +3,20 @@
 The reference's keeper opens a 1M-doc index in ≤50 ms (QG-9,
 COMPREHENSIVE_PLAN §keeper cold open); here every commit publishes one
 ``manifest.json`` — segment rows with per-field stats, the tombstone file
-names and the default view's tombstone count — and an engine open reads
-it once, with no Spark job and no directory listing.
+names and their total row count — and an engine open reads it once, with
+no Spark job and no directory listing.
 
 These tests pin: zero jobs at open for every view, the record's state
 equal to a Spark recount from the data tables after every mutation
-(field_stats sums over the live segments, a distinct count of the named
-tombstones), a count the record leaves unknown counted exactly on use,
-and pinned tombstone files outliving the record that replaces them.
+(doclens sums over the live segments, the view's tombstoned docids), the
+record's tombstone row count bounding every view's dead docids with no
+count job, and pinned tombstone files outliving the record that replaces
+them.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -42,39 +45,50 @@ def _jobs_during_open(spark, index_dir, group, **kw):
     return idx, engine, len(jobs)
 
 
+def _tombstoned(engine):
+    t = engine._tombstones
+    return [] if t is None else sorted(r["docid"] for r in t.collect())
+
+
 def _engine_state(engine):
-    engine._tombstones  # resolves a count the record left unknown
+    dead = _tombstoned(engine)
+    # the record's row count bounds the view's dead docids
+    assert engine._tombstone_rows >= len(dead)
     return (
         engine.generation,
         engine.live_segments,
         engine.doc_count,
         {f: round(v, 12) for f, v in engine.avgdl.items()},
         engine.field_tokens,
-        engine._tombstone_count,
+        dead,
     )
 
 
 def _recounted_state(engine):
     """The engine's open state recomputed with Spark from the data
-    tables: stats from ``field_stats`` over the live segments, the
-    tombstone count as a distinct count of the view's named files."""
+    tables: doc count and token totals summed over the live segments'
+    doclens rows, and the view's tombstoned docids from a fresh pin of
+    the named files."""
     st = engine.storage
-    rows = (
-        pin_segments(st.read("field_stats"), engine.live_segments)
-        .dropDuplicates(["segment_id", "field"])
-        .groupBy("field")
-        .agg(F.sum("doc_count").alias("d"), F.sum("total_tokens").alias("t"))
-        .collect()
+    fields = engine.meta.text_fields
+    row = (
+        pin_segments(st.read("doclens"), engine.live_segments)
+        .agg(
+            F.count("*").alias("n"),
+            *[F.sum(f"len_{f}").alias(f"t_{f}") for f in fields],
+        )
+        .first()
     )
-    stats = {r["field"]: (int(r["d"]), int(r["t"])) for r in rows}
-    n_docs = max((d for d, _ in stats.values()), default=0)
-    df, n_tomb = st.pinned_tombstones(
+    n_docs = int(row["n"])
+    tokens = {f: int(row[f"t_{f}"] or 0) for f in fields} if n_docs else {}
+    df = st.pinned_tombstones(
         engine.generation,
         engine._tombstone_files,
         live_segments=engine.live_segments,
         include_unsealed=engine._include_unsealed,
         gen_state=engine._gen_state,
     )
+    dead = [] if df is None else sorted(r["docid"] for r in df.collect())
     if df is not None:
         df.unpersist()
     return (
@@ -82,11 +96,11 @@ def _recounted_state(engine):
         engine.live_segments,
         n_docs,
         {
-            f: round(stats.get(f, (0, 0))[1] / n_docs if n_docs else 0.0, 12)
-            for f in engine.meta.text_fields
+            f: round(tokens.get(f, 0) / n_docs if n_docs else 0.0, 12)
+            for f in fields
         },
-        {f: t for f, (_, t) in stats.items()},
-        n_tomb,
+        tokens,
+        dead,
     )
 
 
@@ -245,10 +259,10 @@ def test_gc_grace_protects_fresh_unpublished_dirs(spark, tmp_path_factory):
 
 
 def test_delete_updates_rollup_incrementally(spark, tmp_path_factory):
-    """An interactive delete must not re-run the tombstone distinct-count
-    (at 10^9+ tombstones that job dominates a one-doc delete): the
-    record's count grows by exactly the newly tombstoned docids.  Pinned
-    by making the counting kernel unreachable during the deletes."""
+    """An interactive delete must not count the tombstone set (at 10^9+
+    tombstones that job dominates a one-doc delete): the record's row
+    count grows by exactly the newly tombstoned docids.  Pinned by making
+    the pinning kernel unreachable during the deletes."""
     from frankensearch_spark.sources.storage import IndexStorage
 
     idx, d = _build(spark, tmp_path_factory, "os_incr")
@@ -269,22 +283,21 @@ def test_delete_updates_rollup_incrementally(spark, tmp_path_factory):
     finally:
         IndexStorage.pinned_tombstones = orig_pt
     rec = idx.storage.read_manifest()
-    assert rec["tombstone_count"] == 3
+    assert rec["tombstone_rows"] == 3
     assert len(rec["tombstone_files"]) == 2
     eng = LexicalIndex(spark, d).engine
     assert _engine_state(eng) == _recounted_state(eng)
 
 
 def test_rollup_fast_path_fails_safe(spark, tmp_path_factory):
-    """Where a commit cannot know the default view's tombstone count
-    without a Spark job (a sealed upsert or a seal activating staged
-    deletes) the record stores it as unknown — never a guess — and the
-    engine counts it exactly on first use; a later delete keeps it
-    unknown."""
+    """Every commit that names tombstone files adds their rows to the
+    record's count — a sealed upsert's staged deletes included — so the
+    count never falls below the view's dead docids, and the engine pins
+    its tombstone set with no count job."""
     idx, d = _build(spark, tmp_path_factory, "os_race")
     ids = list(idx.search("w1", limit=400).hits["doc_id"])
     idx.delete([ids[0]])
-    assert idx.storage.read_manifest()["tombstone_count"] == 1
+    assert idx.storage.read_manifest()["tombstone_rows"] == 1
     conv_id, turn_idx = ids[1].rsplit(":", 1)
     idx.maintenance.upsert(
         spark.createDataFrame(
@@ -294,13 +307,15 @@ def test_rollup_fast_path_fails_safe(spark, tmp_path_factory):
         ),
         sort_cols=("conv_id", "turn_idx"),
     )
-    assert idx.storage.read_manifest()["tombstone_count"] is None
+    assert idx.storage.read_manifest()["tombstone_rows"] == 2
     idx.delete([ids[2]])
-    assert idx.storage.read_manifest()["tombstone_count"] is None
+    assert idx.storage.read_manifest()["tombstone_rows"] == 3
     eng = LexicalIndex(spark, d).engine
-    assert eng._tombstone_count is None  # unknown until used
+    assert eng._tombstone_rows == 3
+    _, n_jobs = _jobs_during(spark, "os-race-pin", lambda: eng._tombstones)
+    assert n_jobs == 0
     assert _engine_state(eng) == _recounted_state(eng)
-    assert eng._tombstone_count == 3
+    assert len(_tombstoned(eng)) == 3
 
 
 def test_gc_reclaims_just_superseded_dirs_within_grace(spark, tmp_path_factory):
@@ -345,7 +360,9 @@ def test_pinned_lazy_tombstones_survive_concurrent_rewrite(spark, tmp_path_facto
     import os
 
     idx, d = _build(spark, tmp_path_factory, "os_lazy_gc")
-    ids = list(idx.search("w1", limit=400).hits["doc_id"])
+    # superseded rows for the gc to expire, so it rewrites the named set
+    idx.maintenance.concat_merge(idx.storage.live_segments()[:2])
+    ids = list(LexicalIndex(spark, d).search("w1", limit=400).hits["doc_id"])
     idx.delete([ids[0]])
     reader = LexicalIndex(spark, d)
     eng = reader.engine
@@ -359,11 +376,31 @@ def test_pinned_lazy_tombstones_survive_concurrent_rewrite(spark, tmp_path_facto
     visible = set(reader.search("w1", limit=400).hits["doc_id"])
     assert ids[0] not in visible  # the pinned delete still applies
     assert len(visible) == len(ids) - 1  # no doc resurrected
-    assert eng._tombstone_count == 1
+    assert eng._tombstone_rows == 1
     idx.maintenance.gc(orphan_grace_sec=0)  # the second gc reclaims them
     assert not any(os.path.exists(f) for f in pinned)
     fresh = set(LexicalIndex(spark, d).search("w1", limit=400).hits["doc_id"])
     assert fresh == visible
+
+
+def test_gc_without_superseded_rows_keeps_tombstone_files(spark, tmp_path_factory):
+    """With no superseded row the named tombstone set is already reduced:
+    gc publishes it unchanged and runs no Spark job."""
+    idx, d = _build(spark, tmp_path_factory, "os_gc_keep")
+    ids = list(idx.search("w1", limit=400).hits["doc_id"])
+    idx.delete(ids[:2])
+    before = idx.storage.read_manifest()
+    _, n_jobs = _jobs_during(
+        spark, "os-gc-keep", lambda: idx.maintenance.gc(orphan_grace_sec=0)
+    )
+    assert n_jobs == 0
+    after = idx.storage.read_manifest()
+    assert after["seq"] == before["seq"] + 1
+    assert after["tombstone_files"] == before["tombstone_files"]
+    assert after["tombstone_rows"] == before["tombstone_rows"] == 2
+    assert all(
+        os.path.exists(f) for f in idx.storage.tombstone_paths(after)
+    )
 
 
 def test_open_state_random_mutation_walk(spark, tmp_path_factory):
@@ -472,7 +509,7 @@ def test_lazy_tombstone_fallback_semantics(spark, tmp_path_factory):
     assert ids[0] not in visible  # pre-open delete applied
     assert ids[1] in visible  # post-open delete stays invisible
     assert len(visible) == len(ids) - 1  # nothing resurrected
-    assert eng2._tombstone_count == 1
+    assert eng2._tombstone_rows == 1
 
 
 def _jobs_during(spark, group, fn):
@@ -510,7 +547,7 @@ def test_seal_fast_path_is_zero_jobs_and_matches_spark_path(spark, tmp_path_fact
     assert n_jobs == 0
     eng = LexicalIndex(spark, d).engine
     assert _engine_state(eng) == _recounted_state(eng)
-    assert eng.doc_count == 401 and eng._tombstone_count == 1
+    assert eng.doc_count == 401 and eng._tombstone_rows == 1
     assert list(LexicalIndex(spark, d).search("fastpath", limit=5).hits["doc_id"]) == [victim]
 
 
@@ -544,8 +581,8 @@ def test_seal_fast_path_refuses_after_overlapping_sealed_delete(
 ):
     """An interactive (default-view) delete dedups against ACTIVE rows
     only, so it re-stages a docid a pending batch already staged.  The
-    seal must not add the two up: it leaves the count unknown, and the
-    engine's count is the exact distinct one."""
+    record's row count then counts that docid twice — an upper bound —
+    while the engine's pinned set holds it once."""
     idx, d = _build(spark, tmp_path_factory, "os_fastseal_dup")
     victim = idx.search("w2", limit=1).hits["doc_id"][0]
     _unsealed_replacement(spark, idx, victim)  # stages old docid at gen gU
@@ -554,7 +591,7 @@ def test_seal_fast_path_refuses_after_overlapping_sealed_delete(
     idx.delete([victim])
     sealed, n_jobs = _jobs_during(spark, "dup-seal", lambda: idx.maintenance.seal())
     assert sealed and n_jobs == 0
-    assert idx.storage.read_manifest()["tombstone_count"] is None
+    assert idx.storage.read_manifest()["tombstone_rows"] == 2
     eng = LexicalIndex(spark, d).engine
     assert _engine_state(eng) == _recounted_state(eng)
-    assert eng._tombstone_count == 1  # distinct: the one dead docid
+    assert len(_tombstoned(eng)) == 1  # distinct: the one dead docid

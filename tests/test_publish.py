@@ -38,14 +38,15 @@ def test_metadata_files_never_missing_while_rewritten(tmp_path):
     main thread reads them: every read finds a whole file."""
     st = IndexStorage(None, str(tmp_path))
     st.write_meta(IndexMeta(text_fields=["content"]))
-    st.publish(st.fresh_record())
+    st.clear_tables()
     stop = threading.Event()
 
     def writer():
         meta = IndexMeta(text_fields=["content"])
         while not stop.is_set():
             st.write_meta(meta)
-            st.publish(st.read_manifest())
+            with st.writer():
+                st.publish(st.read_manifest())
 
     t = threading.Thread(target=writer)
     t.start()
@@ -79,7 +80,6 @@ def _state(spark, d):
     the random parts of file names."""
     idx = LexicalIndex(spark, d)
     eng = idx.engine
-    eng._tombstones  # resolves a count the record left unknown
     rec = eng.storage.read_manifest()
     rows = sorted(
         (
@@ -94,7 +94,7 @@ def _state(spark, d):
         eng.live_segments,
         eng.doc_count,
         eng.field_tokens,
-        eng._tombstone_count,
+        eng._tombstone_rows,
         rows,
         (rec["history_floor"], rec["next_docid"], rec["next_segment"]),
         {q: _hits(idx, q) for q in QUERIES},
@@ -227,3 +227,74 @@ def test_reader_keeps_reading_while_commits_publish(spark, tmp_path_factory):
         t.join()
         assert not failure, (name, failure)
         assert reader.storage.read_manifest()["seq"] == seq + 1, name
+
+
+# ── writers beside writers ─────────────────────────────────────────────────
+
+
+def test_publish_requires_the_writer_lock(tmp_path):
+    st = IndexStorage(None, str(tmp_path))
+    st.clear_tables()
+    with pytest.raises(RuntimeError, match="writer"):
+        st.publish(st.read_manifest())
+    with st.writer():
+        with st.writer():  # re-entrant within a thread
+            assert st.publish(st.read_manifest())["seq"] == 2
+
+
+def test_micro_commit_during_compact_lands_after_it(spark, tmp_path_factory, monkeypatch):
+    """A stream micro-commit issued while a compact runs its Spark jobs
+    waits for the compact's publish and then commits on top of it: both
+    commits are in the final record under distinct segment ids, and the
+    index equals the one a serial run (compact, then the micro-commit)
+    produces."""
+    d = str(tmp_path_factory.mktemp("publish_concurrent"))
+    corpus = synthetic_transcripts(spark, 300, vocab_size=120)
+    idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
+    idx.delete(
+        [r["doc_id"] for r in idx.storage.read("docs").where("segment_id = 0")
+         .select("doc_id").limit(30).collect()]
+    )
+    serial = str(tmp_path_factory.mktemp("publish_serial"))
+    shutil.copytree(d, serial, dirs_exist_ok=True)
+    batch = _batch(spark, 30, seed=21).toArrow()
+
+    started = threading.Event()
+    real_rewrite = IndexMaintenance._rewrite_segments
+
+    def slow_rewrite(self, *a, **k):
+        started.set()
+        time.sleep(1.0)  # the micro-commit below arrives in this window
+        return real_rewrite(self, *a, **k)
+
+    monkeypatch.setattr(IndexMaintenance, "_rewrite_segments", slow_rewrite)
+    out: dict = {}
+
+    def compact():
+        try:
+            out["mapping"] = IndexMaintenance(spark, d).compact(max_density=0.05)
+        except Exception as err:  # surfaced below
+            out["error"] = err
+
+    t = threading.Thread(target=compact)
+    t.start()
+    assert started.wait(300)
+    segs = IndexMaintenance(spark, d).upsert_arrow_small(batch, sort_cols=SORT)
+    t.join()
+    monkeypatch.undo()
+    assert "error" not in out, out
+    mapping = out["mapping"]
+    assert mapping and segs  # both ran, the micro-commit on the driver path
+    assert not set(segs) & set(mapping.values())
+
+    rows = {r["segment_id"]: r for r in IndexStorage(spark, d).read_manifest()["segments"]}
+    assert all(rows[s]["superseded_at"] is not None for s in mapping)
+    assert all(rows[s]["superseded_at"] is None for s in segs)
+    # the micro-commit published after the compact, on top of its record
+    assert min(rows[s]["generation"] for s in segs) > max(
+        rows[s]["generation"] for s in mapping.values()
+    )
+
+    IndexMaintenance(spark, serial).compact(max_density=0.05)
+    IndexMaintenance(spark, serial).upsert_arrow_small(batch, sort_cols=SORT)
+    assert _state(spark, d) == _state(spark, serial)

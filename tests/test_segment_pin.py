@@ -83,13 +83,13 @@ def test_maintenance_plans_are_literal_free_past_gate(spark, tmp_path_factory):
     idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
 
     # plan shape: past the gate the pin is a semi-join with no literal list
-    man = idx.storage.read("field_stats")
+    lens = idx.storage.read("doclens")
     live = idx.storage.live_segments()
-    big = pin_segments(man, live, max_isin=1)
+    big = pin_segments(lens, live, max_isin=1)
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan
     small_plan = (
-        pin_segments(man, live)._jdf.queryExecution().executedPlan().toString()
+        pin_segments(lens, live)._jdf.queryExecution().executedPlan().toString()
     )
     assert "LeftSemi" not in small_plan
     assert sorted(

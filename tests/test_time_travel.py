@@ -88,7 +88,7 @@ def test_compaction_fold_keeps_history_until_gc(spark, tmp_path_factory):
     past = LexicalIndex(spark, d, at_generation=1)
     assert _doc_ids(past, "alpha") == survivors  # deletes visible at g1 too
     # lingering folded tombstones don't leak into the current pinned set
-    assert now.engine._tombstone_count == 0
+    assert now.engine._tombstones.count() == 0
 
 
 def test_gc_expires_history_and_records_floor(spark, tmp_path_factory):

@@ -46,7 +46,7 @@ def test_delete_heavy_gate_rank_identical(spark, tmp_path):
     idx, n_dead = _build_delete_heavy(spark, d)
 
     bcast = SearchEngine(spark, d)  # default: forced broadcast
-    assert bcast._tombstone_count == n_dead
+    assert bcast._tombstone_rows == n_dead
     plain = SearchEngine(spark, d)
     plain.tombstone_broadcast_max = 0  # force the shuffled anti-join
 
