@@ -11,6 +11,7 @@ float32 scoring bit-exactly via CAST-to-REAL arithmetic (see
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 from collections.abc import Callable
 
@@ -51,6 +52,14 @@ def _index(spark: SparkSession, sf_dir: str) -> LexicalIndex:
         os.path.basename(key.rstrip("/")) + f"_index_v{FORMAT_VERSION}",
     )
     idx = LexicalIndex(spark, index_dir)
+    if idx.engine_exists():
+        try:
+            idx.engine  # noqa: B018 — opening reads the record
+        except (KeyError, TypeError, ValueError, RuntimeError, OSError):
+            # a cache written by code whose record this code cannot read
+            # (same format version, other fields): rebuild it
+            shutil.rmtree(index_dir)
+            idx = LexicalIndex(spark, index_dir)
     if not idx.engine_exists():
         df = _documents(spark, sf_dir).withColumnRenamed("text", "content")
         idx.build(

@@ -33,6 +33,12 @@ CollapseProject keeps stages separate when an alias is referenced more
 than once by non-cheap expressions, which each pass's three references
 guarantee.
 
+**Two decoders, one layout.**  This Spark scan serves every distributed
+plan.  Small term and phrase queries never build it: the query engine
+scores them on the driver, where the same inclusive scan is one
+``numpy.cumsum`` over all the query's blocks
+(``operators/search.py::_decode_blocks``), with no Spark job.
+
 **Merge-stable:** gaps are relative to their own block, so concat merge
 (Q1: no docid rebase) still copies blocks verbatim.
 
@@ -81,29 +87,17 @@ def encode_entries_expr(packed: str = "packed") -> Column:
     )
 
 
-def with_decoded_docids(
-    df: DataFrame, col: str = "dec", compact: bool = False
-) -> DataFrame:
+def with_decoded_docids(df: DataFrame, col: str = "dec") -> DataFrame:
     """Append ``col``: the block row's absolute docids as ``array<long>``.
 
     An inclusive Hillis-Steele scan over ``entries.d`` (7 staged
     ``zip_with`` passes for the 128-entry block cap), then ``first_doc``
     added once per entry.  Callers
     ``arrays_zip(col, "entries", ...)`` and explode — the scan runs once
-    per BLOCK row, before the explode multiplies rows.
-
-    ``compact=True`` swaps the 7 staged passes (9 ``withColumn`` plan
-    nodes ≈ 9 py4j round-trips + as many optimizer nodes) for ONE
-    ``aggregate`` expression doing a sequential scan with an array
-    accumulator.  Its per-element ``concat`` makes the per-block work
-    quadratic — measured ~1.2× slower than the staged form on a
-    whole-index decode — so callers enable it only when the driver-known
-    posting volume is small (interactive term queries, where the ~70 ms
-    of saved per-query construction dominates a few hundred blocks'
-    decode).  Scan-heavy paths (wide globs, maintenance, unknown df)
-    keep the staged form.  Output is bit-identical (pinned by test)."""
-    if compact:
-        return df.withColumn(col, _decode_expr("compact", col))
+    per BLOCK row, before the explode multiplies rows.  Small interactive
+    queries never build this plan: the query engine scores them on the
+    driver, where the same scan is one ``numpy.cumsum`` over every block
+    (``operators/search.py::_decode_blocks``)."""
     df = df.withColumn(col, _decode_expr("init", col))
     step = 1
     while step < POSTINGS_PER_BLOCK:
@@ -124,16 +118,7 @@ def _decode_expr(stage, col: str) -> Column:
     cached = _DECODE_EXPRS.get(key)
     if cached is not None:
         return cached
-    if stage == "compact":
-        # one-expression inclusive scan; acc.s carries the running
-        # absolute docid (seeded with first_doc; entry 0's gap is 0)
-        e = F.expr(
-            "aggregate(entries, "
-            "struct(first_doc as s, cast(array() as array<bigint>) as a), "
-            "(acc, e) -> struct(acc.s + e.d as s, "
-            "concat(acc.a, array(acc.s + e.d)) as a)).a"
-        )
-    elif stage == "init":
+    if stage == "init":
         e = F.expr("transform(entries, e -> bigint(e.d))")
     elif stage == "final":
         e = F.expr(f"transform({col}, v -> first_doc + v)")

@@ -51,6 +51,7 @@ from ..sources.storage import (
     GenerationState,
     IndexMeta,
     IndexStorage,
+    hidden_generations,
     pin_segments,
     segment_row,
 )
@@ -225,13 +226,9 @@ class IndexMaintenance:
             # generations are fine — readers take distinct.
             prior = prior.where(F.col("generation") <= int(generation))
             if not include_unsealed:
-                inactive = list(state.unsealed) + [
-                    g for g, act in state.overrides.items() if act > int(generation)
-                ]
+                inactive = hidden_generations(int(generation), state, False)
                 if inactive:
-                    prior = prior.where(
-                        ~F.col("generation").isin(sorted(set(inactive)))
-                    )
+                    prior = prior.where(~F.col("generation").isin(inactive))
             elif not dedup_against_pending and state.unsealed:
                 prior = prior.where(~F.col("generation").isin(sorted(state.unsealed)))
             docs = docs.join(prior.select("docid"), on="docid", how="left_anti")

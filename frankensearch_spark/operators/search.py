@@ -1,29 +1,42 @@
-"""Distributed BM25 query execution (exhaustive, rank-exact path).
+"""BM25 query execution (exhaustive, rank-exact).
 
 Query lifecycle (reference: ``index.rs:7249`` search_paginated — §3.1 of the
-survey), re-expressed as one declarative DataFrame plan:
+survey):
 
 1. **Driver**: parse (lenient) -> canonicalize -> compile to an
    :class:`~frankensearch_spark.plans.eval.EvalPlan` (leaf specs + f32 eval
    tree).  Per-leaf BM25 weights are computed driver-side in numpy float32
    from snapshot stats (N, avgdl, df) — the analogue of TermScorer::new
-   (``argus.rs:1521``).
-2. **Leaf frames**: one broadcast-hash-join of the (tiny) query-term frame
-   against the bucket-pruned postings table; blocks explode to
-   ``(docid, leaf_id, freq, fnid)``; an Arrow-batched pandas UDF computes
-   the exact f32 ``weight * f / (f + tf_cache[fnid])`` per posting.  The
-   denormalized per-posting fieldnorm ids make this join-free beyond the
-   postings themselves.
-3. **Combine**: candidates pivot to one row per docid with one score column
-   per leaf (single shuffle), then the shared f32 tree evaluator
-   (plans/eval.py — the same code the oracle runs) computes matched/score
-   per doc in fixed accumulation order.
-4. **Top-k**: ``ORDER BY score DESC, docid ASC LIMIT k+offset`` — Spark's
+   (``argus.rs:1521``).  Doc frequencies come from the driver-side term
+   dictionary (:mod:`..sources.termdict`), so no step so far runs a job.
+2. **Driver scoring** (the default for small queries): when every leaf is
+   a text term or slop-0 phrase, storage is local parquet, and both the
+   summed doc frequency and the view's tombstone row bound are at most
+   :data:`DRIVER_SCORE_MAX_POSTINGS`, the query terms' row groups are read
+   from the pinned postings files with pyarrow, the docid gaps decoded
+   with ``numpy.cumsum``, scored with ``contract.term_scores``, combined
+   by the shared ``plans/eval.py::evaluate_tree`` and cut to the top-k
+   with ``np.lexsort`` — the reference TermScorer scoring straight off
+   in-memory postings (``argus.rs:1521-1626``), with no Spark job.  Any
+   other query (or ``prune=True``/``False``) runs the Spark plan below;
+   :attr:`SearchEngine.last_path` records which one ran and why.
+3. **Leaf frames**: the bucket-pruned postings scan with the query terms'
+   leaf ids and weights inlined as literals; blocks explode to
+   ``(docid, leaf_id, freq, fnid)`` and the exact f32
+   ``weight * f / (f + tf_cache[fnid])`` is computed per posting
+   JVM-side.  The denormalized per-posting fieldnorm ids make this
+   join-free beyond the postings themselves.
+4. **Combine**: candidates pivot to one row per docid with one score column
+   per leaf (single shuffle), then the f32 eval tree compiled to JVM
+   expressions (the bit-exact mirror of ``evaluate_tree``, which the
+   oracle runs) computes matched/score per doc in fixed accumulation order.
+5. **Top-k**: ``ORDER BY score DESC, docid ASC LIMIT k+offset`` — Spark's
    TakeOrderedAndProject is the distributed analogue of the reference's
    packed-key collector (``argus.rs:5266``: total order = score desc,
    docid asc).
-5. **Materialize**: only the k winners join back to the docs table
-   (two-phase materialization, ``argus.rs:5587``).
+6. **Materialize**: only the k winners are read back from the docs table
+   (two-phase materialization, ``argus.rs:5587``), on the driver when the
+   row-group-pruned read fits its budget.
 """
 
 from __future__ import annotations
@@ -32,6 +45,7 @@ from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Iterator, Optional, Sequence
 
+import bisect
 import json
 import os
 import threading
@@ -51,9 +65,9 @@ from pyspark.sql.types import (
 
 from ..functions.codec import with_decoded_docids
 from ..functions.contract import (
-    BM25_K1,
     POSTINGS_PER_BLOCK,
     compute_tf_cache,
+    term_scores,
     term_weight,
 )
 from ..functions.snippet import SnippetGenerator
@@ -65,6 +79,7 @@ from ..plans.eval import (
     LeafSpec,
     compile_query,
     compile_tree_columns,
+    evaluate_tree,
     phrase_weight,
 )
 from ..sources.storage import TOMBSTONE_BROADCAST_MAX, IndexStorage
@@ -103,14 +118,13 @@ SMALL_PIVOT_MAX_ROWS = 1_000_000
 #: own InSet/semi-join gates before reaching here anyway).
 QTERM_INLINE_MAX = 20
 
-#: Use the ONE-expression compact gap decode (codec.with_decoded_docids
-#: compact=True) when the query's driver-known summed doc frequency is at
-#: most this many postings.  The compact scan trades ~1.2× decode CPU
-#: (quadratic per-block concat) for 8 fewer plan nodes and py4j round
-#: trips per decode site (~70 ms of per-query construction); at 4M
-#: postings the extra decode work is ~100 ms spread across the cluster,
-#: past it the staged zip_with form wins back.
-COMPACT_DECODE_MAX_POSTINGS = 4_000_000
+#: Score on the driver, with no Spark job, when the query's summed doc
+#: frequency (over its distinct term and phrase-member (field, term)
+#: pairs — the postings it reads) and the view's tombstone row bound are
+#: both at most this many rows (see :meth:`SearchEngine._driver_gate`).
+#: The driver then holds a few arrays of this length (~25 MB at the
+#: bound).  Past it the Spark plan spreads the decode across executors.
+DRIVER_SCORE_MAX_POSTINGS = 1 << 20
 
 
 @dataclass
@@ -236,6 +250,14 @@ class SearchEngine:
         )
         self._tombstones_df: Optional[DataFrame] = None
         self._tombstones_pending = True
+        #: the same pinned set as a sorted int64 array for the driver
+        #: scoring path (read with pyarrow on its first use)
+        self._tombstone_docids: Optional[np.ndarray] = None
+        #: ("driver", None) when the last uncached search was scored on
+        #: the driver, else ("spark", reason) — reason names the first
+        #: gate of :meth:`_driver_gate` that declined (or "forced" for an
+        #: explicit ``prune=True``/``False``)
+        self.last_path: Optional[tuple] = None
         #: Force-broadcast the tombstone anti-join only up to this many
         #: tombstoned docids (sources.storage.TOMBSTONE_BROADCAST_MAX);
         #: larger sets use a plain left_anti join so a delete-heavy index
@@ -353,13 +375,17 @@ class SearchEngine:
     ) -> SearchResult:
         """Ranked top-k search.
 
-        ``prune`` selects the execution plan: ``"auto"`` (default) engages
-        the rank-safe pruned plan exactly when the reference's strategy
-        gates would pick MaxScore or Block-Max WAND for the query
-        (``argus.rs:4464-4529``; see :func:`pruned.select_strategy`);
-        ``True`` forces it whenever the shape applies (the differential
-        suite's lever); ``False`` forces the exhaustive plan.  All three
-        are rank-identical by the pruning contract.
+        ``prune`` selects the execution plan.  ``"auto"`` (default)
+        engages the rank-safe pruned Spark plan exactly when the
+        reference's strategy gates would pick MaxScore or Block-Max WAND
+        for the query (``argus.rs:4464-4529``; see
+        :func:`pruned.select_strategy`); otherwise it scores small term
+        and phrase queries on the driver with no Spark job (see
+        :meth:`_driver_gate`) and everything else with the exhaustive
+        Spark plan.  ``True`` forces the pruned Spark plan whenever the
+        shape applies (the differential suite's lever); ``False`` forces
+        the exhaustive Spark plan.  All paths are rank-identical;
+        :attr:`last_path` records the one the last uncached search took.
 
         ``hydrate_fields`` optionally joins stored columns onto the k
         winners, pinned to the scoring snapshot (reference
@@ -402,8 +428,16 @@ class SearchEngine:
         tree = self._parse(query)
         plan = compile_query(q.canonicalize_query(tree))
         if plan.is_empty:
+            self.last_path = ("driver", None)
             return SearchResult(hits=_empty_hits(), total_count=0 if exact_count else None)
         charged = self._charge_fuel(plan)
+        self.last_path = (
+            self._driver_gate(plan, exact_count)
+            if prune == "auto"
+            else ("spark", "forced")
+        )
+        if self.last_path[0] == "driver":
+            return self._search_driver(plan, limit, offset, exact_count, hydrate, charged)
         scored = None
         # exact_count needs every match counted, so pruning never applies
         if prune and not exact_count:
@@ -509,6 +543,256 @@ class SearchEngine:
         winners = winners.iloc[offset:].reset_index(drop=True)
         hits = self._materialize(winners, hydrate)
         return SearchResult(hits=hits, total_count=total, fuel_units=charged)
+
+    # ── driver scoring ────────────────────────────────────────────────────
+
+    def _driver_gate(self, plan: EvalPlan, exact_count: bool) -> tuple:
+        """Where ``prune="auto"`` scores ``plan``: ``("driver", None)``,
+        or ``("spark", reason)`` naming the first gate that declined.
+
+        The driver path needs local parquet files (``"format"``), only
+        text term and phrase leaves (``"leaf_kind"``; globs, ranges, sets,
+        All and keyword-field terms read the docs table or the whole
+        dictionary), slop-0 phrases (``"slop"``), a view tombstone row
+        bound (``"tombstone_bound"``) and a summed doc frequency
+        (``"postings_bound"``) of at most :data:`DRIVER_SCORE_MAX_POSTINGS`.
+        A query the reference would prune keeps the pruned Spark plan
+        (``"pruned"``).  Every input is on the driver already; nothing
+        here runs a job.
+        """
+        if self.storage.format != "parquet":
+            return ("spark", "format")
+        pairs = set()
+        for leaf in plan.leaves:
+            if leaf.kind not in ("term", "phrase") or not self._is_text(leaf.field):
+                return ("spark", "leaf_kind")
+            if leaf.kind == "phrase" and leaf.slop != 0:
+                return ("spark", "slop")
+            pairs.update(_leaf_pairs(leaf))
+        if self._tombstone_rows > DRIVER_SCORE_MAX_POSTINGS:
+            return ("spark", "tombstone_bound")
+        if sum(self._doc_freqs(sorted(pairs)).values()) > DRIVER_SCORE_MAX_POSTINGS:
+            return ("spark", "postings_bound")
+        if not exact_count:
+            from .pruned import select_strategy
+
+            if select_strategy(self, plan) is not None:
+                return ("spark", "pruned")
+        return ("driver", None)
+
+    def _search_driver(
+        self,
+        plan: EvalPlan,
+        limit: int,
+        offset: int,
+        exact_count: bool,
+        hydrate: tuple,
+        charged: int,
+    ) -> SearchResult:
+        """Score ``plan`` on the driver (see the module docstring, step 2).
+
+        Rank-identical to the exhaustive Spark plan: the same f32 per
+        posting arithmetic (``contract.term_scores``), the same eval tree
+        (``evaluate_tree``, which ``compile_tree_columns`` mirrors), the
+        same total order (score desc, docid asc) and the same pinned
+        tombstone set, subtracted from the candidates before the tree
+        runs.
+        """
+        lists = self._driver_postings(plan)
+        leaves = {}
+        for leaf in plan.leaves:
+            scored = (
+                self._driver_term_leaf(leaf, lists)
+                if leaf.kind == "term"
+                else self._driver_phrase_leaf(leaf, lists)
+            )
+            if scored is not None:
+                leaves[leaf.leaf_id] = scored
+        if not leaves:
+            return SearchResult(
+                hits=_empty_hits(),
+                total_count=0 if exact_count else None,
+                fuel_units=charged,
+            )
+        cand = np.unique(np.concatenate([d for d, _ in leaves.values()]))
+        dead = self._driver_tombstones()
+        if dead.size:
+            cand = cand[~np.isin(cand, dead, assume_unique=True)]
+        n = len(cand)
+        spread: dict[int, tuple] = {}
+
+        def leaf_arrays(lid: int) -> tuple:
+            if lid not in spread:
+                m = np.zeros(n, dtype=bool)
+                s = np.zeros(n, dtype=np.float32)
+                if lid in leaves and n:
+                    docids, scores = leaves[lid]
+                    at = np.searchsorted(cand, docids)
+                    hit = at < n
+                    hit[hit] = cand[at[hit]] == docids[hit]
+                    m[at[hit]] = True
+                    s[at[hit]] = scores[hit]
+                spread[lid] = (m, s)
+            return spread[lid]
+
+        matched, score = evaluate_tree(
+            plan.spec, lambda i: leaf_arrays(i)[0], lambda i: leaf_arrays(i)[1], n
+        )
+        docids, score = cand[matched], score[matched]
+        top = np.lexsort((docids, -score))[offset : offset + limit]
+        winners = pd.DataFrame(
+            {
+                "docid": docids[top].astype(np.int64),
+                "score": score[top].astype(np.float32),
+            }
+        )
+        return SearchResult(
+            hits=self._materialize(winners, hydrate),
+            total_count=int(matched.sum()) if exact_count else None,
+            fuel_units=charged,
+        )
+
+    def _driver_term_leaf(self, leaf: LeafSpec, lists: dict) -> Optional[tuple]:
+        """(docids, f32 scores) of one text term leaf, None when dead."""
+        df_ = self._doc_freq_cache.get((leaf.field, leaf.term), 0)
+        cache = self.tf_cache[leaf.field]
+        if df_ == 0 or cache is None:
+            return None
+        pl = lists[(leaf.field, leaf.term)]
+        weight = term_weight(df_, self.doc_count, leaf.boost)
+        return pl.docid, term_scores(pl.freq, pl.fnid, cache, weight)
+
+    def _driver_phrase_leaf(self, leaf: LeafSpec, lists: dict) -> Optional[tuple]:
+        """(docids, f32 scores) of one slop-0 phrase leaf, None when no
+        doc can match.  A doc's frequency is its number of distinct start
+        positions ``p - off`` shared by every member term (the Spark
+        plan's chained ``array_intersect`` of distinct shifted
+        positions); its fieldnorm id is member 0's."""
+        cache = self.tf_cache[leaf.field]
+        if not self.meta.positions or cache is None:
+            return None
+        pairs = _leaf_pairs(leaf)
+        dfs = [self._doc_freq_cache.get(p, 0) for p in pairs]
+        if 0 in dfs:
+            return None  # a missing term can never phrase-match
+        docs = lists[pairs[0]].docid
+        for p in pairs[1:]:
+            docs = np.intersect1d(docs, lists[p].docid, assume_unique=True)
+        if not docs.size:
+            return None
+        starts = None
+        for (off, _), p in zip(leaf.terms, pairs):
+            pl = lists[p]
+            at = np.searchsorted(docs, pl.pos_doc)
+            inside = at < len(docs)
+            inside[inside] = docs[at[inside]] == pl.pos_doc[inside]
+            # (doc rank, shifted position) packed into one int64 key
+            key = np.unique(
+                (at[inside].astype(np.int64) << 32)
+                + (pl.pos[inside].astype(np.int64) - int(off) + (1 << 31))
+            )
+            starts = (
+                key
+                if starts is None
+                else np.intersect1d(starts, key, assume_unique=True)
+            )
+        freq = np.bincount(starts >> 32, minlength=len(docs))
+        hit = freq > 0
+        if not hit.any():
+            return None
+        first = lists[pairs[0]]
+        fnid = first.fnid[np.searchsorted(first.docid, docs[hit])]
+        weight = phrase_weight(dfs, self.doc_count, leaf.boost)
+        return docs[hit], term_scores(freq[hit], fnid, cache, weight)
+
+    def _driver_postings(self, plan: EvalPlan) -> dict:
+        """``(field, term) -> _PostingList`` for every pair the plan's
+        leaves read, concatenated over the live segments.
+
+        Only the row groups whose term min/max statistics admit a query
+        term are read (the files are term-clustered); positions are read
+        only for phrase members.  Each list is sorted by docid, and a
+        docid seen twice for one pair — two posting entries for one
+        (doc, term), which no writer may produce — raises instead of
+        being absorbed.
+        """
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        pieces: dict[tuple, list] = {
+            p: [] for leaf in plan.leaves for p in _leaf_pairs(leaf)
+        }
+        phrased = {
+            p for leaf in plan.leaves if leaf.kind == "phrase" for p in _leaf_pairs(leaf)
+        }
+        by_bucket: dict[int, set] = {}
+        for pair in pieces:
+            by_bucket.setdefault(_bucket(pair[1], self.meta.num_buckets), set()).add(pair)
+        files = self._dictionary_files()
+        for bucket, group in by_bucket.items():
+            terms = sorted({t for _, t in group})
+            positions = self.meta.positions and not group.isdisjoint(phrased)
+            for path in files.get(bucket, []):
+                tbl = self._read_term_rows(path, terms, positions)
+                if tbl is None:
+                    continue
+                # a row group holds many terms; decode only the query's
+                tbl = tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(terms)))
+                for pair, piece in _decode_blocks(tbl, group, positions).items():
+                    pieces[pair].append(piece)
+        out = {}
+        for pair, parts in pieces.items():
+            pl = _PostingList.concat(parts)
+            if pl.docid.size > 1 and not (np.diff(pl.docid) > 0).all():
+                raise RuntimeError(
+                    f"posting list of {pair} repeats a docid across the live "
+                    "segments: a (doc, term) pair was written twice"
+                )
+            out[pair] = pl
+        return out
+
+    def _read_term_rows(self, path: str, terms: list, positions: bool):
+        """The row groups of one postings file whose term statistics admit
+        one of ``terms`` (sorted): an Arrow table of ``field, term,
+        first_doc, entries`` (+ ``positions``), or None."""
+        import pyarrow.parquet as pq
+
+        with pq.ParquetFile(path) as pf:
+            md = pf.metadata
+            term = [md.schema.column(i).path for i in range(md.num_columns)].index("term")
+            groups = []
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(term).statistics
+                if (
+                    st is None
+                    or not st.has_min_max
+                    or bisect.bisect_right(terms, st.max) > bisect.bisect_left(terms, st.min)
+                ):
+                    groups.append(g)
+            if not groups:
+                return None
+            cols = ["field", "term", "first_doc", "entries"]
+            if positions and "positions" in pf.schema_arrow.names:
+                cols.append("positions")
+            return pf.read_row_groups(groups, columns=cols)
+
+    def _driver_tombstones(self) -> np.ndarray:
+        """The pinned tombstone docids as a sorted int64 array (read with
+        pyarrow on first use, under the same view rules as
+        :attr:`_tombstones`)."""
+        if self._tombstone_docids is None:
+            self._tombstone_docids = (
+                IndexStorage.pinned_tombstone_docids(
+                    self.generation,
+                    self._tombstone_files,
+                    self._gen_state,
+                    self.live_segments,
+                    include_unsealed=self._include_unsealed,
+                )
+                if self._tombstone_rows
+                else np.zeros(0, dtype=np.int64)
+            )
+        return self._tombstone_docids
 
     def _pivot_rows_bound(self, plan: EvalPlan) -> int:
         """Zero-job upper bound on the combine pivot's input rows.
@@ -635,7 +919,7 @@ class SearchEngine:
             hits = hits.assign(snippet=None)
             return SearchResult(hits=hits, total_count=result.total_count)
         docids = [int(d) for d in hits["docid"]]
-        stored = self._point_read_docs(docs, docids, ["docid", snippet_field])
+        stored = self._point_read_docs(docids, ["docid", snippet_field])
         text_of = dict(zip(stored["docid"], stored[snippet_field]))
         hits = hits.assign(
             snippet=[generator.snippet(str(text_of.get(d) or "")) for d in docids]
@@ -1033,20 +1317,26 @@ class SearchEngine:
         return {p: self._doc_freq_cache[p] for p in pairs}
 
     def _dictionary_files(self) -> dict[int, list[str]]:
-        """This snapshot's dictionary files by bucket, listed once.
+        """This snapshot's postings files by bucket, listed once on the
+        driver.
 
-        The file list is ``inputFiles()`` of the pinned postings relation
-        the scoring scan reads, so the dictionary and the scan see the
-        same files; non-live segments' files are dropped by their
-        ``segment_id=K`` directory.
+        Each live segment's ``segment_id=K/bucket=B`` directories are
+        listed with ``os.scandir`` (as hydration lists ``docs``), skipping
+        the ``_``/``.``-prefixed entries Spark's reader skips, so the
+        dictionary, the driver scoring path and the Spark scan see the
+        same files and building the list runs no job.
         """
         if self._dict_files is None:
-            live = set(self.live_segments)
+            root = self.storage.path("postings")
             by_bucket: dict[int, list[str]] = {}
-            for uri in self._base_table("postings").inputFiles():
-                part = termdict.partition_values(uri)
-                if part["segment_id"] in live:
-                    by_bucket.setdefault(part["bucket"], []).append(uri)
+            for seg in self.live_segments:
+                for bdir in _visible(os.path.join(root, f"segment_id={seg}")):
+                    if bdir.is_dir() and bdir.name.startswith("bucket="):
+                        by_bucket.setdefault(int(bdir.name.partition("=")[2]), []).extend(
+                            f.path
+                            for f in _visible(bdir.path)
+                            if f.name.endswith(".parquet")
+                        )
             self._dict_files = by_bucket
         return self._dict_files
 
@@ -1082,20 +1372,6 @@ class SearchEngine:
             )
         return rows
 
-    def _compact_decode_ok(self, pairs) -> bool:
-        """True when every (field, term) df is cached and their sum stays
-        under :data:`COMPACT_DECODE_MAX_POSTINGS` — the gate for the
-        one-expression compact gap decode.  Unknown dfs fail safe to the
-        staged decode (an unresolved pair usually means a scan-heavy path
-        resolved its weights elsewhere)."""
-        total = 0
-        for pair in pairs:
-            df_ = self._doc_freq_cache.get(pair)
-            if df_ is None:
-                return False
-            total += df_
-        return total <= COMPACT_DECODE_MAX_POSTINGS
-
     def _exploded_postings(self, rows: list[tuple], postings: DataFrame) -> DataFrame:
         """Join query-term rows against postings and explode to per-doc rows.
 
@@ -1118,9 +1394,6 @@ class SearchEngine:
         leaves need one output row PER leaf, which only the join form
         produces — they (and glob-scale row lists) keep the join."""
         postings = postings.where(F.col("term").isin(sorted({r[2] for r in rows})))
-        compact = self._compact_decode_ok(
-            (r[1], r[2]) for r in rows
-        )
         if (
             len(rows) <= QTERM_INLINE_MAX
             and len({(r[1], r[2]) for r in rows}) == len(rows)
@@ -1139,7 +1412,7 @@ class SearchEngine:
                 .withColumn("weight", weight_expr)
                 .where(F.col("leaf_id").isNotNull())
             )
-            joined = with_decoded_docids(joined, compact=compact)
+            joined = with_decoded_docids(joined)
             return joined.select(
                 "leaf_id",
                 "field",
@@ -1161,7 +1434,7 @@ class SearchEngine:
         joined = postings.join(
             F.broadcast(qterms), on=["field", "term", "bucket"], how="inner"
         )
-        joined = with_decoded_docids(joined, compact=compact)
+        joined = with_decoded_docids(joined)
         return joined.select(
             "leaf_id",
             "field",
@@ -1428,9 +1701,7 @@ class SearchEngine:
                 F.broadcast(qterms), on=["field", "term", "bucket"], how="inner"
             )
         rows = (
-            with_decoded_docids(
-                matched, compact=self._compact_decode_ok(set(pairs))
-            )
+            with_decoded_docids(matched)
             .select(
                 "ord",
                 "off",
@@ -1807,14 +2078,14 @@ class SearchEngine:
         out = out.drop_duplicates(subset=["docid"])
         return out[[c for c in cols]][out["docid"].isin(want)].reset_index(drop=True)
 
-    def _point_read_docs(
-        self, docs: DataFrame, docids: list, cols: list
-    ) -> pd.DataFrame:
+    def _point_read_docs(self, docids: list, cols: list) -> pd.DataFrame:
         """O(k) point-read of stored columns for k docids.
 
         Served driver-side (zero Spark jobs) when the row-group-pruned
         pyarrow read fits the budget — see :meth:`_point_read_docs_driver`
-        — else by the distributed plan below.
+        — else by the distributed plan below.  The docs DataFrame is only
+        built for that fallback, so a driver-served read runs no job, not
+        even schema inference.
 
         Manifest docid spans -> partition pruning: only the <=k segment
         directories that can contain a requested docid are scanned (a
@@ -1826,6 +2097,13 @@ class SearchEngine:
         driver = self._point_read_docs_driver(docids, cols)
         if driver is not None:
             return driver
+        docs = self._read_live("docs")
+        missing = [c for c in cols if c not in docs.columns]
+        if missing:
+            raise ValueError(
+                f"hydrate_fields not stored in this index: {missing}; "
+                f"available: {sorted(set(docs.columns) - {'docid', 'segment_id'})}"
+            )
         if len(docids) <= self.segment_pin_isin_max:
             hydra = docs.where(F.col("docid").isin(docids))
         else:
@@ -1863,16 +2141,8 @@ class SearchEngine:
                 hits[name] = pd.Series(dtype=object)
             return hits
         docids = [int(d) for d in winners["docid"]]
-        docs = self._read_live("docs")
-        if hydrate:
-            missing = [c for c in hydrate if c not in docs.columns]
-            if missing:
-                raise ValueError(
-                    f"hydrate_fields not stored in this index: {missing}; "
-                    f"available: {sorted(set(docs.columns) - {'docid', 'segment_id'})}"
-                )
         cols = ["docid", "doc_id", *[c for c in hydrate if c != "doc_id"]]
-        stored = self._point_read_docs(docs, docids, cols)
+        stored = self._point_read_docs(docids, cols)
         merged = winners.merge(stored, on="docid", how="left")
         merged["rank"] = range(1, len(merged) + 1)
         return merged[["docid", "doc_id", "score", "rank", *[c for c in hydrate if c != "doc_id"]]]
@@ -1893,6 +2163,105 @@ def _slop_starts(sets: list[set], slop: int) -> set:
         if ok:
             starts.add(s)
     return starts
+
+
+def _visible(path: str) -> list:
+    """Sorted directory entries of ``path`` without the ``_``/``.``-prefixed
+    ones (in-flight writes, markers, checksums); empty when ``path`` is
+    missing."""
+    try:
+        entries = list(os.scandir(path))
+    except FileNotFoundError:
+        return []
+    return sorted(
+        (e for e in entries if not e.name.startswith(("_", "."))), key=lambda e: e.name
+    )
+
+
+def _leaf_pairs(leaf: LeafSpec) -> list[tuple[str, str]]:
+    """The (field, term) pairs whose postings a term or phrase leaf reads,
+    phrase members in phrase order (a repeated member repeats)."""
+    if leaf.kind == "phrase":
+        return [(leaf.field, t) for _, t in leaf.terms]
+    return [(leaf.field, leaf.term)]
+
+
+@dataclass
+class _PostingList:
+    """One (field, term)'s live postings on the driver: per entry
+    ``docid``/``freq``/``fnid``, and per position ``pos`` with the docid
+    of its entry in ``pos_doc`` (empty when positions were not read)."""
+
+    docid: np.ndarray
+    freq: np.ndarray
+    fnid: np.ndarray
+    pos_doc: np.ndarray
+    pos: np.ndarray
+
+    @classmethod
+    def concat(cls, parts: list) -> "_PostingList":
+        """Concatenate per-file pieces and sort the entries by docid."""
+        if not parts:
+            return cls(*(np.zeros(0, dtype=np.int64) for _ in range(5)))
+        docid = np.concatenate([p.docid for p in parts])
+        order = np.argsort(docid, kind="stable")
+        return cls(
+            docid[order],
+            np.concatenate([p.freq for p in parts])[order],
+            np.concatenate([p.fnid for p in parts])[order],
+            np.concatenate([p.pos_doc for p in parts]),
+            np.concatenate([p.pos for p in parts]),
+        )
+
+
+def _decode_blocks(tbl, pairs: set, positions: bool) -> dict:
+    """Decode posting block rows (``field, term, first_doc, entries``
+    [+ ``positions``]) to one :class:`_PostingList` per pair of ``pairs``
+    present in ``tbl``.
+
+    Docids are the Spark decode's inclusive scan of the entry gaps plus
+    ``first_doc``, vectorized over every block at once:
+    ``first_doc + cumsum(d) - (exclusive cumsum at the block start)``.
+    """
+    import pyarrow.compute as pc
+
+    def ints(arr) -> np.ndarray:
+        return np.asarray(arr.to_numpy(), dtype=np.int64)
+
+    lengths = ints(pc.list_value_length(tbl["entries"]))
+    flat = pc.list_flatten(tbl["entries"])
+    gaps = ints(pc.struct_field(flat, "d"))
+    block_of = np.repeat(np.arange(len(lengths)), lengths)
+    start_of = np.repeat(np.cumsum(lengths) - lengths, lengths)
+    csum = np.cumsum(gaps)
+    docid = ints(tbl["first_doc"])[block_of] + csum - (csum - gaps)[start_of]
+    index = {pair: i for i, pair in enumerate(sorted(pairs))}
+    row_key = np.array(
+        [
+            index.get(ft, -1)
+            for ft in zip(tbl["field"].to_pylist(), tbl["term"].to_pylist())
+        ],
+        dtype=np.int64,
+    )
+    entry_key = row_key[block_of]
+    freq = ints(pc.struct_field(flat, "freq"))
+    fnid = ints(pc.struct_field(flat, "fnid"))
+    if positions and "positions" in tbl.column_names:
+        inner = pc.list_flatten(tbl["positions"])
+        pos_entry = np.repeat(np.arange(len(docid)), ints(pc.list_value_length(inner)))
+        pos = ints(pc.list_flatten(inner))
+    else:
+        pos_entry = pos = np.zeros(0, dtype=np.int64)
+    pos_key = entry_key[pos_entry]
+    out = {}
+    for pair, k in index.items():
+        sel = entry_key == k
+        if sel.any():
+            psel = pos_key == k
+            out[pair] = _PostingList(
+                docid[sel], freq[sel], fnid[sel], docid[pos_entry[psel]], pos[psel]
+            )
+    return out
 
 
 def _bucket(term: str, num_buckets: int) -> int:

@@ -209,6 +209,32 @@ class GenerationState:
         return self.any_gen if include_unsealed else self.sealed_gen
 
 
+def hidden_generations(
+    generation: int, gen_state: GenerationState, include_unsealed: bool
+) -> list[int]:
+    """Staged generations whose tombstone rows a reader pinned at
+    ``generation`` must not apply, even though they are ``<= generation``.
+
+    The one statement of the tombstone view rules, shared by the Spark
+    and the driver-side readers (:meth:`IndexStorage.pinned_tombstones`,
+    :meth:`IndexStorage.pinned_tombstone_docids`): a row applies when its
+    generation is ``<= generation``, is not listed here, and its segment
+    is live in the reader's view.
+
+    * Tombstones staged by a still-unsealed batch activate only at
+      seal(), together with their replacement segments, so they are
+      hidden unless the reader opted into dirty reads.
+    * Batches already sealed by seal() activate at ``sealed_at``: a row
+      whose staged generation passes the ``<=`` test may still be in this
+      reader's future (snapshot immutability across seal).
+    """
+    hidden = set()
+    if not include_unsealed:
+        hidden |= gen_state.unsealed
+    hidden |= {g for g, act in gen_state.overrides.items() if act > generation}
+    return sorted(hidden)
+
+
 @dataclass
 class IndexMeta:
     text_fields: list[str]
@@ -761,19 +787,51 @@ class IndexStorage:
             return None
         df = self.spark.read.schema(TOMBSTONE_DDL).parquet(*files)
         df = df.where(F.col("generation") <= generation)
-        if not include_unsealed and gen_state.unsealed:
-            # tombstones staged by a still-unsealed batch activate only
-            # at seal(), together with their replacement segments
-            df = df.where(~F.col("generation").isin(sorted(gen_state.unsealed)))
-        # batches already sealed by seal() activate at sealed_at: a row
-        # whose staged generation passed the <= filter above may still
-        # be in this reader's future (snapshot immutability across seal)
-        late = sorted(g for g, act in gen_state.overrides.items() if act > generation)
-        if late:
-            df = df.where(~F.col("generation").isin(late))
+        hidden = hidden_generations(generation, gen_state, include_unsealed)
+        if hidden:
+            df = df.where(~F.col("generation").isin(hidden))
         if live_segments is not None:
             df = pin_segments(df, live_segments, self.segment_pin_isin_max)
         return df.select("docid").distinct().persist()
+
+    @staticmethod
+    def pinned_tombstone_docids(
+        generation: int,
+        files: list,
+        gen_state: GenerationState,
+        live_segments,
+        include_unsealed: bool = False,
+    ):
+        """Driver-side twin of :meth:`pinned_tombstones`: the same view
+        rules applied with pyarrow to the same files, returned as a sorted
+        unique int64 numpy array.  No Spark job; sized for sets the record's
+        row bound has already proven small."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if not files:
+            return np.zeros(0, dtype=np.int64)
+        schema = pa.schema(
+            [("docid", pa.int64()), ("segment_id", pa.int32()), ("generation", pa.int64())]
+        )
+
+        def read(path):
+            with pq.ParquetFile(path) as pf:
+                return pf.read(columns=schema.names).cast(schema)
+
+        tbl = pa.concat_tables(read(f) for f in files)
+        live = pa.array(list(live_segments), pa.int32())
+        keep = pc.and_(
+            pc.less_equal(tbl["generation"], generation),
+            pc.is_in(tbl["segment_id"], value_set=live),
+        )
+        hidden = hidden_generations(generation, gen_state, include_unsealed)
+        if hidden:
+            hide = pc.is_in(tbl["generation"], value_set=pa.array(hidden, pa.int64()))
+            keep = pc.and_(keep, pc.invert(hide))
+        return np.unique(tbl["docid"].filter(keep).to_numpy().astype(np.int64))
 
     def tombstone_file_count(self, n_rows: int) -> int:
         """Output files for a tombstone write of ``n_rows`` (≥1)."""

@@ -5,7 +5,9 @@ query class whose plan the phrase-aggregation (#2b) and hand-rolled
 pivot (#2c) rewrites touched, verifies the engine's exact_count against
 an INDEPENDENT duckdb regex count over the raw corpus text (words are
 single-space-joined "wN" tokens, so whole-token adjacency in the token
-stream equals string adjacency), and records warm top-10 latency.
+stream equals string adjacency), and records warm top-10 latency, the
+path each query took (``SearchEngine.last_path``: ``driver`` or
+``spark:<reason>``) and the driver's Python RSS after each class.
 
 Before the query cases it records the driver-side term dictionary's
 costs on a fresh engine: the load time and bytes of the first query of
@@ -35,6 +37,7 @@ from frankensearch_spark.sources.transcripts import synthetic_transcripts  # noq
 # (name, engine query, duckdb predicate over text)
 T = "(^| ){}( |$)"
 CASES = [
+    ("single_term", "w3", f"regexp_matches(text, '{T.format('w3')}')"),
     ("phrase", '"w3 w3"', f"regexp_matches(text, '{T.format('w3 w3')}')"),
     (
         "multi_term_or",
@@ -62,6 +65,12 @@ def _rss_mb() -> float:
             if line.startswith("VmRSS:"):
                 return int(line.split()[1]) / 1024
     return 0.0
+
+
+def _path(engine) -> str:
+    """The last uncached search's path: ``driver`` or ``spark:<reason>``."""
+    where, reason = engine.last_path
+    return where if reason is None else f"{where}:{reason}"
 
 
 def _read_bytes(uri: str) -> tuple[int, int]:
@@ -132,6 +141,7 @@ def main() -> None:
             t0 = time.time()
             got = idx.search(qstr, exact_count=True).total_count
             out[f"{name}_count_sec"] = round(time.time() - t0, 2)
+            out[f"{name}_count_path"] = _path(idx.engine)
             exp = con.execute(
                 f"select count(*) from '{glob_path}' where {pred}"
             ).fetchone()[0]
@@ -142,6 +152,8 @@ def main() -> None:
             idx.engine._query_cache.clear()
             idx.search(qstr, limit=10)
             out[f"{name}_top10_sec"] = round(time.time() - t0, 3)
+            out[f"{name}_path"] = _path(idx.engine)
+            out[f"{name}_rss_mb"] = round(_rss_mb(), 1)
         out["ok"] = all(out[f"{n}_match"] for n, _, _ in CASES)
         print(json.dumps(out))
     finally:

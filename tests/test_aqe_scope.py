@@ -34,7 +34,7 @@ def test_single_leaf_skips_aqe_without_touching_shared_conf(spark, tmp_path_fact
 
     spark.conf.set = spy
     try:
-        hits = idx.search("w3", limit=10).hits
+        hits = idx.search("w3", limit=10, prune=False).hits
     finally:
         spark.conf.set = original_set
     assert len(hits) > 0
@@ -54,7 +54,7 @@ def test_single_leaf_skips_aqe_without_touching_shared_conf(spark, tmp_path_fact
         try:
             while not stop.is_set():
                 eng._query_cache.clear()
-                idx.search("w7", limit=5)
+                idx.search("w7", limit=5, prune=False)
         except Exception as e:  # pragma: no cover
             errors.append(e)
 
@@ -78,9 +78,11 @@ def test_rebound_results_identical_across_plan_paths(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("aqe_eq_ix"))
     corpus = synthetic_transcripts(spark, 300, vocab_size=100)
     idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=2, num_buckets=4)
-    single = idx.search("w3", limit=10, exact_count=True)
+    single = idx.search("w3", limit=10, exact_count=True, prune=False)
     # same leaf through an OR with a vanishing term -> multi-leaf plan
-    both = idx.search("w3 OR zzneverinthecorpus", limit=10, exact_count=True)
+    both = idx.search(
+        "w3 OR zzneverinthecorpus", limit=10, exact_count=True, prune=False
+    )
     assert list(single.hits["doc_id"]) == list(both.hits["doc_id"])
     assert np.array_equal(
         np.asarray(single.hits["score"], dtype=np.float32),
@@ -110,10 +112,10 @@ def test_small_pivot_gate_rank_identical_both_sides(spark, tmp_path_factory, mon
     assert bound == 2 * eng.doc_count  # no dfs resolved -> conservative
     assert bound <= search_mod.SMALL_PIVOT_MAX_ROWS  # gate opens here
 
-    small = idx.search("w1 w2", limit=10, exact_count=True)
+    small = idx.search("w1 w2", limit=10, exact_count=True, prune=False)
     monkeypatch.setattr(search_mod, "SMALL_PIVOT_MAX_ROWS", 0)  # force AQE path
     eng._query_cache.clear()
-    aqe = idx.search("w1 w2", limit=10, exact_count=True)
+    aqe = idx.search("w1 w2", limit=10, exact_count=True, prune=False)
     assert list(small.hits["docid"]) == list(aqe.hits["docid"])
     assert np.array_equal(
         np.asarray(small.hits["score"], dtype=np.float32),
@@ -123,9 +125,10 @@ def test_small_pivot_gate_rank_identical_both_sides(spark, tmp_path_factory, mon
 
 
 def test_warm_term_query_is_two_jobs_and_probe_free(spark, tmp_path_factory):
-    """Round-5 job-count pin: a steady-state single-term search runs
-    exactly TWO Spark jobs — the scoring action and the two-phase
-    hydration — with no broadcast-build or dictionary jobs in between.
+    """Round-5 job-count pin: a steady-state single-term search on the
+    Spark plan (``prune=False``) runs at most TWO Spark jobs — the
+    scoring action and the two-phase hydration — with no broadcast-build
+    or dictionary jobs in between.
     The qterms/weight sides are inlined as literal CASE expressions
     (QTERM_INLINE_MAX) and the dictionary probe is served by the
     snapshot-pinned df cache after the first occurrence.  A regression
@@ -137,14 +140,14 @@ def test_warm_term_query_is_two_jobs_and_probe_free(spark, tmp_path_factory):
     eng = idx.engine
     sc = spark.sparkContext
 
-    cold_hits = idx.search("w3", limit=10).hits  # cold: probes + caches df
+    cold_hits = idx.search("w3", limit=10, prune=False).hits  # cold: caches df
     assert ("content", "w3") in eng._doc_freq_cache
 
     before = dict(eng._doc_freq_cache)
     eng._query_cache.clear()
     sc.setJobGroup("warm-w3", "warm single-term")
     try:
-        warm_hits = idx.search("w3", limit=10).hits
+        warm_hits = idx.search("w3", limit=10, prune=False).hits
     finally:
         sc.setJobGroup("warm-w3-done", "")
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("warm-w3"))
@@ -159,8 +162,10 @@ def test_warm_term_query_is_two_jobs_and_probe_free(spark, tmp_path_factory):
 
 def test_first_query_of_a_new_term_is_one_job(spark, tmp_path_factory, monkeypatch):
     """Doc frequencies come from the driver-side term dictionary, so the
-    first query of a never-seen term runs only the scoring action: one
-    Spark job for a single term, an AND query and a phrase.  After an
+    first query of a never-seen term on the Spark plan (``prune=False``;
+    the default scores these on the driver with no job, see
+    ``test_driver_scoring.py``) runs only the scoring action: one Spark
+    job for a single term, an AND query and a phrase.  After an
     upsert and reopen(), the dictionary reads only the new segment's
     postings files; the old segments' files come from the process cache.
     A first unrelated query warms the engine's plan caches."""
@@ -171,14 +176,14 @@ def test_first_query_of_a_new_term_is_one_job(spark, tmp_path_factory, monkeypat
     idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
     sc = spark.sparkContext
     eng = idx.engine
-    idx.search("w1", limit=10)
+    idx.search("w1", limit=10, prune=False)
     cases = [("w3", ["w3"]), ("w12 AND w47", ["w12", "w47"]), ('"w7 w7"', ["w7"])]
     for i, (query, terms) in enumerate(cases):
         assert not any(("content", t) in eng._doc_freq_cache for t in terms)
         group = f"newterm-{i}"
         sc.setJobGroup(group, query)
         try:
-            idx.search(query, limit=10)
+            idx.search(query, limit=10, prune=False)
         finally:
             sc.setJobGroup(group + "-done", "")
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -202,7 +207,7 @@ def test_first_query_of_a_new_term_is_one_job(spark, tmp_path_factory, monkeypat
     new = set(idx.engine.live_segments) - old
     assert len(new) == 1
     # both terms' buckets were read for the old segments above
-    idx.search("w3 w12", limit=5)
+    idx.search("w3 w12", limit=5, prune=False)
     assert idx.engine._doc_freq_cache[("content", "w3")] == eng._doc_freq_cache[
         ("content", "w3")
     ] + 1
@@ -212,15 +217,15 @@ def test_first_query_of_a_new_term_is_one_job(spark, tmp_path_factory, monkeypat
 
 def test_first_query_after_build_is_one_job(spark, tmp_path_factory):
     """The build seeds the table-schema cache with what it wrote, so the
-    very first query after ``build`` runs only its scoring action: no
-    postings schema-inference job."""
+    very first Spark-plan query after ``build`` runs only its scoring
+    action: no postings schema-inference job."""
     d = str(tmp_path_factory.mktemp("afterbuild_ix"))
     corpus = synthetic_transcripts(spark, 400, vocab_size=100)
     idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
     sc = spark.sparkContext
     sc.setJobGroup("after-build", "first query")
     try:
-        hits = idx.search("w3", limit=10).hits
+        hits = idx.search("w3", limit=10, prune=False).hits
     finally:
         sc.setJobGroup("after-build-done", "")
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("after-build"))
@@ -230,9 +235,9 @@ def test_first_query_after_build_is_one_job(spark, tmp_path_factory):
 
 def test_first_query_after_driver_micro_commit_is_one_job(spark, tmp_path_factory):
     """A driver micro-commit seeds the schema cache for the tables it
-    wrote, so a reader's first query after ``reopen()`` — before any seal
-    — runs as many jobs as the first query after a build: only its
-    scoring action, no schema inference of docs or postings."""
+    wrote, so a reader's first Spark-plan query after ``reopen()`` —
+    before any seal — runs as many jobs as the first query after a build:
+    only its scoring action, no schema inference of docs or postings."""
     from frankensearch_spark.streaming.ingest import transcript_batch_to_docs
 
     d = str(tmp_path_factory.mktemp("aftercommit_ix"))
@@ -248,7 +253,7 @@ def test_first_query_after_driver_micro_commit_is_one_job(spark, tmp_path_factor
     sc = spark.sparkContext
     sc.setJobGroup("after-commit", "first query")
     try:
-        hits = idx.search("w3", limit=10).hits
+        hits = idx.search("w3", limit=10, prune=False).hits
     finally:
         sc.setJobGroup("after-commit-done", "")
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("after-commit"))
@@ -288,11 +293,11 @@ def test_qterm_inline_path_equals_broadcast_join(spark, tmp_path_factory, monkey
     corpus = synthetic_transcripts(spark, 400, vocab_size=100)
     idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=3, num_buckets=4)
     queries = ["w1 w2", "w3", '"w3 w3"', "w12 AND w47", "w3 -w47"]
-    inlined = {q: idx.search(q, limit=10).hits for q in queries}
+    inlined = {q: idx.search(q, limit=10, prune=False).hits for q in queries}
     monkeypatch.setattr(search_mod, "QTERM_INLINE_MAX", 0)
     fresh = LexicalIndex(spark, d)  # new engine: no cached plan pieces
     for q in queries:
-        joined = fresh.search(q, limit=10).hits
+        joined = fresh.search(q, limit=10, prune=False).hits
         assert list(inlined[q]["docid"]) == list(joined["docid"]), q
         assert np.array_equal(
             np.asarray(inlined[q]["score"], dtype=np.float32),
@@ -310,7 +315,7 @@ def test_noaqe_rebind_engages_on_this_spark_version(spark, tmp_path_factory):
     idx = LexicalIndex.build_transcripts(spark, corpus, d, num_segments=2, num_buckets=4)
     eng = idx.engine
 
-    hits = idx.search("w3", limit=10).hits
+    hits = idx.search("w3", limit=10, prune=False).hits
     assert len(hits) > 0
     # the rebind actually engaged: zero fallbacks, and the cloned session
     # is live with AQE off (not the silent keep-the-AQE-plan branch)

@@ -6,6 +6,7 @@ JVM-side by a staged Hillis-Steele scan.  These tests pin:
 
 * the physical layout (schema + gap invariants),
 * decode == an independent numpy cumsum reconstruction,
+* the query engine's driver-side decode == the staged Spark scan,
 * compaction preserving the layout.
 
 Indexes with absolute entry docids are refused at open
@@ -67,6 +68,52 @@ def test_scan_decode_matches_numpy_cumsum(spark, gap_index):
         assert list(expect) == list(r["dec"])
 
 
+def test_driver_decode_identical_to_staged(spark, gap_index):
+    """The driver scoring path's vectorized decode
+    (``search._decode_blocks``: one cumsum over all blocks) must give the
+    staged Spark scan's docids, freqs and fnids for every (field, term)
+    of every postings file of a real index."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from frankensearch_spark.operators.search import _decode_blocks
+    from frankensearch_spark.sources.termdict import partition_values
+
+    d, _, _ = gap_index
+    p = spark.read.parquet(IndexStorage(spark, d).path("postings"))
+    staged = {}
+    rows = (
+        with_decoded_docids(p)
+        .select(
+            "field",
+            "term",
+            "segment_id",
+            F.explode(F.arrays_zip("dec", "entries")).alias("e"),
+        )
+        .select(
+            "field", "term", "segment_id", "e.dec", "e.entries.freq", "e.entries.fnid"
+        )
+        .collect()
+    )
+    for r in rows:
+        staged.setdefault((r[0], r[1], r[2]), []).append((r[3], r[4], r[5]))
+    got = {}
+    for path in glob.glob(os.path.join(d, "postings", "*", "*", "*.parquet")):
+        seg = partition_values(path)["segment_id"]
+        tbl = pq.read_table(path, columns=["field", "term", "first_doc", "entries"])
+        pairs = set(zip(tbl["field"].to_pylist(), tbl["term"].to_pylist()))
+        for (field, term), pl in _decode_blocks(tbl, pairs, False).items():
+            got.setdefault((field, term, seg), []).extend(
+                zip(pl.docid.tolist(), pl.freq.tolist(), pl.fnid.tolist())
+            )
+    assert len(staged) == len(got) > 0
+    assert {k: sorted(v) for k, v in staged.items()} == {
+        k: sorted(v) for k, v in got.items()
+    }
+
+
 def test_compaction_preserves_gap_layout(spark, gap_index, tmp_path):
     import shutil
 
@@ -93,42 +140,3 @@ def test_compaction_preserves_gap_layout(spark, gap_index, tmp_path):
         assert all(doc not in gone for doc, _ in hits)
         if q in ("w3", "w3 w47 w200"):
             assert hits
-
-
-def test_compact_decode_identical_to_staged(spark, gap_index):
-    """The one-expression compact scan (with_decoded_docids compact=True,
-    the interactive-query construction fast path) must be bit-identical
-    to the staged 7-pass zip_with scan on EVERY block of a real index."""
-    d, _, _ = gap_index
-    p = spark.read.parquet(IndexStorage(spark, d).path("postings"))
-    key = ["field", "term", "segment_id", "block_id"]
-    staged = with_decoded_docids(p).select(*key, "dec").orderBy(*key).collect()
-    compact = (
-        with_decoded_docids(p, compact=True)
-        .select(*key, "dec")
-        .orderBy(*key)
-        .collect()
-    )
-    assert len(staged) == len(compact) > 0
-    for a, b in zip(staged, compact):
-        assert tuple(a[k] for k in key) == tuple(b[k] for k in key)
-        assert list(a["dec"]) == list(b["dec"])
-
-
-def test_compact_decode_gate_and_rank_identity(spark, gap_index, monkeypatch):
-    """Warm queries (cached dfs under the postings bound) take the
-    compact decode; forcing the gate shut must give hash-identical
-    hits through the staged form."""
-    from frankensearch_spark.operators import search as search_mod
-
-    d, _, _ = gap_index
-    idx = LexicalIndex(spark, d)
-    queries = ["w1", "w2 w7", '"w1 w1"']
-    fast = {q: _hits(idx, q) for q in queries}
-    assert idx.engine._compact_decode_ok(
-        [("content", "w1")]
-    )  # df cached by the searches above, under the bound
-    monkeypatch.setattr(search_mod, "COMPACT_DECODE_MAX_POSTINGS", -1)
-    staged_idx = LexicalIndex(spark, d)  # fresh engine: no cached plans
-    for q in queries:
-        assert _hits(staged_idx, q) == fast[q], q

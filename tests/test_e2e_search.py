@@ -170,12 +170,12 @@ def test_exact_count_adds_no_job(built, spark):
     index, _ = built
     sc = spark.sparkContext
     # warm the dictionary probe cache so the probe job doesn't count
-    index.search("rust ownership", limit=3)
+    index.search("rust ownership", limit=3, prune=False)
 
     def jobs_for(tag, **kw):
         sc.setJobGroup(tag, tag)
         try:
-            index.search("rust ownership", **kw)
+            index.search("rust ownership", prune=False, **kw)
         finally:
             sc.setJobGroup(tag + "_done", "")
         return len(sc.statusTracker().getJobIdsForGroup(tag))

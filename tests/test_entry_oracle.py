@@ -76,3 +76,34 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["doc_id", "score", "rank"]
+
+
+def test_stale_cached_index_is_rebuilt(spark, tmp_path, monkeypatch):
+    """A cached index whose record this code cannot read (a field
+    stripped, as in a record written by earlier code under the same
+    format version) is removed and rebuilt, instead of failing every
+    entry query."""
+    import json
+
+    import pandas as pd
+
+    sf = tmp_path / "sf_tiny"
+    sf.mkdir()
+    texts = ["spark merge", "merge sort", "spark window", "table agg"] * 3
+    pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+        sf / "documents.parquet"
+    )
+    monkeypatch.setattr(entry, "_CACHE_ROOT", str(tmp_path / "cache"))
+    monkeypatch.setattr(entry, "_INDEXES", {})
+    manifest = os.path.join(entry._index(spark, str(sf)).index_dir, "manifest.json")
+    with open(manifest) as fh:
+        rec = json.load(fh)
+    del rec["tombstone_rows"]
+    with open(manifest, "w") as fh:
+        json.dump(rec, fh)
+    entry._INDEXES.clear()
+    rebuilt = entry._index(spark, str(sf))
+    with open(manifest) as fh:
+        assert "tombstone_rows" in json.load(fh)
+    hits = rebuilt.search("spark", limit=10).hits
+    assert sorted(hits["doc_id"]) == sorted(str(i) for i in range(12) if i % 4 in (0, 2))

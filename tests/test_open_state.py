@@ -497,7 +497,7 @@ def test_lazy_tombstone_fallback_semantics(spark, tmp_path_factory):
     IndexStorage.pinned_tombstones = flaky
     try:
         with pytest.raises(RuntimeError, match="transient"):
-            reader.search("w1", limit=5)
+            reader.search("w1", limit=5, prune=False)
     finally:
         IndexStorage.pinned_tombstones = orig_pt
 

@@ -3,9 +3,11 @@ driver-side hydration point-read must be invisible in results.
 
 * driver hydration ≡ the distributed point-read (same rows, same
   dtypes), including stored-field hydration;
-* a cached prepared plan returns bit-identical hits to the freshly
-  constructed plan (the result cache is cleared between runs, so the
-  scan/score/top-k really re-executes);
+* a cached prepared plan of the Spark path (``prune=False``; small
+  queries are scored on the driver by default and build no plan)
+  returns bit-identical hits to the freshly constructed plan (the result
+  cache is cleared between runs, so the scan/score/top-k really
+  re-executes);
 * reopen() drops the prepared plans with the engine (snapshot pinning).
 """
 
@@ -49,21 +51,21 @@ def test_prepared_plan_cache_reexecutes_identically(index):
     engine._plan_frame_cache.clear()
     for q in QUERIES:
         engine._query_cache.clear()
-        first = index.search(q, limit=10).hits
+        first = index.search(q, limit=10, prune=False).hits
         assert any(k == repr(q) for k in engine._plan_frame_cache), q
         engine._query_cache.clear()
-        second = index.search(q, limit=10).hits  # prepared-plan hit
+        second = index.search(q, limit=10, prune=False).hits  # prepared-plan hit
         assert first.equals(second), q
 
 
 def test_reopen_drops_prepared_plans(index):
     engine = index.engine
-    index.search("w3", limit=10)
+    index.search("w3", limit=10, prune=False)
     assert engine._plan_frame_cache
     index.reopen()
     assert index.engine._plan_frame_cache == {}
     # and the fresh engine still answers identically
-    a = index.search("w3", limit=10).hits
+    a = index.search("w3", limit=10, prune=False).hits
     index.reopen()
-    b = index.search("w3", limit=10).hits
+    b = index.search("w3", limit=10, prune=False).hits
     assert a.equals(b)
